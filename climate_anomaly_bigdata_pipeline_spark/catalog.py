@@ -8,12 +8,29 @@ rather than by path.
 
 Scans stay ``spark.read.parquet`` so Catalyst gets column pruning and
 predicate pushdown for free (reference behavior per SURVEY.md §4).
+
+Table cache: every ``Catalog`` on one ``SparkSession`` shares a table
+cache, held weakly by the session so it dies with it. It maps a table
+path to a fingerprint and the normalised DataFrame. The fingerprint is
+the sorted ``(file, size, mtime)`` listing of the path from its Hadoop
+``FileSystem`` (local, HDFS and S3 paths alike). A lookup lists the
+path again and reuses the DataFrame while the fingerprint matches; on
+a mismatch (an overwrite, or a rewrite that only moved an mtime) it
+reads the table anew and replaces the entry. A missing path drops its
+entry, and at most ``_MAX_TABLES`` entries per session are kept, the
+least recently used going first. A hit costs one listing instead of a
+file scan plus a schema-inference Spark job, so building a query over
+cached tables starts no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from collections import OrderedDict
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 #: Tables the driver testdata provides (TESTDATA.md).
@@ -61,28 +78,110 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+#: Most tables one session's cache holds (least recently used evicted).
+_MAX_TABLES = 64
+_LOCK = threading.Lock()
+
+
+class _TableCache:
+    """One session's tables: path -> (fingerprint, JVM DataFrame).
+
+    Entries keep the JVM handle, not the Python DataFrame: a DataFrame
+    refers to its session, which would keep the weak key alive forever.
+    """
+
+    def __init__(self, spark: SparkSession):
+        sc = spark.sparkContext
+        self.hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+        self.hadoop_conf = sc._jsc.hadoopConfiguration()
+        self.entries: OrderedDict = OrderedDict()
+
+    def fingerprint(self, path: str) -> tuple | None:
+        """Sorted ``(file, size, mtime)`` of every file under ``path``,
+        or None when the path does not exist. Walks with
+        ``getFileStatus``/``listStatus``: ``listFiles`` builds located
+        statuses, which on the local file system load each file's
+        owner and permissions, ten times the cost of the listing."""
+        hpath = self.hadoop_path(path)
+        fs = hpath.getFileSystem(self.hadoop_conf)
+        try:
+            pending = [fs.getFileStatus(hpath)]
+        except Py4JJavaError as exc:
+            if exc.java_exception.getClass().getSimpleName() == "FileNotFoundException":
+                return None
+            raise
+        files = []
+        while pending:
+            st = pending.pop()
+            if st.isDirectory():
+                pending.extend(fs.listStatus(st.getPath()))
+            else:
+                files.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+        return tuple(sorted(files))
+
+    def get(self, path: str, fp: tuple | None):
+        """The cached JVM DataFrame of ``path`` if read at ``fp``; a
+        stale entry is dropped."""
+        with _LOCK:
+            hit = self.entries.get(path)
+            if hit is not None and hit[0] == fp:
+                self.entries.move_to_end(path)
+                return hit[1]
+            self.entries.pop(path, None)
+        return None
+
+    def put(self, path: str, fp: tuple | None, jdf) -> None:
+        with _LOCK:
+            self.entries[path] = (fp, jdf)
+            while len(self.entries) > _MAX_TABLES:
+                self.entries.popitem(last=False)
+
+
+_CACHES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _table_cache(spark: SparkSession) -> _TableCache:
+    with _LOCK:
+        cache = _CACHES.get(spark)
+        if cache is None:
+            cache = _CACHES[spark] = _TableCache(spark)
+        return cache
+
+
 class Catalog:
     """Lazy loader for the parquet tables under one scale-factor dir.
 
     Works on any SparkSession: required semantic confs are pinned here
     (the single choke point every query goes through), so the engine
     behaves identically under a driver-provided session.
+
+    Tables come from the session's table cache (module docstring): a
+    table whose files are unchanged since the last read, by any
+    ``Catalog`` on the same session, is not read again; a changed one
+    is.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         ensure_session_confs(spark)
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            df = self.spark.read.parquet(self.path(name))
-            self._cache[name] = self._normalize(name, df)
-        return self._cache[name]
+        path = self.path(name)
+        cache = _table_cache(self.spark)
+        fp = cache.fingerprint(path)
+        jdf = cache.get(path, fp)
+        if jdf is not None:
+            return DataFrame(jdf, self.spark)
+        # A missing path raises Spark's usual error here.
+        df = self._normalize(name, self.spark.read.parquet(path))
+        cache.put(path, fp, df._jdf)
+        return df
 
     @staticmethod
     def _normalize(name: str, df: DataFrame) -> DataFrame:

@@ -10,7 +10,8 @@ lineitem revenue plays the anomaly series:
 * ``dim``      — supplier⋈nation rename-projection (P7), broadcast join.
 * ``fact``     — supplier×month grain, ``make_date`` calendar column,
                  per-supplier z-scored revenue (W1+W2).
-* ``kpis``     — yearly multi-agg + scalar supplier count (A1+A2).
+* ``kpis``     — yearly multi-agg + scalar supplier count (A1+A2),
+                 cross-joined from a one-row aggregate.
 * ``extremes`` — |z| ≥ threshold classified events (P9 + when/otherwise).
 
 Fixes over the reference (SURVEY §4): the fact plan is computed once
@@ -103,10 +104,11 @@ class GoldPipeline:
     def kpis(self) -> DataFrame:
         """Yearly KPI summary (``jobs/03_silver_to_gold.py:30-47``):
         avg/max/min/sample-stddev of monthly revenue + the scalar
-        supplier count attached as a literal column (A2 pattern)."""
+        supplier count attached by a cross join with a one-row
+        aggregate (A2 pattern), so building the plan runs no job."""
         from climate_anomaly_bigdata_pipeline_spark.functions import dec_m
 
-        supplier_count = self.c.supplier.count()
+        supplier_count = self.c.supplier.agg(F.count(F.lit(1)).alias("supplier_count"))
         x = F.col("revenue_raw")
         grouped = self.monthly().groupBy(F.col("ship_year").alias("year")).agg(
             F.sum(dec_m(x)).cast("double").alias("s1"),
@@ -119,13 +121,13 @@ class GoldPipeline:
         # bit-identical across engines (see anomaly.zscore_exact).
         s1, s2, n = F.col("s1"), F.col("s2"), F.col("n")
         std = F.sqrt(F.greatest((s2 - (s1 * s1) / n) / (n - 1), F.lit(0.0)))
-        return grouped.select(
+        return grouped.crossJoin(F.broadcast(supplier_count)).select(
             "year",
             F.round(s1 / n, 4).alias("avg_revenue"),
             "max_revenue",
             "min_revenue",
             F.when(n < 2, None).otherwise(F.round(std, 4)).alias("std_revenue"),
-            F.lit(supplier_count).alias("supplier_count"),
+            "supplier_count",
         )
 
     def extremes(self) -> DataFrame:

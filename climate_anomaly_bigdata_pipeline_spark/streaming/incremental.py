@@ -65,8 +65,10 @@ def merge_state(state: DataFrame, delta: DataFrame, key_col: str = "user_id") ->
         (F.coalesce("s_n_events", F.lit(0)) + F.coalesce("d_n_events", F.lit(0))).alias(
             "n_events"
         ),
-        (
-            F.coalesce("s_sum_value", F.lit(0.0)) + F.coalesce("d_sum_value", F.lit(0.0))
+        # NULL only when both sides are NULL (a key with no non-NULL
+        # value yet), like sum() over the union of their rows.
+        F.coalesce(
+            F.col("s_sum_value") + F.col("d_sum_value"), "s_sum_value", "d_sum_value"
         ).alias("sum_value"),
         F.least(
             F.coalesce("s_min_value", F.col("d_min_value")),

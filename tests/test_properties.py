@@ -310,3 +310,44 @@ def test_kcore_matches_brute_peeling_on_random_graphs(spark, edges, k):
             changed = True
     want = {(n, len(ns)) for n, ns in adj.items()}
     assert got == want
+
+
+# ---- incremental gold ---------------------------------------------------------
+
+# A micro-batch: (user_id, value) rows over few keys, so a key's values
+# are often all NULL; small whole numbers keep every sum exact.
+_batch = st.lists(
+    st.tuples(
+        st.integers(0, 3),
+        st.one_of(st.none(), st.integers(-50, 50).map(float)),
+    ),
+    max_size=6,
+)
+
+
+@given(
+    batches=st.lists(st.tuples(_batch, st.booleans()), min_size=1, max_size=4)
+)
+@settings(**_SETTINGS)
+def test_incremental_sink_matches_batch_groupby(spark, tmp_path, batches):
+    """For ANY micro-batch sequence (empty batches, all-NULL keys, a
+    batch replayed under its own id) the folded state equals one batch
+    ``groupBy`` over every row delivered once."""
+    import tempfile
+
+    from climate_anomaly_bigdata_pipeline_spark.streaming import incremental as INC
+    from tests.oracle_utils import compare
+
+    schema = "user_id long, value double"
+    root = tempfile.mkdtemp(dir=tmp_path)
+    sink = INC.make_upsert_sink(spark, root, "user_id")
+    for batch_id, (rows, replay) in enumerate(batches):
+        df = spark.createDataFrame(rows, schema)
+        sink(df, batch_id)
+        if replay:
+            sink(df, batch_id)
+    got = INC.read_gold_state(spark, root).toPandas()
+    every_row = [r for rows, _ in batches for r in rows]
+    want = INC.batch_partial(spark.createDataFrame(every_row, schema)).toPandas()
+    ok, msg = compare(got, want)
+    assert ok, msg
