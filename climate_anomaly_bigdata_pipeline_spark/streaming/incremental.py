@@ -4,20 +4,22 @@ The reference recomputes its gold outputs from scratch per run
 (``reference/jobs/03_silver_to_gold.py`` rereads the full silver layer);
 the streaming-native shape is CONTINUOUS maintenance: each micro-batch
 folds only its delta into the running per-key aggregate. Count/sum/min/
-max are commutative monoids, so merging a batch-local partial with the
-stored state is exact — the same map-side-combine algebra Spark's own
+max are commutative monoids, so the merge is the aggregate that builds
+a partial, run over the stored state ∪ the batch's rows as one-event
+states (one shuffle, no join) — the map-side-combine algebra Spark's own
 partial aggregation uses, applied across time instead of across tasks.
 
 Storage commit protocol: plain parquet has no transactional MERGE, so
 state lands in versioned subdirectories (``v{batch_id}``) with a tiny
 ``_LATEST`` pointer file written last — readers resolve the pointer,
 writers never overwrite a directory a reader may be scanning (the
-poor-man's lakehouse commit). On a real deployment swap the sink body
-for ``MERGE INTO`` on Delta/Iceberg/Hudi and keep the same foreachBatch
-skeleton; the upsert algebra and the exactly-once batch_id contract are
-unchanged (Spark replays a failed batch with the same batch_id, and the
-pointer write makes the replay idempotent: re-writing v{n} then
-re-pointing is a no-op).
+poor-man's lakehouse commit); after each flip the sink vacuums old
+versions, so the directory stays bounded. On a real deployment swap the
+sink body for ``MERGE INTO`` on Delta/Iceberg/Hudi and keep the same
+foreachBatch skeleton; the upsert algebra and the exactly-once batch_id
+contract are unchanged (Spark replays a failed batch with the same
+batch_id, and the pointer write makes the replay idempotent: re-writing
+v{n} then re-pointing is a no-op).
 """
 
 from __future__ import annotations
@@ -27,8 +29,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-STATE_COLS = ("n_events", "sum_value", "min_value", "max_value")
+from pyspark.sql import types as T
 
 
 def _latest_path(root: str) -> str | None:
@@ -40,45 +41,49 @@ def _latest_path(root: str) -> str | None:
     return os.path.join(root, v) if v else None
 
 
+def _state_schema(df: DataFrame, key_col: str) -> T.StructType:
+    """The state a batch folds into: its key, the event count, and the
+    ``value`` metrics typed as Spark's ``sum``/``min``/``max`` type them
+    (worked out here, because asking Spark costs an analysis)."""
+    value = df.schema["value"].dataType
+    if isinstance(value, T.DecimalType):
+        sum_type = T.DecimalType(min(value.precision + 10, 38), value.scale)
+    else:
+        sum_type = T.LongType() if isinstance(value, T.IntegralType) else T.DoubleType()
+    return T.StructType([
+        df.schema[key_col],
+        T.StructField("n_events", T.LongType()),
+        T.StructField("sum_value", sum_type),
+        T.StructField("min_value", value),
+        T.StructField("max_value", value),
+    ])
+
+
+def fold_batch(
+    state: DataFrame | None, batch_df: DataFrame, key_col: str = "user_id"
+) -> DataFrame:
+    """Fold a batch's rows into ``state`` (``None`` before the first
+    batch): one ``groupBy`` over state ∪ the rows as one-event states,
+    merging each metric with its own aggregate. ``sum()`` keeps an
+    all-NULL key NULL."""
+    sum_type = _state_schema(batch_df, key_col)["sum_value"].dataType.simpleString()
+    rows = batch_df.selectExpr(
+        key_col, "1L AS n_events", f"CAST(value AS {sum_type}) AS sum_value",
+        "value AS min_value", "value AS max_value",
+    )
+    if state is not None:
+        rows = state.unionByName(rows)
+    return rows.groupBy(key_col).agg(
+        F.expr("sum(n_events) AS n_events"),
+        F.expr(f"CAST(sum(sum_value) AS {sum_type}) AS sum_value"),
+        F.expr("min(min_value) AS min_value"),
+        F.expr("max(max_value) AS max_value"),
+    )
+
+
 def batch_partial(df: DataFrame, key_col: str = "user_id") -> DataFrame:
     """Batch-local partial aggregate (the mergeable monoid state)."""
-    return df.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-
-
-def merge_state(state: DataFrame, delta: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Fold a delta partial into stored state: full-outer join on the
-    key, monoid-merge each metric. Exact for count/sum/min/max."""
-    s = state.select(
-        key_col, *[F.col(c).alias(f"s_{c}") for c in STATE_COLS]
-    )
-    d = delta.select(
-        key_col, *[F.col(c).alias(f"d_{c}") for c in STATE_COLS]
-    )
-    j = s.join(d, key_col, "full_outer")
-    return j.select(
-        key_col,
-        (F.coalesce("s_n_events", F.lit(0)) + F.coalesce("d_n_events", F.lit(0))).alias(
-            "n_events"
-        ),
-        # NULL only when both sides are NULL (a key with no non-NULL
-        # value yet), like sum() over the union of their rows.
-        F.coalesce(
-            F.col("s_sum_value") + F.col("d_sum_value"), "s_sum_value", "d_sum_value"
-        ).alias("sum_value"),
-        F.least(
-            F.coalesce("s_min_value", F.col("d_min_value")),
-            F.coalesce("d_min_value", F.col("s_min_value")),
-        ).alias("min_value"),
-        F.greatest(
-            F.coalesce("s_max_value", F.col("d_max_value")),
-            F.coalesce("d_max_value", F.col("s_max_value")),
-        ).alias("max_value"),
-    )
+    return fold_batch(None, df, key_col)
 
 
 def make_upsert_sink(
@@ -95,17 +100,17 @@ def make_upsert_sink(
             # delta is already folded in — applying it again would
             # double-count. Skipping makes the replay idempotent.
             return
-        delta = batch_partial(batch_df, key_col)
+        state = None
         if prev is not None:
-            merged = merge_state(spark.read.parquet(prev), delta, key_col)
-        else:
-            merged = delta
+            state = spark.read.schema(_state_schema(batch_df, key_col)).parquet(prev)
         vdir = f"v{batch_id}"
+        merged = fold_batch(state, batch_df, key_col)
         merged.write.mode("overwrite").parquet(os.path.join(root, vdir))
         tmp = os.path.join(root, "_LATEST.tmp")
         with open(tmp, "w") as f:
             f.write(vdir)
         os.replace(tmp, os.path.join(root, "_LATEST"))  # atomic pointer flip
+        vacuum_versions(root)
 
     return sink
 
@@ -176,23 +181,17 @@ def vacuum_versions(root: str, keep: int = 3) -> list[str]:
     snapshot directories except the ``keep`` most recent ones and the
     one ``_LATEST`` points to (never the live version, whatever its
     age). Returns the removed directory names. The lakehouse VACUUM
-    analogue for the poor-man's commit protocol above — without it the
-    state dir grows one full snapshot per micro-batch."""
+    analogue for the poor-man's commit protocol above; the upsert sink
+    runs it after every pointer flip."""
     import re
     import shutil
 
-    live = None
-    ptr = os.path.join(root, "_LATEST")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            live = f.read().strip()
+    live = os.path.basename(_latest_path(root) or "")
     versions = sorted(
         (d for d in os.listdir(root) if re.fullmatch(r"v\d+", d)),
         key=lambda d: int(d[1:]),
     )
-    doomed = [d for d in versions[:-keep] if d != live] if keep else [
-        d for d in versions if d != live
-    ]
+    doomed = [d for d in (versions[:-keep] if keep else versions) if d != live]
     for d in doomed:
         shutil.rmtree(os.path.join(root, d))
     return doomed

@@ -57,3 +57,20 @@ def test_replayed_batch_is_idempotent(spark, sf_dir, tmp_path):
     sink(ev, 0)  # replay same batch_id: overwrites v0, re-points — same state
     second = {tuple(r) for r in INC.read_gold_state(spark, root).collect()}
     assert first == second
+
+
+def test_fold_is_one_aggregate_over_state_and_rows(spark, tmp_path):
+    """A non-first-batch fold is one ``groupBy`` over state ∪ the
+    batch's rows: exactly one hash exchange and no join in its plan."""
+    schema = "user_id long, value double"
+    root = str(tmp_path / "v0")
+    INC.batch_partial(
+        spark.createDataFrame([(1, 1.0), (2, None)], schema)
+    ).write.parquet(root)
+    batch = spark.createDataFrame([(1, 2.0), (3, 4.0)], schema)
+    folded = INC.fold_batch(spark.read.parquet(root), batch, "user_id")
+    plan = folded._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan and "Cartesian" not in plan, plan
+    got = {tuple(r) for r in folded.collect()}
+    assert got == {(1, 2, 3.0, 1.0, 2.0), (2, 1, None, None, None), (3, 1, 4.0, 4.0, 4.0)}

@@ -131,3 +131,59 @@ def test_medallion_end_to_end(spark, raw_dir, tmp_path_factory):
     assert len(csvs) == 1  # coalesce(1) single file
     header = open(csvs[0]).readline().strip().split(",")
     assert "avg_global_anomaly" in header
+
+
+def _small_gold(spark):
+    from pyspark.sql import functions as F
+
+    return {
+        "kpis": spark.range(6).withColumn("year", 2000 + F.col("id") % 3),
+        "dim": spark.range(4).withColumn("name", F.concat(F.lit("s"), "id")),
+    }
+
+
+def _probe_job(spark, group: str) -> list[int]:
+    """Run one tiny job under ``group``; return that group's job ids."""
+    spark.sparkContext.setJobGroup(group, group)
+    spark.range(1).collect()
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_write_gold_jobs_keep_callers_job_group(spark, tmp_path):
+    """Every job of a (concurrent) gold write runs in the caller's job
+    group: the jobs between two probes are exactly the group's jobs."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    group = f"write-gold-{tag}"
+    try:
+        before = max(_probe_job(spark, f"before-{tag}"))
+        sc.setJobGroup(group, "write_gold under test")
+        M.write_gold(_small_gold(spark), M.MedallionPaths(str(tmp_path)))
+        after = min(_probe_job(spark, f"after-{tag}"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs
+    assert jobs == set(range(before + 1, after))
+
+
+def test_write_gold_reraises_a_failed_output(spark, tmp_path):
+    """A failing output raises from ``write_gold`` instead of dying in
+    its thread; the other outputs are still written."""
+    from pyspark.sql import functions as F
+
+    outputs = _small_gold(spark)
+    outputs["broken"] = spark.range(3).select(
+        F.when(F.col("id") == 1, F.raise_error(F.lit("gold write boom")))
+        .otherwise(F.col("id"))
+        .alias("x")
+    )
+    paths = M.MedallionPaths(str(tmp_path))
+    with pytest.raises(Exception, match="gold write boom"):
+        M.write_gold(outputs, paths)
+    for name in ("kpis", "dim", "kpis_csv", "dim_csv"):
+        assert os.path.exists(os.path.join(paths.gold, name, "_SUCCESS"))

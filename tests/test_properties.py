@@ -6,6 +6,7 @@ with pandas, dedup idempotence."""
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -319,35 +320,59 @@ def test_kcore_matches_brute_peeling_on_random_graphs(spark, edges, k):
 _batch = st.lists(
     st.tuples(
         st.integers(0, 3),
-        st.one_of(st.none(), st.integers(-50, 50).map(float)),
+        st.one_of(st.none(), st.integers(-50, 50)),
     ),
     max_size=6,
 )
 
 
 @given(
-    batches=st.lists(st.tuples(_batch, st.booleans()), min_size=1, max_size=4)
+    batches=st.lists(st.tuples(_batch, st.booleans()), min_size=1, max_size=5),
+    value_type=st.sampled_from(["double", "bigint"]),
 )
 @settings(**_SETTINGS)
-def test_incremental_sink_matches_batch_groupby(spark, tmp_path, batches):
+def test_incremental_sink_matches_batch_groupby(spark, tmp_path, batches, value_type):
     """For ANY micro-batch sequence (empty batches, all-NULL keys, a
-    batch replayed under its own id) the folded state equals one batch
-    ``groupBy`` over every row delivered once."""
+    batch replayed under its own id, double or bigint values) the
+    folded state equals one batch ``groupBy`` over every row delivered
+    once, and the state directory keeps at most ``keep`` old versions
+    besides the live one."""
+    import inspect
     import tempfile
+
+    from pyspark.sql import functions as F
 
     from climate_anomaly_bigdata_pipeline_spark.streaming import incremental as INC
     from tests.oracle_utils import compare
 
-    schema = "user_id long, value double"
+    keep = inspect.signature(INC.vacuum_versions).parameters["keep"].default
+    cast = float if value_type == "double" else int
+    typed = [([(k, None if v is None else cast(v)) for k, v in rows], replay)
+             for rows, replay in batches]
+    schema = f"user_id long, value {value_type}"
     root = tempfile.mkdtemp(dir=tmp_path)
     sink = INC.make_upsert_sink(spark, root, "user_id")
-    for batch_id, (rows, replay) in enumerate(batches):
+    for batch_id, (rows, replay) in enumerate(typed):
         df = spark.createDataFrame(rows, schema)
         sink(df, batch_id)
         if replay:
             sink(df, batch_id)
+        with open(os.path.join(root, "_LATEST")) as f:
+            live = f.read().strip()
+        old = [d for d in os.listdir(root) if d.startswith("v") and d != live]
+        assert len(old) <= keep, old
     got = INC.read_gold_state(spark, root).toPandas()
-    every_row = [r for rows, _ in batches for r in rows]
-    want = INC.batch_partial(spark.createDataFrame(every_row, schema)).toPandas()
+    every_row = [r for rows, _ in typed for r in rows]
+    want = (
+        spark.createDataFrame(every_row, schema)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("sum_value"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .toPandas()
+    )
     ok, msg = compare(got, want)
     assert ok, msg
