@@ -171,6 +171,12 @@ class Catalog:
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")
 
+    def fingerprint(self, name: str) -> tuple | None:
+        """The ``(file, size, mtime)`` listing of table ``name`` that
+        keys the table cache, or None when it is missing: a key for
+        anything derived from the table's current contents."""
+        return _table_cache(self.spark).fingerprint(self.path(name))
+
     def table(self, name: str) -> DataFrame:
         path = self.path(name)
         cache = _table_cache(self.spark)

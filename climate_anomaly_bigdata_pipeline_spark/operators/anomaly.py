@@ -29,6 +29,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from climate_anomaly_bigdata_pipeline_spark.functions import (
+    MOMENT,
+    ident,
+    sample_std_sql,
+    sql_lit,
+)
+
 
 def with_partition_stats(
     df: DataFrame,
@@ -132,55 +139,45 @@ def zscore_exact(
     named ``__s1`` etc. can't collide or be silently dropped.
     """
     import hashlib
-    from functools import reduce
-
-    from climate_anomaly_bigdata_pipeline_spark.functions import dec_m
 
     tag = hashlib.md5(
         ("\x00".join([value_col, *partition_cols])).encode()
     ).hexdigest()[:8]
     c_s1, c_s2, c_n = f"__s1_{tag}", f"__s2_{tag}", f"__n_{tag}"
-
-    def _key(c: str) -> str:
-        return f"__k_{tag}_{c}"
+    keys = [f"__k_{tag}_{c}" for c in partition_cols]
 
     hint = F.broadcast if broadcast_hint else (lambda d: d)
-    x = F.col(value_col)
+    x = ident(value_col)
+    m = f"CAST({x} AS {MOMENT})"
     aggs = [
-        F.sum(dec_m(x)).alias(c_s1),
-        F.sum(dec_m(x) * dec_m(x)).alias(c_s2),
-        F.count(x).alias(c_n),
+        F.expr(f"sum({m}) AS {c_s1}"),
+        F.expr(f"sum({m} * {m}) AS {c_s2}"),
+        F.expr(f"count({x}) AS {c_n}"),
     ]
     if partition_cols:
-        grp = df.groupBy(*partition_cols).agg(*aggs)
-        keyed = grp.select(
-            *[F.col(c).alias(_key(c)) for c in partition_cols],
-            c_s1,
-            c_s2,
-            c_n,
+        keyed = (
+            df.groupBy(*partition_cols)
+            .agg(*aggs)
+            .selectExpr(
+                *[f"{ident(c)} AS {ident(k)}" for c, k in zip(partition_cols, keys)],
+                c_s1,
+                c_s2,
+                c_n,
+            )
         )
-        cond = reduce(
-            lambda a, b: a & b,
-            [
-                df[c].eqNullSafe(F.col(_key(c)))
-                for c in partition_cols
-            ],
+        cond = " AND ".join(
+            f"{ident(c)} <=> {ident(k)}" for c, k in zip(partition_cols, keys)
         )
-        joined = df.join(hint(keyed), cond).drop(
-            *[_key(c) for c in partition_cols]
-        )
+        joined = df.join(hint(keyed), F.expr(cond)).drop(*keys)
     else:
         joined = df.crossJoin(hint(df.agg(*aggs)))
-    s1 = F.col(c_s1).cast("double")
-    s2 = F.col(c_s2).cast("double")
-    n = F.col(c_n).cast("double")
-    mean = s1 / n
-    var = (s2 - (s1 * s1) / n) / (n - F.lit(1.0))
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))
-    z = F.when((n < 2) | (std == 0), F.lit(0.0)).otherwise(
-        F.round((x - mean) / std, scale)
+    s1, s2, n = (f"CAST({c} AS DOUBLE)" for c in (c_s1, c_s2, c_n))
+    std = sample_std_sql(s1, s2, n)
+    z = (
+        f"CASE WHEN {n} < 2 OR {std} = 0 THEN 0.0D"
+        f" ELSE round(({x} - {s1} / {n}) / {std}, {int(scale)}) END"
     )
-    return joined.withColumn(z_name, z).drop(c_s1, c_s2, c_n)
+    return joined.withColumn(z_name, F.expr(z)).drop(c_s1, c_s2, c_n)
 
 
 def classify_extremes(
@@ -196,9 +193,13 @@ def classify_extremes(
     Generalizes ``jobs/03_silver_to_gold.py:148-153`` (SQL-string
     predicate ``abs(z_score) >= 2.5`` + when/otherwise HEAT/COLD labels).
     """
-    return df.filter(F.abs(F.col(z_col)) >= F.lit(threshold)).withColumn(
+    z = ident(z_col)
+    return df.filter(F.expr(f"abs({z}) >= {sql_lit(threshold)}")).withColumn(
         label_name,
-        F.when(F.col(z_col) > 0, F.lit(high_label)).otherwise(F.lit(low_label)),
+        F.expr(
+            f"CASE WHEN {z} > 0 THEN {sql_lit(high_label)}"
+            f" ELSE {sql_lit(low_label)} END"
+        ),
     )
 
 

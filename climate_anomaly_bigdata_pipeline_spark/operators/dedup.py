@@ -30,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from climate_anomaly_bigdata_pipeline_spark.functions import ident
 from climate_anomaly_bigdata_pipeline_spark.operators.text import tokens_expr
 
 
@@ -673,23 +674,22 @@ def simhash(
     Near-duplicates land on equal (or small-Hamming-distance) values.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(parallelism, id_col).select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("tok")
+    # tokens_expr and md5_hash32(tok, 0), written as SQL text.
+    toks = df.repartition(parallelism, id_col).selectExpr(
+        ident(id_col),
+        rf"explode(split(lower(trim({ident(text_col)})), '\\s+')) AS tok",
     )
-    th = md5_hash32(F.col("tok"), 0)
+    th = "CAST(conv(substring(md5(concat('0:', tok)), 1, 8), 16, 10) AS BIGINT)"
     sums = toks.groupBy(id_col).agg(
         *[
-            F.sum(
-                (F.shiftright(th, j).bitwiseAND(F.lit(1)) * 2 - 1)
-            ).alias(f"s_{j}")
+            F.expr(f"sum((shiftright({th}, {j}) & 1) * 2 - 1) AS s_{j}")
             for j in range(bits)
         ]
     )
-    sim = None
-    for j in range(bits):
-        term = F.when(F.col(f"s_{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return sums.select(F.col(id_col), sim.alias("simhash"))
+    sim = " + ".join(
+        f"CASE WHEN s_{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(bits)
+    )
+    return sums.selectExpr(ident(id_col), f"{sim} AS simhash")
 
 
 # Edge-count ceiling for the driver-local CC fastpath (see

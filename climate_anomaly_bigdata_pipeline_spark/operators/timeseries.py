@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from climate_anomaly_bigdata_pipeline_spark.functions import ident
+
 
 def rolling_mean(
     df: DataFrame,
@@ -273,17 +275,17 @@ def sessionize(
     user). Adds ``session_id`` (1-based per user, deterministic given
     a tiebreak column for equal timestamps).
     """
-    order = [F.col(ts_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    w_order = Window.partitionBy(user_col).orderBy(*order)
+    ts = ident(ts_col)
+    order = ts + (f", {ident(tiebreak_col)}" if tiebreak_col else "")
+    w_order = f"PARTITION BY {ident(user_col)} ORDER BY {order}"
     gap_us = int(gap_minutes * 60 * 1_000_000)
-    prev_ts = F.lag(ts_col).over(w_order)
-    is_new = F.when(
-        prev_ts.isNull()
-        | ((F.unix_micros(F.col(ts_col)) - F.unix_micros(prev_ts)) > gap_us),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    w_running = w_order.rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn("session_id", F.sum(is_new).over(w_running))
+    prev_ts = f"lag({ts}) OVER ({w_order})"
+    is_new = (
+        f"CASE WHEN {prev_ts} IS NULL"
+        f" OR unix_micros({ts}) - unix_micros({prev_ts}) > {gap_us} THEN 1 ELSE 0 END"
+    )
+    w_running = f"{w_order} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    return df.withColumn("session_id", F.expr(f"sum({is_new}) OVER ({w_running})"))
 
 
 def funnel_stages(

@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
+from climate_anomaly_bigdata_pipeline_spark.functions import (
+    MOMENT,
+    revenue_sql,
+    sample_std_sql,
+)
 from climate_anomaly_bigdata_pipeline_spark.operators import anomaly as A
 from climate_anomaly_bigdata_pipeline_spark.operators import relational as R
 
@@ -59,24 +64,23 @@ class GoldPipeline:
         order-independent, so downstream rounding never flips on
         accumulation order (see ``functions.dec``).
         """
-        from climate_anomaly_bigdata_pipeline_spark.functions import revenue_expr
-
-        li = self.c.lineitem.select(
+        rev = revenue_sql()
+        li = self.c.lineitem.selectExpr(
             "l_suppkey", "l_shipdate", "l_quantity", "l_extendedprice", "l_discount"
         )
         return li.groupBy(
             "l_suppkey",
-            F.year("l_shipdate").alias("ship_year"),
-            F.month("l_shipdate").alias("ship_month"),
+            F.expr("year(l_shipdate) AS ship_year"),
+            F.expr("month(l_shipdate) AS ship_month"),
         ).agg(
-            F.sum(revenue_expr()).cast("double").alias("revenue_raw"),
+            F.expr(f"CAST(sum({rev}) AS DOUBLE) AS revenue_raw"),
             # Round the DECIMAL, then cast: Spark rounds doubles via their
             # shortest string repr (HALF_UP), DuckDB rounds the binary —
             # they disagree on values like x.xx5. Decimal rounding is
             # identical in both.
-            F.round(F.sum(revenue_expr()), 2).cast("double").alias("revenue"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("record_count"),
+            F.expr(f"CAST(round(sum({rev}), 2) AS DOUBLE) AS revenue"),
+            F.expr("round(avg(l_quantity), 4) AS avg_qty"),
+            F.expr("count(1) AS record_count"),
         )
 
     def fact(self) -> DataFrame:
@@ -106,27 +110,24 @@ class GoldPipeline:
         avg/max/min/sample-stddev of monthly revenue + the scalar
         supplier count attached by a cross join with a one-row
         aggregate (A2 pattern), so building the plan runs no job."""
-        from climate_anomaly_bigdata_pipeline_spark.functions import dec_m
-
-        supplier_count = self.c.supplier.agg(F.count(F.lit(1)).alias("supplier_count"))
-        x = F.col("revenue_raw")
-        grouped = self.monthly().groupBy(F.col("ship_year").alias("year")).agg(
-            F.sum(dec_m(x)).cast("double").alias("s1"),
-            F.sum(dec_m(x) * dec_m(x)).cast("double").alias("s2"),
-            F.count(x).cast("double").alias("n"),
-            F.round(F.max(x), 4).alias("max_revenue"),
-            F.round(F.min(x), 4).alias("min_revenue"),
+        supplier_count = self.c.supplier.agg(F.expr("count(1) AS supplier_count"))
+        m = f"CAST(revenue_raw AS {MOMENT})"
+        grouped = self.monthly().groupBy(F.expr("ship_year AS year")).agg(
+            F.expr(f"CAST(sum({m}) AS DOUBLE) AS s1"),
+            F.expr(f"CAST(sum({m} * {m}) AS DOUBLE) AS s2"),
+            F.expr("CAST(count(revenue_raw) AS DOUBLE) AS n"),
+            F.expr("round(max(revenue_raw), 4) AS max_revenue"),
+            F.expr("round(min(revenue_raw), 4) AS min_revenue"),
         )
         # mean/std from exact decimal moments with a fixed op order —
         # bit-identical across engines (see anomaly.zscore_exact).
-        s1, s2, n = F.col("s1"), F.col("s2"), F.col("n")
-        std = F.sqrt(F.greatest((s2 - (s1 * s1) / n) / (n - 1), F.lit(0.0)))
-        return grouped.crossJoin(F.broadcast(supplier_count)).select(
+        std = sample_std_sql("s1", "s2", "n")
+        return grouped.crossJoin(F.broadcast(supplier_count)).selectExpr(
             "year",
-            F.round(s1 / n, 4).alias("avg_revenue"),
+            "round(s1 / n, 4) AS avg_revenue",
             "max_revenue",
             "min_revenue",
-            F.when(n < 2, None).otherwise(F.round(std, 4)).alias("std_revenue"),
+            f"CASE WHEN n < 2 THEN NULL ELSE round({std}, 4) END AS std_revenue",
             "supplier_count",
         )
 

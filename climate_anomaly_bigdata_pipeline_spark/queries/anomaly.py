@@ -89,7 +89,7 @@ def zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle (hash by the partition keys); only 4 columns reach the
     window, so the parquet scan prunes the rest.
     """
-    ev = Catalog(spark, sf_dir).events.select(
+    ev = Catalog(spark, sf_dir).events.selectExpr(
         "event_id", "user_id", "event_type", "value"
     )
     scored = A.zscore_exact(ev, "value", ["user_id", "event_type"])

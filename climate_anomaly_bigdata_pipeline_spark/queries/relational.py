@@ -58,30 +58,28 @@ def groupby_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the scalar station-count analog as count distinct (A2).
     Moments from exact sums; money in exact decimal."""
     li = Catalog(spark, sf_dir).lineitem
-    q = F.col("l_quantity")
     g = R.multi_agg(
         li,
         ["l_returnflag", "l_linestatus"],
         [
-            F.sum(q).alias("s1"),
-            F.sum(q * q).alias("s2"),
-            F.count(q).cast("double").alias("n"),
-            F.round(F.max(q), 4).alias("max_qty"),
-            F.round(F.min(q), 4).alias("min_qty"),
-            F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("l_suppkey").alias("n_suppliers"),
+            F.expr("sum(l_quantity) AS s1"),
+            F.expr("sum(l_quantity * l_quantity) AS s2"),
+            F.expr("CAST(count(l_quantity) AS DOUBLE) AS n"),
+            F.expr("round(max(l_quantity), 4) AS max_qty"),
+            F.expr("round(min(l_quantity), 4) AS min_qty"),
+            F.expr(f"CAST(round(sum({FN.revenue_sql()}), 2) AS DOUBLE) AS revenue"),
+            F.expr("count(1) AS n_rows"),
+            F.expr("count(DISTINCT l_suppkey) AS n_suppliers"),
         ],
     )
-    s1, s2, n = F.col("s1"), F.col("s2"), F.col("n")
-    std = F.sqrt(F.greatest((s2 - (s1 * s1) / n) / (n - 1), F.lit(0.0)))
-    return g.select(
+    std = FN.sample_std_sql("s1", "s2", "n")
+    return g.selectExpr(
         "l_returnflag",
         "l_linestatus",
-        F.round(s1 / n, 4).alias("avg_qty"),
+        "round(s1 / n, 4) AS avg_qty",
         "max_qty",
         "min_qty",
-        F.when(n < 2, None).otherwise(F.round(std, 4)).alias("std_qty"),
+        f"CASE WHEN n < 2 THEN NULL ELSE round({std}, 4) END AS std_qty",
         "revenue",
         "n_rows",
         "n_suppliers",
@@ -114,21 +112,20 @@ def join_revenue_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⋈orders equi join + the final partial-aggregated groupBy.
     """
     c = Catalog(spark, sf_dir)
-    li = c.lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
-    od = c.orders.select("o_orderkey", "o_custkey", "o_orderdate")
-    cu = c.customer.select("c_custkey", "c_nationkey")
-    na = c.nation.select("n_nationkey", "n_name")
+    li = c.lineitem.selectExpr("l_orderkey", "l_extendedprice", "l_discount")
+    od = c.orders.selectExpr("o_orderkey", "o_custkey", "o_orderdate")
+    cu = c.customer.selectExpr("c_custkey", "c_nationkey")
+    na = c.nation.selectExpr("n_nationkey", "n_name")
     joined = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
+        li.join(od, F.expr("l_orderkey = o_orderkey"))
+        .join(F.broadcast(cu), F.expr("o_custkey = c_custkey"))
+        .join(F.broadcast(na), F.expr("c_nationkey = n_nationkey"))
     )
     return joined.groupBy(
-        F.col("n_name").alias("nation"),
-        F.year("o_orderdate").alias("order_year"),
+        F.expr("n_name AS nation"), F.expr("year(o_orderdate) AS order_year")
     ).agg(
-        F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
+        F.expr(f"CAST(round(sum({FN.revenue_sql()}), 2) AS DOUBLE) AS revenue"),
+        F.expr("count(1) AS n_items"),
     )
 
 

@@ -5,6 +5,8 @@ deterministic hyperplane literals)."""
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -105,17 +107,39 @@ _TRAIN_SAMPLE_MOD = 4
 # statistic: floor(sqrt(count(embeddings))) clamped to [4, 4096]
 # (Python mirrors the SQL's floor(sqrt(...)) — for any corpus below
 # 2^52 rows the double sqrt is exact enough that floor == isqrt). The
-# count is keyed per sf_dir, and the trained-codebook artifact path
-# embeds nc, so every sf trains (once, offline) its own codebook.
+# count is taken when a corpus' codebook is built (``_corpus_memo``),
+# and the trained-codebook artifact path embeds nc, so every corpus
+# trains (once, offline) its own codebook.
 _NC_MIN, _NC_MAX = 4, 4096
-_NCENT: dict[str, int] = {}
 
 
 def _n_centroids(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _NCENT:
-        n = Catalog(spark, sf_dir).embeddings.count()
-        _NCENT[sf_dir] = max(_NC_MIN, min(_NC_MAX, int(math.floor(math.sqrt(n)))))
-    return _NCENT[sf_dir]
+    n = Catalog(spark, sf_dir).embeddings.count()
+    return max(_NC_MIN, min(_NC_MAX, int(math.floor(math.sqrt(n)))))
+
+
+#: Corpora whose codebooks one process keeps in memory, per memo (least
+#: recently used evicted).
+_MAX_CORPORA = 8
+_MEMO_LOCK = threading.Lock()
+
+
+def _corpus_memo(memo: OrderedDict, spark: SparkSession, sf_dir: str, build):
+    """``build()`` for the corpus under ``sf_dir``, memoized in ``memo``
+    under the embeddings table's ``(file, size, mtime)`` listing (the
+    key of the catalog's table cache), so a corpus rewritten in place
+    is built anew; ``memo`` keeps at most ``_MAX_CORPORA`` entries."""
+    key = Catalog(spark, sf_dir).fingerprint("embeddings")
+    with _MEMO_LOCK:
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    value = build()
+    with _MEMO_LOCK:
+        memo[key] = value
+        while len(memo) > _MAX_CORPORA:
+            memo.popitem(last=False)
+    return value
 
 
 def _lloyd_ctes(n_iters: int) -> str:
@@ -296,7 +320,7 @@ ORDER BY query_id, rank
 # parquet/table written by an offline training job), not something a
 # query retrains — per-query Lloyd training doubled knn_join_ivf's
 # latency in round 4. The artifact store is two-level: a per-corpus
-# process memo (same bench/driver run) backed by a Parquet file
+# process memo (same bench/driver run; ``_corpus_memo``) backed by a Parquet file
 # (``sources/artifacts.py``) so LATER SESSIONS reload the trained
 # codebook with zero training jobs — the honest 100 TB serving story
 # (train offline once, serve everywhere). The training recipe itself
@@ -304,11 +328,11 @@ ORDER BY query_id, rank
 # serving queries' oracles still rerun the training CTEs, which is
 # exactly the determinism claim: offline-trained, disk-reloaded and
 # oracle-retrained codebooks are bit-identical.
-_CODEBOOKS: dict[str, list[tuple[int, list[float]]]] = {}
+_CODEBOOKS: OrderedDict = OrderedDict()
 
 
 def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
-    if sf_dir not in _CODEBOOKS:
+    def build() -> list[tuple[int, list[float]]]:
         nc = _n_centroids(spark, sf_dir)
         path = ART.ivf_path(sf_dir, nc, _TRAIN_ITERS, _TRAIN_SAMPLE_MOD)
         book = ART.load_ivf(path)
@@ -318,8 +342,9 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[floa
                 emb, nc, _TRAIN_ITERS, sample_mod=_TRAIN_SAMPLE_MOD
             )
             ART.save_ivf(book, path)
-        _CODEBOOKS[sf_dir] = book
-    return _CODEBOOKS[sf_dir]
+        return book
+
+    return _corpus_memo(_CODEBOOKS, spark, sf_dir, build)
 
 
 _CODEBOOK_ORACLE = f"""
@@ -696,11 +721,11 @@ _PQ_K = 16
 _PQ_ITERS = 1
 _PQ_DSUB = _DIM // _PQ_M
 
-_PQ_BOOKS: dict[str, "SIM.PQCodebooks"] = {}
+_PQ_BOOKS: OrderedDict = OrderedDict()
 
 
 def _pq_books(spark: SparkSession, sf_dir: str) -> "SIM.PQCodebooks":
-    if sf_dir not in _PQ_BOOKS:
+    def build() -> "SIM.PQCodebooks":
         path = ART.pq_path(sf_dir, _PQ_M, _PQ_K, _PQ_ITERS, _TRAIN_SAMPLE_MOD)
         books = ART.load_pq(path)
         if books is None:
@@ -710,8 +735,9 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> "SIM.PQCodebooks":
                 sample_mod=_TRAIN_SAMPLE_MOD, dim=_DIM,
             )
             ART.save_pq(books, path)
-        _PQ_BOOKS[sf_dir] = books
-    return _PQ_BOOKS[sf_dir]
+        return books
+
+    return _corpus_memo(_PQ_BOOKS, spark, sf_dir, build)
 
 
 def _pq_ctes() -> str:

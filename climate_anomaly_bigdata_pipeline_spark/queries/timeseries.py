@@ -236,8 +236,8 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Catalog(spark, sf_dir).events
     sess = TS.sessionize(ev, "ts", "user_id", gap_minutes=30, tiebreak_col="event_id")
     return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("duration_us"),
+        F.expr("count(1) AS n_events"),
+        F.expr("unix_micros(max(ts)) - unix_micros(min(ts)) AS duration_us"),
     )
 
 

@@ -45,6 +45,35 @@ def test_classify_extremes(spark):
     assert rows == {1: "EXTREME_HIGH", 2: "EXTREME_LOW"}
 
 
+def test_zscore_exact_quotes_column_names(spark):
+    """Caller column names reach SQL text backtick-quoted and labels as
+    escaped literals: a value column with a space, a partition column
+    that is a reserved word, a z column with a backtick, quoted labels."""
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 3.0), ("b", 5.0), ("b", 5.0), (None, 2.0), (None, 4.0),
+         ("c", 7.0)],
+        "`select` string, `my value` double",
+    )
+    scored = A.zscore_exact(df, "my value", ["select"], z_name="z`s")
+    assert scored.columns == ["select", "my value", "z`s"]
+    got = sorted(
+        (r["select"] or "", r["my value"], r["z`s"]) for r in scored.collect()
+    )
+    assert got == [
+        ("", 2.0, -0.7071), ("", 4.0, 0.7071),
+        ("a", 1.0, -0.7071), ("a", 3.0, 0.7071),
+        ("b", 5.0, 0.0), ("b", 5.0, 0.0),
+        ("c", 7.0, 0.0),
+    ]
+    labelled = A.classify_extremes(
+        scored, z_col="z`s", threshold=0.5, high_label="it's high",
+        low_label="lo\\w",
+    )
+    assert sorted((r["my value"], r["event_type"]) for r in labelled.collect()) == [
+        (1.0, "lo\\w"), (2.0, "lo\\w"), (3.0, "it's high"), (4.0, "it's high"),
+    ]
+
+
 def test_flagship_nonempty(spark, sf_dir):
     from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
 

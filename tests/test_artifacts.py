@@ -95,3 +95,32 @@ def test_corpus_fingerprint_binds_artifact_to_data(tmp_path):
     assert p1 != p2
     # Same corpus, different hyperparameters → different artifact.
     assert ART.ivf_path(str(d1), 16, 2, 4) != ART.ivf_path(str(d1), 8, 2, 4)
+
+
+def test_corpus_rewritten_in_place_is_served_anew(spark, fresh_store, tmp_path):
+    """The in-process memos follow the corpus' file listing, not its
+    path: rewriting ``embeddings.parquet`` in place (400 → 500 rows,
+    so 20 → 22 centroids) must not serve the old count or codebook."""
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import run_check
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    full = pq.read_table(os.path.join(SF, "embeddings.parquet"))
+    for rows in (400, full.num_rows):
+        pq.write_table(full.slice(0, rows), str(d / "embeddings.parquet"))
+        ok, msg = run_check(spark, "ivf_ann_topk", str(d))
+        assert ok, f"{rows} rows: {msg}"
+
+
+def test_corpus_memo_stays_bounded(spark, tmp_path):
+    from collections import OrderedDict
+
+    memo = OrderedDict()
+    for i in range(SQ._MAX_CORPORA + 3):
+        d = tmp_path / f"corpus{i}"
+        d.mkdir()
+        (d / "embeddings.parquet").write_bytes(b"x")
+        assert SQ._corpus_memo(memo, spark, str(d), lambda: i) == i
+    assert len(memo) == SQ._MAX_CORPORA
