@@ -3,8 +3,8 @@
 Thin shim over :mod:`climate_anomaly_bigdata_pipeline_spark.queries` — the engine's named
 query registry. The driver's verify runs ``entry(spark)`` as a smoke
 check, runs each ``queries()[name]`` at sf=0.01 and compares it against
-the matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+the matching ``oracle_sql()[name]`` via DuckDB (row count, schema and an
+order-insensitive value hash).
 """
 
 from __future__ import annotations

@@ -24,7 +24,6 @@ similarity threshold via the standard S-curve.
 
 from __future__ import annotations
 
-import os as _os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -695,11 +694,8 @@ def simhash(
 # Edge-count ceiling for the driver-local CC fastpath (see
 # _cc_local_labels): 8M edges = two 64 MB int64 arrays on the driver —
 # the same order of memory a broadcast-join hash relation is allowed.
-# Override with SPARK_GRAFT_CC_LOCAL_MAX_EDGES (0 disables the
-# fastpath entirely).
-_CC_LOCAL_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", str(8_000_000))
-)
+# Callers pass ``local_max_edges=0`` to disable the fastpath.
+_CC_LOCAL_MAX_EDGES = 8_000_000
 
 _CC_LOCAL_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
@@ -797,7 +793,7 @@ def connected_components(
     case), use :func:`connected_components_star`, which converges in
     O(log^2 n) rounds regardless of diameter.
 
-    ``local_max_edges`` (default $SPARK_GRAFT_CC_LOCAL_MAX_EDGES, 8M)
+    ``local_max_edges`` (default 8M edges)
     gates a driver-local endgame: when the deduped edge set is under
     the ceiling, labels come from one Arrow collect + numpy min-label
     (see :func:`_cc_local_labels`) instead of the shuffle rounds —
@@ -913,7 +909,7 @@ def connected_components_star(
     and on a 10k-node chain where propagation's default cap truncates
     (``tests/test_round4_ops.py``).
 
-    ``local_max_edges`` (default $SPARK_GRAFT_CC_LOCAL_MAX_EDGES, 8M)
+    ``local_max_edges`` (default 8M edges)
     gates the driver-local endgame (:func:`_cc_local_labels`): under
     the ceiling, one Arrow collect + numpy min-label/pointer-doubling
     replaces the star rounds entirely — the Kiveris-family papers'

@@ -8,10 +8,9 @@ a failing summary. Exit code 1 if any query fails.
 Usage: python tools/check_all_oracles.py [sf_dir] [name ...]
        python tools/check_all_oracles.py --json OUT.json [sf_dir] [name ...]
 
-With --json the per-query results are also written as a
-CORRECTNESS_r*-shaped artifact (name -> {ok, msg, seconds}) so the
-sweep is a committed, diffable record rather than terminal scrollback
-(VERDICT r7 item 5: CORRECTNESS_sf01_local.json each round).
+With --json the per-query results are also written as a JSON record
+(sf_dir, passed, total and name -> {ok, msg, seconds}), so a sweep can
+be diffed against an earlier one rather than read from scrollback.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ def main() -> int:
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*", help="subset of query names")
     ap.add_argument("--json", dest="json_out", default=None,
-                    help="also write a CORRECTNESS-shaped artifact here")
+                    help="also write the per-query results here as JSON")
     ns = ap.parse_args()
     json_out = ns.json_out
     sf_dir = ns.sf_dir

@@ -14,14 +14,17 @@ the formatted plan for scale antipatterns:
 - scans with no column pruning (ReadSchema equal to the full table
   schema is fine for profile queries; reported, not failed)
 
-Prints one line per finding plus a summary; exit 1 only on the hard
-antipatterns (cartesian). Use as a regression backstop:
+Prints one line per finding plus a summary; exit 1 on a hard
+antipattern (cartesian) or a plan that fails to build, exit 2 on an
+unknown query name or a missing sf dir (before Spark starts). Use as a
+regression backstop:
 
     python tools/plan_audit.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -63,17 +66,25 @@ def audit(name: str, plan: str) -> list[str]:
     return findings
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    names = args[1:] if len(args) > 1 else list(QUERIES)
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    ap.add_argument("names", nargs="*", help="subset of query names")
+    ns = ap.parse_args(argv)
+    if not os.path.isdir(ns.sf_dir):
+        ap.error(f"sf_dir does not exist: {ns.sf_dir}")
+    names = ns.names or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown query names: {unknown}")
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    hard = 0
+    hard = errors = 0
     for name in names:
         try:
-            plan = plan_of(QUERIES[name](spark, sf_dir))
-        except Exception as e:  # noqa: BLE001
+            plan = plan_of(QUERIES[name](spark, ns.sf_dir))
+        except Exception as e:  # noqa: BLE001 — report every query, then fail
+            errors += 1
             print(f"ERROR {name}: {type(e).__name__}: {e}")
             continue
         findings = audit(name, plan)
@@ -87,8 +98,9 @@ def main() -> int:
             if tag == "HARD":
                 hard += 1
             print(f"{tag} {name}: {f}")
-    print(f"audited {len(names)} queries, hard findings: {hard}")
-    return 1 if hard else 0
+    print(f"audited {len(names)} queries, hard findings: {hard}, "
+          f"build errors: {errors}")
+    return 1 if hard or errors else 0
 
 
 if __name__ == "__main__":
