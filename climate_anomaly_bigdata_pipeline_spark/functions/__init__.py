@@ -65,13 +65,6 @@ def dec(col: str | Column) -> Column:
     return col.cast(MONEY)
 
 
-def dec_m(col: str | Column) -> Column:
-    """Cast to the moment-sum decimal (see ``MOMENT``)."""
-    if isinstance(col, str):
-        return F.expr(f"CAST({ident(col)} AS {MOMENT})")
-    return col.cast(MOMENT)
-
-
 def dec_sum(col: str | Column, scale: int = 2, name: str | None = None) -> Column:
     """Exact decimal sum of a double column, rounded and emitted as double."""
     out = F.round(F.sum(dec(col)), scale).cast("double")
@@ -102,4 +95,3 @@ def dec_avg(col: str | Column, scale: int = 4, name: str | None = None) -> Colum
         F.sum(dec(c)).cast("double") / F.count(c).cast("double"), scale
     )
     return out.alias(name) if name else out
-

@@ -203,22 +203,6 @@ def classify_extremes(
     )
 
 
-def anomaly_pipeline(
-    df: DataFrame,
-    value_col: str,
-    partition_cols: Sequence[str],
-    threshold: float = 2.5,
-    label_name: str = "event_type",
-) -> DataFrame:
-    """The reference's full Gold analytic as one operator: per-group
-    stats → guarded z-score → thresholded, classified extremes."""
-    return classify_extremes(
-        zscore(df, value_col, partition_cols),
-        threshold=threshold,
-        label_name=label_name,
-    )
-
-
 def iqr_outliers(
     df: DataFrame,
     value_col: str,

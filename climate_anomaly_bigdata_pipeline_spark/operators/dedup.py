@@ -206,25 +206,6 @@ def _lsh_stacked(
     ).select(F.col(id_col), F.col("bv.band_idx"), F.col("bv.band_val"))
 
 
-def lsh_bucket_overflow(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """Monitoring companion to :func:`lsh_candidates`: the buckets that
-    exceed ``max_bucket_size`` (band_idx, band_val, bucket_n). Run it —
-    or inspect its count — whenever candidates were generated with a
-    cap, to see what the truncation dropped."""
-    stacked = _lsh_stacked(sig, id_col, k, bands)
-    return (
-        stacked.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-    )
-
-
 def lsh_candidates(
     sig: DataFrame,
     id_col: str = "doc_id",
@@ -252,8 +233,7 @@ def lsh_candidates(
     C(cap, 2) pairs from its ``cap`` smallest ids. Members of such a
     bucket are mutual near-dups of the retained ids anyway — a
     giant bucket means exact-dup-level redundancy that the exact-hash
-    dedup pass should have removed first. Use
-    :func:`lsh_bucket_overflow` to surface truncated buckets.
+    dedup pass should have removed first.
     """
     from pyspark.sql import Window
 

@@ -1,17 +1,16 @@
 """Multimodal column plumbing (SURVEY §2.10): opaque binary payloads +
-typed metadata, with Arrow-batched decode/feature-extract operators.
+typed metadata, with Arrow-batched decode operators.
 
 Image/audio/video payloads are carried as ``binary`` columns with a
 metadata struct — they flow through joins/aggregations untouched.
-Heavy per-item work (decode, resize, frame-sample) runs in
+Heavy per-item work (decode, frame-sample) runs in
 ``mapInPandas`` (Arrow batches, no per-row Python overhead).
 
 Decode is REAL for the container-free uncompressed formats and stubbed
 only where a compressed codec library would be required:
 
-* :func:`decode_image` / :func:`resize_image` — real numpy decode /
-  nearest-neighbor resize for binary PNM images (P5 graymap, P6
-  pixmap), for 8-bit grey/RGB PNG (:func:`decode_png_bytes` — stdlib
+* :func:`decode_image` — real numpy decode for binary PNM images (P5
+  graymap, P6 pixmap), for 8-bit grey/RGB PNG (:func:`decode_png_bytes` — stdlib
   zlib, all five scanline filters, no imaging library), AND for
   baseline-sequential AND progressive JPEG — spectral selection and
   successive approximation (``operators/jpegcodec.py`` — Annex-K
@@ -25,11 +24,6 @@ only where a compressed codec library would be required:
 * :func:`sample_frames` — real every-nth frame sampling over the raw
   concatenated-RGB-frame video format (:func:`encode_raw_video`);
   container formats (MP4 etc.) fall through to a PyAV stub.
-* :func:`binary_features` — a *pure-expression* deterministic feature
-  set (byte length, md5 digest) used as the oracle-checkable stand-in.
-* :func:`extract_features_batched` — the same features computed inside
-  ``mapInPandas``: tests assert it matches the expression path
-  bit-for-bit.
 
 Scale notes: binary payloads dominate row size — repartition by a
 content-derived key before wide shuffles so AQE can split skewed
@@ -42,7 +36,6 @@ giant video blob per task.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
@@ -52,10 +45,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Output schema of feature extraction — shared by the expression path
-#: and the mapInPandas path.
-FEATURE_SCHEMA = "doc_id long, content_type string, n_bytes int, digest string"
 
 
 def attach_binary(
@@ -75,37 +64,6 @@ def attach_binary(
             F.length(payload).alias("n_bytes"),
         ).alias("meta"),
     )
-
-
-def binary_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Pure-expression feature extraction over the payload: byte count
-    and md5 digest — deterministic, engine-portable, no Python."""
-    return df.select(
-        F.col(id_col),
-        F.col("meta.content_type").alias("content_type"),
-        F.length("payload").cast("int").alias("n_bytes"),
-        F.md5("payload").alias("digest"),
-    )
-
-
-def extract_features_batched(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """The same features via ``mapInPandas`` — the Arrow-batched shape a
-    real decoder plugs into (swap the body for PIL/libav calls)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content_type": [m["content_type"] for m in pdf["meta"]],
-                    "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "digest": pdf["payload"].map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
 def _require(module: str, what: str):
@@ -431,34 +389,6 @@ def decode_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.mapInPandas(batches, schema=IMAGE_SCHEMA)
 
 
-def resize_image(df: DataFrame, width: int, height: int,
-                 id_col: str = "doc_id") -> DataFrame:
-    """Nearest-neighbor resize of PNM payloads to (width, height),
-    returning re-encoded PNM payloads (doc_id, payload, meta). REAL for
-    PNM — index-slicing in numpy, no codec; other formats → PIL stub."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                _, w, h, arr = _decode_any_image(bytes(payload))
-                ys = (np.arange(height) * h // height)
-                xs = (np.arange(width) * w // width)
-                ids.append(doc_id)
-                payloads.append(encode_ppm(arr[ys][:, xs]))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    out = df.mapInPandas(batches, schema=f"{id_col} long, payload binary")
-    return out.select(
-        F.col(id_col),
-        "payload",
-        F.struct(
-            F.lit("image/x-portable-anymap").alias("content_type"),
-            F.length("payload").alias("n_bytes"),
-        ).alias("meta"),
-    )
-
-
 def decode_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode audio payloads to (sample_rate, channels, n_samples,
     duration_s, rms). REAL for PCM WAV (stdlib ``wave``) AND for
@@ -519,7 +449,7 @@ def sample_frames(df: DataFrame, every_n: int = 30,
     """Sample every-nth frame of raw-RGB video payloads
     (:func:`encode_raw_video` layout), emitting one row per kept frame
     with the frame re-encoded as a standalone P6 image payload — so
-    downstream stages (decode_image, resize_image) compose directly and
+    downstream stages (decode_image) compose directly and
     row sizes stay frame-bounded. Container formats (MP4 …) → av stub."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -587,36 +517,6 @@ def scene_cuts(df: DataFrame, threshold: float = 20.0,
             )
 
     return df.mapInPandas(batches, schema="doc_id long, cut_idx int, delta double")
-
-
-def extract_features_arrow(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """The :func:`extract_features_batched` features via ``mapInArrow``
-    — Arrow ``RecordBatch`` in, RecordBatch out, skipping the
-    Arrow→pandas materialization entirely. This is the lowest-overhead
-    Python exchange Spark offers (PySpark 4 API-surface completeness;
-    tests assert bit-parity with both the expression path and the
-    pandas path). Prefer this shape when the Python side is
-    columnar-friendly; per-row digests still cost a Python loop."""
-    import pyarrow as pa
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in it:
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            payloads = rb.column(rb.schema.get_field_index("payload"))
-            metas = rb.column(rb.schema.get_field_index("meta"))
-            ctypes = metas.field("content_type")
-            n_bytes = pa.array(
-                [len(p.as_py()) for p in payloads], type=pa.int32()
-            )
-            digests = pa.array(
-                [hashlib.md5(p.as_py()).hexdigest() for p in payloads]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids, ctypes, n_bytes, digests],
-                ["doc_id", "content_type", "n_bytes", "digest"],
-            )
-
-    return df.mapInArrow(batches, schema=FEATURE_SCHEMA)
 
 
 # ---- perceptual image hashing -------------------------------------------------

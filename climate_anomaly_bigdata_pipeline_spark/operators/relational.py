@@ -951,51 +951,6 @@ def running_min(
     return part.withColumn(out_col, out_expr).drop("__pid")
 
 
-def running_products(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    value_col: str,
-    out_col: str = "running_product",
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Global cumulative PRODUCT (inclusive prefix product) in
-    ``order_cols`` order without the single-partition window — the
-    multiplicative sibling of :func:`running_totals`: range-partition
-    on the order key, multiply out each partition (bounded collect,
-    one row per partition), prefix-multiply the partition totals
-    driver-side into offsets, then multiply a partition-LOCAL window
-    product by the broadcast offset.
-
-    Float multiplication is commutative but not associative, so unlike
-    the integer prefix SUM this result can differ from a sequential
-    fold in the last ulp depending on partition boundaries — callers
-    that need cross-engine parity should round (the Kaplan-Meier query
-    rounds to 6). ``order_cols`` must be a total order."""
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    totals = part.groupBy("__pid").agg(F.product(value_col).alias("t")).collect()
-    offsets: dict[int, float] = {}
-    acc = 1.0
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = acc
-        acc *= r["t"] if r["t"] is not None else 1.0
-    off_expr = F.create_map(
-        *[F.lit(v) for kv in offsets.items() for v in kv]
-    )[F.col("__pid")]
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return part.withColumn(
-        out_col, off_expr * F.product(value_col).over(w)
-    ).drop("__pid")
-
-
 def running_max_strict(
     df: DataFrame,
     order_cols: Sequence[str],

@@ -30,10 +30,6 @@ def tokens_expr(text_col: str | Column = "text") -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
 
 
-def with_tokens(df: DataFrame, text_col: str = "text", out: str = "tokens") -> DataFrame:
-    return df.withColumn(out, tokens_expr(text_col))
-
-
 def term_frequency(
     df: DataFrame, text_col: str = "text", term_name: str = "term"
 ) -> DataFrame:
@@ -384,27 +380,3 @@ def unigram_lm_scores(
         )
     )
     return scored
-
-
-def register_shingle_udtf(spark, name: str = "shingles") -> None:
-    """Register a Python UDTF (PySpark 4 table-function API) that
-    expands a text into its word k-shingles: ``SELECT s.* FROM
-    docs, LATERAL shingles(text, 3) s`` yields one (pos, shingle) row
-    per window — the SQL-surface twin of the DataFrame-side
-    ``transform+explode`` shingling used by the dedup operators
-    (parity-tested). UDTF rows are produced by Python per input row;
-    keep it off fact-table hot paths (the codegen explode form is the
-    scale path) — this exists so SQL users get the same operator
-    without leaving SQL."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="pos int, shingle string")
-    class Shingles:
-        def eval(self, text: str, k: int):  # noqa: D102 - UDTF contract
-            if text is None or k is None or k <= 0:
-                return
-            words = [w for w in text.split(" ") if w]
-            for i in range(max(0, len(words) - k + 1)):
-                yield i, " ".join(words[i : i + k])
-
-    spark.udtf.register(name, Shingles)

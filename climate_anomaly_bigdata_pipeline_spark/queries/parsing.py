@@ -155,8 +155,9 @@ def jsonl_parse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema (PERMISSIVE: malformed lines and wrong-typed fields null
     out, the same null-on-bad-cast contract as the text parsers), drop
     invalid rows, and aggregate. All JVM expressions — the same plan
-    shape ``read_jsonl`` produces on files, so this oracle-checks the
-    JSONL source semantics without driver-side file writes."""
+    shape a schema'd ``spark.read.json`` scan of JSONL files produces,
+    so this oracle-checks the JSONL source semantics without
+    driver-side file writes."""
     docs = Catalog(spark, sf_dir).documents
     lines = docs.select(
         F.to_json(F.struct("doc_id", "lang", "source", "n_chars")).alias("value")

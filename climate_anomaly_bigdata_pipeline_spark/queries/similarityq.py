@@ -1026,11 +1026,10 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---- external-query ANN serving (the streaming micro-batch server) ----------
+# ---- external-query ANN serving (streaming/vector_serve.py) -----------------
 #
-# queries/streaming composition: the SAME ann_serve_batch that
-# streaming/vector_serve.py runs under foreachBatch, exercised as a
-# batch registry query so the serving math earns a DuckDB oracle row.
+# The serving plan of ann_serve_batch, run as a registry query so the
+# serving math earns a DuckDB oracle row.
 # External semantics: the query batch is an arbitrary (id, vector) set
 # — no self-exclusion (a query that happens to be a corpus member
 # finds itself at rank 1, cosine 1), unlike the self-join knn queries.
@@ -1080,9 +1079,8 @@ ORDER BY query_id, rank
 
 @query("ann_serve_external", oracle=_ANN_SERVE_ORACLE)
 def ann_serve_external(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """External-query ANN serving — the batch form of the streaming
-    vector-search server (`streaming/vector_serve.py`, whose
-    foreachBatch wrapper runs THIS plan per micro-batch): every 97th
+    """External-query ANN serving through the vector-search server's
+    `ann_serve_batch` (`streaming/vector_serve.py`): every 97th
     vector acts as an arriving query batch, probe cells come row-local
     from the offline codebook artifact, candidates from the cell
     equi-join against the once-assigned corpus, top-5 per query. The

@@ -169,9 +169,9 @@ def streaming_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- custom stateful operator under the contract (applyInPandasWithState) ---
 
-# The v1 arbitrary-state API (no protobuf bridge needed, unlike the
-# transformWithStateInPandas v2 path which stays pytest-gated — see
-# streaming/stateful_v2.py). State per user is (n, cents): both exact
+# The v1 arbitrary-state API: the transformWithStateInPandas v2 API
+# needs a google.protobuf runtime on the workers, which this engine
+# does not depend on. State per user is (n, cents): both exact
 # integers, so the fold is a commutative monoid and the drained result
 # is micro-batch-invariant AND engine-exact (floor(value·100) is one
 # IEEE multiply + floor, identical in numpy and DuckDB; integer

@@ -47,8 +47,6 @@ def rolling_daily_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation reduces the data to |days| rows first — the shuffle
     moves day-grain aggregates, never raw events.
     """
-    from pyspark.sql import Window
-
     ev = Catalog(spark, sf_dir).events
     daily = ev.groupBy(F.to_date("ts").alias("event_date")).agg(
         (
@@ -56,13 +54,8 @@ def rolling_daily_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("value")
         ).alias("daily_avg")
     )
-    w = Window.orderBy("event_date").rowsBetween(-6, 0)
-    rolling = F.when(
-        F.count("daily_avg").over(w) >= 7,
-        F.round(F.avg("daily_avg").over(w), 4),
-    )
-    return daily.select(
-        "event_date", "daily_avg", rolling.alias("rolling_avg_7d")
+    return TS.rolling_mean(
+        daily, "event_date", "daily_avg", 7, out_name="rolling_avg_7d"
     )
 
 

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -56,6 +57,10 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers import this package to run its UDFs; they do not
+        # inherit the driver's sys.path, so name the package's parent
+        # directory (Spark merges it into the workers' PYTHONPATH).
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if master:
         builder = builder.master(master)

@@ -144,38 +144,6 @@ def read_gold_state(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def incremental_join_delta(
-    a_state: DataFrame,
-    b_state: DataFrame,
-    a_delta: DataFrame,
-    b_delta: DataFrame,
-    on: str | list[str],
-) -> DataFrame:
-    """Incremental (delta) maintenance of an inner equi-join view over
-    two append-only inputs: when A grows by ΔA and B by ΔB, the view
-    grows by exactly
-
-        Δ(A ⋈ B) = ΔA ⋈ B  ∪  A ⋈ ΔB  ∪  ΔA ⋈ ΔB
-
-    (the three disjoint new-pair classes: new-left×old-right,
-    old-left×new-right, new×new). Appending this delta to the stored
-    view equals recomputing ``(A∪ΔA) ⋈ (B∪ΔB)`` from scratch — the
-    classic incremental-view-maintenance identity, parity-tested in
-    ``tests/test_round5c_ops.py``.
-
-    Why it matters at 100 TB: a daily append touches ``|Δ|·σ`` join
-    work instead of ``|A|·|B|`` — the full recompute the reference's
-    batch jobs do. Each leg is a plain equi-join, so with both states
-    bucketed on the join key every leg is exchange-free on the big
-    side; the deltas are batch-sized and broadcast when small.
-    """
-    return (
-        a_delta.join(b_state, on)
-        .unionByName(a_state.join(b_delta, on))
-        .unionByName(a_delta.join(b_delta, on))
-    )
-
-
 def vacuum_versions(root: str, keep: int = 3) -> list[str]:
     """Retention for the versioned-state layout: delete all ``v*``
     snapshot directories except the ``keep`` most recent ones and the

@@ -1,5 +1,5 @@
-"""Streaming ANN serving: vector search over a query STREAM against a
-static corpus, IVF-pruned by the offline codebook artifact.
+"""ANN serving: top-k vector search for a batch of query vectors
+against a static corpus, IVF-pruned by the offline codebook artifact.
 
 The reference has no vector or streaming surface (it is a 3-job batch
 ETL — see SURVEY.md §2.8); this is an engine extension composing two
@@ -9,19 +9,17 @@ existing pieces into the online-retrieval serving shape:
   train_ivf_codebook`, persisted as parquet by queries/similarityq.py)
   acts as the coordinator-side quantizer — a bounded
   O(n_centroids × dim) literal, never a shuffle;
-- each micro-batch of query vectors is broadcast against the
-  cell-assigned corpus (assigned ONCE, cached across batches), scored
-  only inside the probed cells, and ranked top-k per query.
+- each batch of query vectors is broadcast against the cell-assigned
+  corpus (assigned ONCE, reused across batches), scored only inside
+  the probed cells, and ranked top-k per query.
 
-Why ``foreachBatch`` instead of a pure stream-stream plan: per-query
-top-k needs a ranking window over candidates, which append-mode
-streaming cannot express without state; the micro-batch boundary is
-exactly where that ranking is well-defined — the same reason real
-vector stores serve per-request. Inside the batch the plan is the
-co-partitionable cell equi-join of ``ivf_knn_join``: at 100 TB the
-corpus is written partitioned by cell, a query batch touches
-nprobe/n_centroids of it, and nothing but (query, candidate-id, score)
-triples ever moves.
+Per-query top-k needs a ranking window over candidates, so serving
+works on bounded query batches (a query stream is served one
+micro-batch at a time) — the same reason real vector stores serve
+per-request. Inside the batch the plan is the co-partitionable cell
+equi-join of ``ivf_knn_join``: at 100 TB the corpus is written
+partitioned by cell, a query batch touches nprobe/n_centroids of it,
+and nothing but (query, candidate-id, score) triples ever moves.
 """
 
 from __future__ import annotations
@@ -44,7 +42,7 @@ def assign_corpus_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Home-cell assignment of the static corpus — run ONCE, cache (or
-    persist partitioned by ``cell``) and reuse across every micro-batch.
+    persist partitioned by ``cell``) and reuse across every query batch.
     Row-local (GEMM candidates + exact-fold rescore — the
     with_cell_candidates contract, bit-identical to evaluating every
     centroid): no shuffle."""
@@ -120,47 +118,4 @@ def ann_serve_batch(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def serve_ann_stream(
-    query_stream: DataFrame,
-    assigned_corpus: DataFrame,
-    codebook: list[tuple[int, list[float]]],
-    sink_path: str,
-    checkpoint_path: str,
-    k: int = 5,
-    nprobe: int = 2,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-):
-    """Wire :func:`ann_serve_batch` under ``foreachBatch``: every
-    micro-batch of arriving query vectors is served against the static
-    corpus and the ranked neighbors appended to a parquet sink.
-    Returns the started StreamingQuery (caller drives/stops it).
-
-    Exactly-once: foreachBatch re-runs a failed batch with the same
-    batch id and the parquet append is the only side effect, so the
-    checkpoint gives at-least-once appends; dedup downstream on
-    (query_id, rank) if the sink must be exact — the standard
-    foreachBatch contract (same as streaming/incremental.py's gold
-    maintenance).
-    """
-
-    def _serve(batch_df: DataFrame, _batch_id: int) -> None:
-        out = ann_serve_batch(
-            batch_df,
-            assigned_corpus,
-            codebook,
-            k=k,
-            nprobe=nprobe,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-        )
-        out.write.mode("append").parquet(sink_path)
-
-    return (
-        query_stream.writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
     )

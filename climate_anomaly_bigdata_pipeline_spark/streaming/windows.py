@@ -69,25 +69,6 @@ def windowed_counts_stream(
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_id",),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exactly-once event dedup on a stream: first occurrence of each
-    key wins; duplicate state is evicted once the watermark passes, so
-    state stays bounded on an unbounded stream (duplicates arriving
-    later than the watermark are by-definition out of contract).
-
-    The streaming twin of the batch exact dedup
-    (``relational.dedup_exact``) — ``dropDuplicatesWithinWatermark``
-    keys the state store on ``keys`` and shuffles once by them.
-    """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
 def run_stream_to_memory(
     stream_df: DataFrame, name: str, output_mode: str = "complete"
 ) -> DataFrame:
@@ -106,90 +87,3 @@ def run_stream_to_memory(
     finally:
         q.stop()
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def score_stream_against_baseline(
-    stream: DataFrame,
-    baseline: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Stream-static join: score each streaming event against a
-    batch-computed per-key baseline (mean/std) and flag |z| >
-    threshold — the standard online-anomaly serving shape (train the
-    baseline offline, apply it to the live stream).
-
-    The static side is groups-sized, so Spark plans a broadcast join
-    per micro-batch with no stream-side state at all — this scales to
-    any stream rate; re-reading the static table per batch also picks
-    up baseline refreshes for free. ``baseline`` must carry
-    (key, mean, std) columns.
-    """
-    joined = stream.join(F.broadcast(baseline), key_col)
-    z = F.when(
-        F.col("std") != 0, (F.col(value_col) - F.col("mean")) / F.col("std")
-    )
-    return joined.withColumn("z_score", F.round(z, 4)).withColumn(
-        "is_anomaly", F.abs(F.col("z_score")) > threshold
-    )
-
-
-def stream_stream_followup_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    within: str = "1 hour",
-    left_watermark: str = "2 hours",
-    right_watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join: each left event paired with the same
-    key's right events that follow it within ``within`` — the streaming
-    form of the batch range join ("purchase within an hour of the
-    click"), where BOTH sides arrive continuously.
-
-    What makes stream-stream joins different from stream-static: both
-    sides buffer in the state store until the other side can no longer
-    produce a match. The watermarks plus the explicit event-time bound
-    (``r.ts BETWEEN l.ts AND l.ts + within``) are what let Spark evict
-    that state: a left row is dropped once the right watermark passes
-    ``l.ts + within``, so state stays bounded on an unbounded stream —
-    without the time bound the join would buffer both streams forever.
-    One shuffle each side, keyed by the join key; at 100 TB the state
-    store is RocksDB and the key shuffle is the only data movement.
-
-    Output: (key, left event id + ts, right event id + ts, lag
-    seconds). Column prefixes keep the two sides distinct.
-    """
-    lw = (
-        left.withWatermark("ts", left_watermark)
-        .select(
-            F.col(key_col).alias("k"),
-            F.col("event_id").alias("l_event_id"),
-            F.col("ts").alias("l_ts"),
-        )
-    )
-    rw = (
-        right.withWatermark("ts", right_watermark)
-        .select(
-            F.col(key_col).alias("rk"),
-            F.col("event_id").alias("r_event_id"),
-            F.col("ts").alias("r_ts"),
-        )
-    )
-    joined = lw.join(
-        rw,
-        (F.col("k") == F.col("rk"))
-        & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-    )
-    return joined.select(
-        F.col("k").alias(key_col),
-        "l_event_id",
-        "l_ts",
-        "r_event_id",
-        "r_ts",
-        (
-            (F.unix_micros("r_ts") - F.unix_micros("l_ts")) / 1_000_000.0
-        ).alias("lag_seconds"),
-    )

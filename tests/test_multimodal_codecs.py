@@ -67,17 +67,6 @@ def test_png_decode_parity_with_ppm_roundtrip(spark):
     assert a == b
 
 
-def test_png_resize_composes(spark):
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    img[2:, 2:] = 30
-    df = spark.createDataFrame(
-        [(0, MM.encode_png(img))], "doc_id long, payload binary"
-    )
-    [row] = MM.resize_image(df, width=2, height=2).collect()
-    _, w, h, arr = MM.decode_pnm_bytes(bytes(row["payload"]))
-    assert (w, h) == (2, 2) and arr[1, 1, 0] == 30
-
-
 def test_unsupported_codecs_still_stub(spark):
     # Baseline JPEG now decodes natively (operators/jpegcodec.py); the
     # honest stub surface is formats with no vendored codec, e.g. WebP.
@@ -112,19 +101,6 @@ def test_decode_image_real(spark):
     assert (out[0]["mode"], out[0]["width"], out[0]["height"]) == ("RGB", 6, 4)
     assert out[0]["mean_luma"] == pytest.approx(100.0)
     assert (out[1]["mode"], out[1]["mean_luma"]) == ("L", 7.0)
-
-
-def test_resize_image_nearest_neighbor(spark):
-    # 4x4 checker of 2x2 blocks -> 2x2 nearest keeps one px per block
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    img[:2, 2:] = 10
-    img[2:, :2] = 20
-    img[2:, 2:] = 30
-    [row] = MM.resize_image(_img_df(spark, [img]), width=2, height=2).collect()
-    _, w, h, arr = MM.decode_pnm_bytes(bytes(row["payload"]))
-    assert (w, h) == (2, 2)
-    assert arr[:, :, 0].tolist() == [[0, 10], [20, 30]]
-    assert row["meta"]["n_bytes"] == len(bytes(row["payload"]))
 
 
 def test_decode_audio_real(spark):

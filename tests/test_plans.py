@@ -257,21 +257,6 @@ def test_grid_blocked_neardup_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_audit_plan_counts_nodes_and_filters(spark, sf_dir):
-    from climate_anomaly_bigdata_pipeline_spark.plans.audit import audit_plan
-
-    a = audit_plan(QUERIES["join_revenue_by_nation_year"](spark, sf_dir))
-    assert a["n_broadcast_joins"] >= 2
-    assert not a["has_cartesian"]
-    assert a["codegen_spans"] >= 1
-
-    b = audit_plan(QUERIES["semi_join_big_spenders"](spark, sf_dir))
-    assert any("o_totalprice" in f for f in b["pushed_filters"])
-
-    c = audit_plan(QUERIES["zscore_events"](spark, sf_dir))
-    assert c["n_windows"] == 0 and c["n_exchanges"] == 1
-
-
 def test_segment_candidates_plan_no_cartesian(spark, sf_dir):
     """The PassJoin candidate join must plan as a shuffled hash join on
     the composite segment key — never a cartesian/BNL join, and never a

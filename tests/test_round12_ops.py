@@ -133,67 +133,6 @@ def test_textrank_scores_floor_and_vocab(spark, sf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_streaming_dedup_processor_logic_unit(spark, sf_dir):
-    """Unit-level check of ExactDedupProcessor's fold (the real-worker
-    parity test drives it through an actual streaming query; this
-    guards the monoid logic against in-memory fakes)."""
-    import pandas as pd
-
-    from climate_anomaly_bigdata_pipeline_spark.streaming.stateful_v2 import (
-        ExactDedupProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeValueState()
-
-    p = ExactDedupProcessor()
-    p.init(FakeHandle())
-    batch1 = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(["2024-01-02", "2024-01-01"]),
-            "event_id": [5, 9],
-            "value": [2.0, 1.0],
-        }
-    )
-    out1 = list(p.handleInputRows((7, "click"), iter([batch1]), None))[0]
-    assert out1["event_id"].iloc[0] == 9  # earlier ts wins
-    assert out1["n_dups"].iloc[0] == 1
-    batch2 = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(["2024-01-01", "2023-12-31"]),
-            "event_id": [3, 4],
-            "value": [7.0, 8.0],
-        }
-    )
-    out2 = list(p.handleInputRows((7, "click"), iter([batch2]), None))[0]
-    assert out2["event_id"].iloc[0] == 4  # cross-batch min carried
-    assert out2["n_dups"].iloc[0] == 3
-    # tie on ts -> smaller event_id wins
-    batch3 = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(["2023-12-31"]),
-            "event_id": [2],
-            "value": [9.0],
-        }
-    )
-    out3 = list(p.handleInputRows((7, "click"), iter([batch3]), None))[0]
-    assert out3["event_id"].iloc[0] == 2
-
-
 def test_ivf_drift_psi_bounds(spark, sf_dir):
     (r,) = _rows(spark, sf_dir, "ivf_assignment_drift_psi")
     assert r.n_ref > 0 and r.n_target > 0

@@ -176,149 +176,6 @@ def test_cuped_two_arms_cover_all_users(spark, sf_dir):
     assert len(thetas) == 1  # pooled theta identical across arms
 
 
-def test_orc_roundtrip_pushdown(spark, sf_dir, tmp_path):
-    """ORC sink/scan parity with parquet, including filter pushdown
-    into the ORC reader."""
-    import contextlib
-    import io as _io
-
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import read_orc, write_orc
-
-    orders = Catalog(spark, sf_dir).orders
-    p = str(tmp_path / "orders_orc")
-    write_orc(orders, p)
-    back = read_orc(spark, p)
-    assert back.count() == orders.count()
-    filtered = back.filter(F.col("o_totalprice") > 100000).select("o_orderkey")
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        filtered.explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice" in plan
-    want = orders.filter(F.col("o_totalprice") > 100000).count()
-    assert filtered.count() == want
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """mergeSchema read: files with old and new schemas union with
-    nulls for missing columns and the widened schema."""
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import (
-        read_parquet_evolved,
-    )
-
-    old = spark.createDataFrame([(1, "a")], "id long, name string")
-    new = spark.createDataFrame(
-        [(2, "b", 3.5)], "id long, name string, score double"
-    )
-    p1, p2 = str(tmp_path / "v1"), str(tmp_path / "v2")
-    old.write.parquet(p1)
-    new.write.parquet(p2)
-    merged = read_parquet_evolved(spark, p1, p2)
-    assert set(merged.columns) == {"id", "name", "score"}
-    rows = {r.id: r.score for r in merged.collect()}
-    assert rows == {1: None, 2: 3.5}
-
-
-def test_incremental_join_delta_equals_recompute(spark):
-    """IVM identity: appending the three-leg delta to the stored join
-    view must equal the full recompute on the grown inputs."""
-    from climate_anomaly_bigdata_pipeline_spark.streaming.incremental import (
-        incremental_join_delta,
-    )
-
-    a = spark.createDataFrame(
-        [(k, f"a{v}") for k in range(20) for v in range(2)], "k long, av string"
-    )
-    b = spark.createDataFrame(
-        [(k, f"b{v}") for k in range(0, 30, 2) for v in range(3)],
-        "k long, bv string",
-    )
-    da = spark.createDataFrame(
-        [(k, f"na{k}") for k in range(15, 25)], "k long, av string"
-    )
-    db = spark.createDataFrame([(3, "nb3"), (16, "nb16")], "k long, bv string")
-
-    old_view = a.join(b, "k")
-    delta = incremental_join_delta(a, b, da, db, "k")
-    got = sorted(
-        (r.k, r.av, r.bv) for r in old_view.unionByName(delta).collect()
-    )
-    want = sorted(
-        (r.k, r.av, r.bv)
-        for r in a.unionByName(da).join(b.unionByName(db), "k").collect()
-    )
-    assert got == want
-
-
-def test_map_in_arrow_features_match_expression_path(spark, sf_dir):
-    """mapInArrow features must equal both the pure-expression path and
-    the mapInPandas path bit-for-bit."""
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.operators import multimodal as MM
-
-    docs = Catalog(spark, sf_dir).documents.limit(50)
-    binp = MM.attach_binary(docs)
-    expr = {tuple(r) for r in MM.binary_features(binp).collect()}
-    arrow = {tuple(r) for r in MM.extract_features_arrow(binp).collect()}
-    pandas_ = {tuple(r) for r in MM.extract_features_batched(binp).collect()}
-    assert expr == arrow == pandas_
-
-
-def test_shingle_udtf_matches_dataframe_explode(spark, sf_dir):
-    """The SQL UDTF must produce exactly the rows of the DataFrame-side
-    transform+explode shingling."""
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.operators.text import (
-        register_shingle_udtf,
-    )
-
-    Catalog(spark, sf_dir).register_views(("documents",))
-    register_shingle_udtf(spark)
-    got = {
-        (r.doc_id, r.pos, r.shingle)
-        for r in spark.sql(
-            "SELECT d.doc_id, s.pos, s.shingle "
-            "FROM documents d, LATERAL shingles(d.text, 3) s "
-            "WHERE d.doc_id < 20"
-        ).collect()
-    }
-    docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 20)
-    words = docs.select(
-        "doc_id", F.split("text", " ").alias("ws")
-    ).select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("ws") - 3),
-                lambda i: F.array_join(F.slice("ws", i + 1, 3), " "),
-            )
-        ).alias("pos", "shingle"),
-    )
-    want = {(r.doc_id, r.pos, r.shingle) for r in words.collect()}
-    assert got == want
-
-
-def test_compact_parquet_reduces_file_count_preserves_rows(spark, sf_dir, tmp_path):
-    """Compaction must collapse a many-small-files directory to the
-    target count with identical data."""
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import compact_parquet
-
-    p = str(tmp_path / "frag")
-    orders = Catalog(spark, sf_dir).orders
-    orders.repartition(40).write.parquet(p)  # 40 tiny files
-    import pathlib
-
-    before = len(list(pathlib.Path(p).rglob("*.parquet")))
-    assert before >= 40
-    want = orders.count()
-    n = compact_parquet(spark, p, target_file_mb=128)
-    after = len(list(pathlib.Path(p).rglob("*.parquet")))
-    assert after == n == 1  # tiny table compacts to a single file
-    assert spark.read.parquet(p).count() == want
-
-
 def test_gzip_jsonl_roundtrip(spark, sf_dir, tmp_path):
     """Compressed text sources: gzip JSONL writes and reads through the
     same sink/scan pair (Spark's codec layer, no code changes) — the

@@ -333,27 +333,6 @@ def test_holt_forecast_matches_python(spark, sf_dir):
 # ---- distributed prefix product / Kaplan-Meier ------------------------------------
 
 
-def test_running_products_matches_sequential(spark):
-    import math as m
-    import random
-
-    rng = random.Random(11)
-    rows = [(i, rng.uniform(0.5, 1.0)) for i in range(500)]
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "k long, f double").repartition(9)
-    got = (
-        R.running_products(df, ["k"], "f", out_col="p")
-        .orderBy("k")
-        .collect()
-    )
-    acc = 1.0
-    for r, (k, f) in zip(got, sorted(rows)):
-        acc *= f
-        assert r["k"] == k
-        # grouping differs from the sequential fold -> ulp-level tolerance
-        assert m.isclose(r["p"], acc, rel_tol=1e-12)
-
-
 def test_km_curve_properties(spark, sf_dir):
     rows = (
         QUERIES["km_survival_session_duration"](spark, sf_dir)

@@ -215,95 +215,6 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_range_clustered_write_gives_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """write_range_clustered produces files whose [min,max] key ranges
-    are pairwise disjoint — the property parquet min/max pruning needs
-    to skip whole files for range predicates."""
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import write_range_clustered
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    out = str(tmp_path / "clustered")
-    write_range_clustered(orders, out, "o_totalprice", n_files=8)
-
-    back = spark.read.parquet(out)
-    per_file = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi"))
-        .collect()
-    )
-    assert len(per_file) >= 2  # actually split
-    ranges = sorted((r.lo, r.hi) for r in per_file)
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlap: ({lo1},{hi1}) vs ({lo2},{hi2})"
-    assert back.count() == orders.count()
-
-
-def test_range_clustered_scan_prunes_files(spark, sf_dir, tmp_path):
-    """A range predicate over the clustered layout reads fewer files
-    than exist: file-level min/max statistics actually prune."""
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import write_range_clustered
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    out = str(tmp_path / "clustered2")
-    write_range_clustered(orders, out, "o_totalprice", n_files=8)
-    back = spark.read.parquet(out)
-    lo = orders.agg(F.min("o_totalprice")).first()[0]
-    hi = orders.agg(F.max("o_totalprice")).first()[0]
-    cut = lo + (hi - lo) * 0.05  # bottom 5% → one or two files
-    narrow = back.filter(F.col("o_totalprice") <= cut)
-    touched = narrow.select(F.input_file_name()).distinct().count()
-    total = back.select(F.input_file_name()).distinct().count()
-    assert touched < total, f"no pruning: {touched}/{total} files"
-
-
-def test_zorder_write_prunes_files_on_both_dims(spark, sf_dir, tmp_path):
-    """Z-order clustering must give file-level min/max pruning on BOTH
-    interleaved keys (single-column clustering only prunes the sort
-    key): for a narrow range predicate on each dimension, the fraction
-    of files whose [min,max] overlap the predicate must be well under
-    the file count."""
-    import glob as _glob
-
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.sources import io as IO
-
-    li = Catalog(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey")
-    path = str(tmp_path / "zorder")
-    IO.write_zorder_clustered(li, path, "l_orderkey", "l_partkey", n_files=16)
-
-    files = _glob.glob(f"{path}/part-*.parquet")
-    assert len(files) >= 8
-
-    lo_o, hi_o, lo_p, hi_p = li.select(
-        F.min("l_orderkey"), F.max("l_orderkey"),
-        F.min("l_partkey"), F.max("l_partkey"),
-    ).first()
-
-    def overlapping(col, lo_q, hi_q):
-        n = 0
-        for f in files:
-            mn, mx = spark.read.parquet(f).select(F.min(col), F.max(col)).first()
-            if mx >= lo_q and mn <= hi_q:
-                n += 1
-        return n
-
-    # ~6% of each key range
-    span_o = (hi_o - lo_o) // 16 or 1
-    span_p = (hi_p - lo_p) // 16 or 1
-    hit_o = overlapping("l_orderkey", lo_o, lo_o + span_o)
-    hit_p = overlapping("l_partkey", lo_p, lo_p + span_p)
-    assert hit_o <= len(files) // 2, f"orderkey pruning too weak: {hit_o}/{len(files)}"
-    assert hit_p <= len(files) // 2, f"partkey pruning too weak: {hit_p}/{len(files)}"
-
-    # and the layout is lossless
-    back = spark.read.parquet(path)
-    assert back.count() == li.count()
-
-
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
     """Writing the fact partitioned by a join key and joining it
     against a selectively-filtered dim must plan a dynamicpruning
@@ -364,39 +275,3 @@ def test_join_strategy_hints_control_physical_join(spark, sf_dir):
     assert "SortMergeJoin" in plan(od.hint("merge"))
     assert "ShuffledHashJoin" in plan(od.hint("shuffle_hash"))
     assert "BroadcastHashJoin" in plan(od.hint("broadcast"))
-
-
-def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
-    """Two tables bucketed by their join keys with equal bucket counts
-    join WITHOUT any Exchange in the plan — the write-time shuffle is
-    amortized across every later co-located join (sources/io.py:
-    write_bucketed). Broadcast is disabled so the test exercises the
-    sort-merge path a 100 TB fact⋈fact join would take."""
-    from climate_anomaly_bigdata_pipeline_spark.sources.io import write_bucketed
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    write_bucketed(orders, "t_orders_b", "o_orderkey", 8)
-    write_bucketed(lineitem, "t_lineitem_b", "l_orderkey", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_orders_b").join(
-            spark.table("t_lineitem_b"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        expected = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        ).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")

@@ -36,34 +36,6 @@ def test_stream_sliding_matches_batch(spark, sf_dir):
     assert s == b
 
 
-def test_stream_static_anomaly_scoring_matches_batch(spark, sf_dir):
-    """Stream-static join parity: scoring the event stream against a
-    batch baseline yields exactly the batch join's anomaly set."""
-    from pyspark.sql import functions as F
-
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.streaming import windows as SW
-
-    ev = Catalog(spark, sf_dir).events
-    baseline = ev.groupBy("event_type").agg(
-        F.avg("value").alias("mean"), F.stddev_samp("value").alias("std")
-    )
-    stream = SW.read_events_stream(spark, sf_dir)
-    scored = SW.score_stream_against_baseline(stream, baseline)
-    got = SW.run_stream_to_memory(
-        scored.select("event_id", "z_score", "is_anomaly"),
-        "scored_stream",
-        output_mode="append",
-    )
-
-    batch = SW.score_stream_against_baseline(ev, baseline)
-    want = batch.select("event_id", "z_score", "is_anomaly")
-    assert got.count() == want.count()
-    assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
-    # threshold actually fires on this data
-    assert got.filter("is_anomaly").count() > 0
-
-
 def test_stream_session_window_matches_batch(spark, sf_dir):
     """Native session_window under readStream must merge gap-windows to
     the same sessions the batch groupBy produces (the query graph is
@@ -96,46 +68,6 @@ def test_stream_session_window_matches_batch(spark, sf_dir):
     )
     b = {tuple(r) for r in batch.collect()}
     assert s == b
-
-
-def test_stream_stream_followup_join_matches_batch(spark, sf_dir):
-    """Stream-stream interval join parity: both sides of the join
-    arrive as streams (same bounded source here), and the joined pairs
-    must equal the batch inequality join. Also proves the event-time
-    bound keeps the pair set finite — the condition state eviction
-    hangs on."""
-    from pyspark.sql import functions as F
-
-    from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-    from climate_anomaly_bigdata_pipeline_spark.streaming import windows as SW
-
-    mk = lambda: SW.read_events_stream(spark, sf_dir)
-    joined = SW.stream_stream_followup_join(mk(), mk(), within="1 hour")
-    got = SW.run_stream_to_memory(
-        joined.select("l_event_id", "r_event_id", "lag_seconds"),
-        "ss_join_stream",
-        output_mode="append",
-    )
-
-    ev = Catalog(spark, sf_dir).events.select("user_id", "event_id", "ts")
-    l = ev.select(F.col("user_id").alias("k"), F.col("event_id").alias("l_event_id"), F.col("ts").alias("l_ts"))
-    r = ev.select(F.col("user_id").alias("rk"), F.col("event_id").alias("r_event_id"), F.col("ts").alias("r_ts"))
-    want = (
-        l.join(
-            r,
-            (F.col("k") == F.col("rk"))
-            & (F.col("r_ts") > F.col("l_ts"))
-            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 1 hour")),
-        )
-        .select(
-            "l_event_id",
-            "r_event_id",
-            ((F.unix_micros("r_ts") - F.unix_micros("l_ts")) / 1_000_000.0).alias("lag_seconds"),
-        )
-    )
-    assert want.count() > 0
-    assert got.count() == want.count()
-    assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
 
 
 def test_rocksdb_state_store_matches_default_provider(spark, sf_dir, tmp_path):

@@ -5,6 +5,7 @@ subprocess because the in-process JVM already carries test configs."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -32,3 +33,21 @@ def test_engine_under_vanilla_driver_session():
         timeout=300,
     )
     assert "VANILLA_OK" in proc.stdout, proc.stdout + proc.stderr
+
+
+def test_python_udf_query_runs_outside_the_repo(tmp_path, sf_dir):
+    """Python workers import the package to run its UDFs; started from
+    another directory with no PYTHONPATH, they find it only through the
+    path ``get_spark`` hands them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "run_query.py"),
+         "phash_image_dedup", sf_dir, "-n", "1"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-4000:]

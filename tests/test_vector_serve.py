@@ -1,14 +1,10 @@
-"""Streaming ANN serving (streaming/vector_serve.py): the foreachBatch
-micro-batch server must (a) be EXACT when probing every cell, matching
-a numpy brute-force oracle, (b) produce across streamed micro-batches
-exactly the union of its per-batch results, and (c) actually prune to
-the probed cells when nprobe < n_centroids."""
+"""ANN batch serving (streaming/vector_serve.py): it must (a) be EXACT
+when probing every cell, matching a numpy brute-force oracle, and (b)
+actually prune to the probed cells when nprobe < n_centroids."""
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 from climate_anomaly_bigdata_pipeline_spark.operators.similarity import (
@@ -70,119 +66,3 @@ def test_partial_probe_only_scores_probed_cells(spark):
         # nprobe=1 probes exactly the query's home cell (the quantizer
         # is identical on both sides), so every neighbor shares it.
         assert cell_of[r.neighbor_id] == home[r.query_id]
-
-
-def test_streamed_batches_union_batch_serving(spark, tmp_path):
-    cents, assigned, qpdf, queries = _fixture(spark)
-    src = tmp_path / "qstream"
-    src.mkdir()
-    halves = [qpdf.iloc[:4], qpdf.iloc[4:]]
-    for i, half in enumerate(halves):
-        pq.write_table(
-            pa.table(
-                {
-                    "query_id": pa.array(half["query_id"], pa.int64()),
-                    "qvec": pa.array(
-                        [list(v) for v in half["qvec"]],
-                        pa.list_(pa.float64()),
-                    ),
-                }
-            ),
-            str(src / f"b{i}.parquet"),
-        )
-    stream = (
-        spark.readStream.schema("query_id long, qvec array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    sink = str(tmp_path / "sink")
-    q = VS.serve_ann_stream(
-        stream,
-        assigned,
-        cents,
-        sink_path=sink,
-        checkpoint_path=str(tmp_path / "ckpt"),
-        k=5,
-        nprobe=2,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.query_id, r.neighbor_id, r.rank, r.cosine)
-        for r in spark.read.parquet(sink).collect()
-    }
-    want = {
-        (r.query_id, r.neighbor_id, r.rank, r.cosine)
-        for r in VS.ann_serve_batch(
-            queries, assigned, cents, k=5, nprobe=2
-        ).collect()
-    }
-    assert got == want
-
-
-def test_restart_with_checkpoint_does_not_reserve_processed_batches(
-    spark, tmp_path
-):
-    """foreachBatch recovery contract: a restarted serving stream with
-    the same checkpoint resumes AFTER the batches it already committed
-    — the sink gains only the rows of files that arrived while it was
-    down, never duplicates of served batches."""
-    cents, assigned, qpdf, _ = _fixture(spark)
-    src = tmp_path / "qstream"
-    src.mkdir()
-
-    def _write(name, part):
-        pq.write_table(
-            pa.table(
-                {
-                    "query_id": pa.array(part["query_id"], pa.int64()),
-                    "qvec": pa.array(
-                        [list(v) for v in part["qvec"]],
-                        pa.list_(pa.float64()),
-                    ),
-                }
-            ),
-            str(src / name),
-        )
-
-    _write("b0.parquet", qpdf.iloc[:4])
-    stream_schema = "query_id long, qvec array<double>"
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _start():
-        stream = (
-            spark.readStream.schema(stream_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        return VS.serve_ann_stream(
-            stream, assigned, cents, sink_path=sink,
-            checkpoint_path=ckpt, k=5, nprobe=2,
-        )
-
-    q = _start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    first = spark.read.parquet(sink).count()
-
-    # New queries land while the server is down; restart from the
-    # same checkpoint.
-    _write("b1.parquet", qpdf.iloc[4:])
-    q = _start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(sink).collect()
-    served_twice = [
-        r for r in rows if r.query_id in set(qpdf.iloc[:4]["query_id"])
-    ]
-    # batch-0 queries appear exactly once (5 neighbors each), batch-1
-    # queries were served on restart.
-    assert len(served_twice) == first == 4 * 5
-    assert len(rows) == 8 * 5
