@@ -692,6 +692,63 @@ def rank_distribution(
     )
 
 
+def _range_scan(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    aggs: Sequence[Column],
+    n_parts: int | None,
+    pin_input: bool,
+) -> tuple[DataFrame, list]:
+    """Phase one of every distributed ordered scan below: range-partition
+    on the order key (parallel sampled exchange), tag each row with its
+    ``__pid``, pin the result, and collect ``aggs`` per partition — a
+    bounded collect of one row per non-empty partition, returned in
+    partition order. The caller folds those rows driver-side into
+    per-partition carry-ins (:func:`_by_pid`) and applies them to a
+    partition-LOCAL window over ``__pid``, so no stage funnels the data
+    through one task.
+
+    The partitioned input is pinned with ``localCheckpoint`` because
+    range boundaries are sampled: the collect and the caller's window
+    must see the SAME partitioning (at 100 TB use reliable
+    ``checkpoint`` — same contract). Range partitioning also samples
+    its input before the exchange, so an unpinned input subtree is
+    evaluated twice; ``pin_input`` pins it first, which pays when the
+    caller hands in an aggregate or pair expansion whose re-evaluation
+    costs more than one small block write. Results never
+    depend on the partitioning: callers require a total order."""
+    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    if pin_input:
+        df = df.localCheckpoint()
+    part = (
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    rows = part.groupBy("__pid").agg(*aggs).collect()
+    return part, sorted(rows, key=lambda r: r["__pid"])
+
+
+def _by_pid(carry: Mapping[int, object], vtype: str | None = None) -> Column:
+    """``carry[__pid]`` as one map literal; NULL for a partition whose
+    carry is absent or None. ``vtype`` casts each value to the input
+    column's type: a bare ``F.lit(Decimal)`` types as DECIMAL(38,18),
+    and least()/greatest() would then coerce a DECIMAL(38,0) input to
+    (38,18), silently nulling |x| >= 1e20. With no carry at all (an
+    empty input, or one non-empty partition) it is a typed NULL — an
+    empty ``create_map()`` is ``map<void,void>``, which the int
+    ``__pid`` cannot index."""
+    kv = [
+        x
+        for pid, v in carry.items()
+        if v is not None
+        for x in (F.lit(pid), F.lit(v) if vtype is None else F.lit(v).cast(vtype))
+    ]
+    if not kv:
+        return F.lit(None).cast(vtype or "long")
+    return F.create_map(*kv)[F.col("__pid")]
+
+
 def stable_global_index(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -703,70 +760,31 @@ def stable_global_index(
     """Dense 0-based global index in ``order_cols`` order WITHOUT the
     single-task bottleneck: ``row_number() OVER (ORDER BY ...)`` plans
     a global sort into ONE partition — the classic driver-killer at
-    scale. The distributed recipe is two-phase: range-partition on the
-    order key (parallel sampled exchange), count rows per partition
-    (tiny bounded collect, one row per partition), prefix-sum those
-    counts driver-side into per-partition offsets, then add a
-    partition-LOCAL row_number to the broadcast offset. Every stage is
-    parallel; the only driver data is n_partitions integers.
-
-    The partitioned input is pinned with ``localCheckpoint`` because
-    range boundaries are sampled: the count pass and the index pass
-    must see the SAME partitioning (at 100 TB use reliable
-    ``checkpoint`` — same contract). ``order_cols`` must be a total
-    order (include a unique tiebreak column) for the index to be
-    deterministic.
+    scale. The distributed recipe is two-phase (:func:`_range_scan`):
+    range-partition on the order key, count rows per partition,
+    prefix-sum those counts driver-side into per-partition offsets,
+    then add a partition-LOCAL row_number to the broadcast offset.
+    Every stage is parallel; the only driver data is n_partitions
+    integers. ``order_cols`` must be a total order (include a unique
+    tiebreak column) for the index to be deterministic.
 
     With ``return_total=True`` also returns the total row count,
     summed from the SAME per-partition counts collect — callers that
     need N (decile formulas, shares) get it with zero extra actions
-    instead of re-scanning via ``df.count()``.
+    instead of re-scanning via ``df.count()``. ``pin_input=False``
+    opts out of pinning the input when the caller already pinned it.
     """
-    from pyspark.sql import Window
-
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    # Range partitioning SAMPLES its input to pick boundaries, so an
-    # un-pinned input subtree is evaluated TWICE (sampling pass +
-    # exchange). Pinning the input first makes both read blocks —
-    # callers hand this operator aggregates and pair expansions whose
-    # re-evaluation costs far more than one small block write (guide
-    # §2.4). ``pin_input=False`` opts out when the caller already
-    # pinned. The index itself is partitioning-independent (the order
-    # is total), so results are unchanged.
-    if pin_input:
-        df = df.localCheckpoint()
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = part.groupBy("__pid").count().collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r["__pid"]):
+    count = F.count(F.lit(1)).alias("n")
+    part, rows = _range_scan(df, order_cols, [count], n_parts, pin_input)
+    offsets, acc = {}, 0
+    for r in rows:
         offsets[r["__pid"]] = acc
-        acc += r["count"]
-    off_expr = F.create_map(
-        *[F.lit(v) for kv in offsets.items() for v in kv]
-    )[F.col("__pid")]
+        acc += r["n"]
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     out = part.withColumn(
-        out_col, (off_expr + F.row_number().over(w) - 1).cast("long")
+        out_col, (_by_pid(offsets) + F.row_number().over(w) - 1).cast("long")
     ).drop("__pid")
     return (out, acc) if return_total else out
-
-
-def running_total(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    value_col: str,
-    out_col: str = "running_total",
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Global cumulative sum (inclusive prefix sum) in ``order_cols``
-    order WITHOUT the single-partition window — single-column wrapper
-    over :func:`running_totals` (see there for the recipe)."""
-    return running_totals(df, order_cols, [(value_col, out_col)], n_parts)
 
 
 def running_totals(
@@ -780,58 +798,38 @@ def running_totals(
     """Global cumulative sums (inclusive prefix sums) of SEVERAL value
     columns in one pass, in ``order_cols`` order, WITHOUT the
     single-partition window: the :func:`stable_global_index` recipe
-    generalized from counting rows to summing values — range-partition
-    on the order key, SUM each partition per value column (bounded
-    collect, one row per partition), prefix-sum the partition totals
+    generalized from counting rows to summing values — SUM each range
+    partition per value column, prefix-sum the partition totals
     driver-side into per-column offsets, then add a partition-LOCAL
     window sum to the broadcast offset. Sharing the one range
     partitioning across columns is what makes multi-ECDF statistics
     (KS, Cramér-von Mises) a single extra exchange instead of one per
-    distribution.
+    distribution; a column of literal 1s yields the 1-based row index
+    in the same pass.
 
     ``value_out`` is a sequence of ``(value_col, out_col)`` pairs; each
     value column should be integral (long) or DECIMAL so partial sums
-    are exact and the result is independent of partitioning; the same
-    ``localCheckpoint`` pin as stable_global_index keeps the count and
-    sum passes on one sampled range partitioning. ``order_cols`` must
-    be a total order for a deterministic result.
+    are exact and the result is independent of partitioning.
+    ``order_cols`` must be a total order for a deterministic result.
 
     With ``return_totals=True`` also returns the per-column grand
     totals, summed from the SAME per-partition collect — callers that
     need the denominators (shares, decile boundaries) get them with
     zero extra actions instead of re-scanning."""
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    # Same input-pin rationale as stable_global_index: don't evaluate
-    # the caller's subtree once for range-boundary sampling and again
-    # for the exchange.
-    if pin_input:
-        df = df.localCheckpoint()
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    totals = part.groupBy("__pid").agg(
-        *[F.sum(v).alias(f"__t_{i}") for i, (v, _) in enumerate(value_out)]
-    ).collect()
-    offsets: list[dict[int, int]] = [{} for _ in value_out]
-    accs = [0] * len(value_out)
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        for i in range(len(value_out)):
-            offsets[i][r["__pid"]] = accs[i]
-            accs[i] += r[f"__t_{i}"] or 0
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    sums = [F.sum(v).alias(f"__t_{i}") for i, (v, _) in enumerate(value_out)]
+    part, rows = _range_scan(df, order_cols, sums, n_parts, pin_input)
+    w = Window.partitionBy("__pid").orderBy(*order_cols)
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    totals = []
     for i, (value_col, out_col) in enumerate(value_out):
-        off_expr = F.create_map(
-            *[F.lit(v) for kv in offsets[i].items() for v in kv]
-        )[F.col("__pid")]
-        part = part.withColumn(out_col, off_expr + F.sum(value_col).over(w))
+        offsets, acc = {}, 0
+        for r in rows:
+            offsets[r["__pid"]] = acc
+            acc += r[f"__t_{i}"] or 0
+        totals.append(acc)
+        part = part.withColumn(out_col, _by_pid(offsets) + F.sum(value_col).over(w))
     out = part.drop("__pid")
-    return (out, accs) if return_totals else out
+    return (out, totals) if return_totals else out
 
 
 def global_lead(
@@ -846,8 +844,7 @@ def global_lead(
     take the partition-LOCAL lead, and patch each partition's last row
     with the FIRST value of the next non-empty partition — those
     firsts come from one bounded per-partition ``min(struct(order,
-    value))`` collect (n_partitions rows, the same posture as
-    :func:`stable_global_index`'s offsets). The last row overall gets
+    value))`` collect (:func:`_range_scan`). The last row overall gets
     NULL, as the window function would. ``order_cols`` must be a total
     order (equal keys land in one range partition, but their internal
     lead order would be ambiguous). NULL-safe: only a partition's true
@@ -860,36 +857,17 @@ def global_lead(
     sorted domain (Wasserstein-1's ∫|F_a−F_b| dx needs the NEXT
     distinct value's distance) at data sizes where the textbook
     ``Window.orderBy`` would funnel every row through one task."""
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    firsts = part.groupBy("__pid").agg(
-        F.min(F.struct(*order_cols, value_col)).alias("f")
-    ).collect()
-    nxt: dict[int, object] = {}
-    follow = None
-    for r in sorted(firsts, key=lambda r: r["__pid"], reverse=True):
+    first = F.min(F.struct(*order_cols, value_col)).alias("f")
+    part, rows = _range_scan(df, order_cols, [first], n_parts, pin_input=False)
+    nxt, follow = {}, None
+    for r in reversed(rows):
         nxt[r["__pid"]] = follow
         follow = r["f"][value_col]
     w = Window.partitionBy("__pid").orderBy(*order_cols)
-    vtype = dict(df.dtypes)[value_col]
-    if any(v is not None for v in nxt.values()):
-        nxt_expr = F.create_map(
-            *[
-                x
-                for pid, v in nxt.items()
-                if v is not None
-                for x in (F.lit(pid), F.lit(v).cast(vtype))
-            ]
-        )[F.col("__pid")]
-    else:  # single non-empty partition: no successor anywhere
-        nxt_expr = F.lit(None).cast(vtype)
     is_last = F.row_number().over(w) == F.count(F.lit(1)).over(
         Window.partitionBy("__pid")
     )
+    nxt_expr = _by_pid(nxt, dict(df.dtypes)[value_col])
     return part.withColumn(
         out_col,
         F.when(is_last, nxt_expr).otherwise(F.lead(value_col).over(w)),
@@ -906,49 +884,25 @@ def running_min(
     """Global running MINIMUM (inclusive prefix min) in ``order_cols``
     order without the single-partition window: min is associative and
     commutative, so the :func:`running_totals` recipe applies verbatim
-    with min in place of sum — range-partition on the order key, MIN
-    each partition (bounded collect), prefix-min the partition minima
-    driver-side into per-partition offsets, then ``least`` of the
-    partition-LOCAL window min and the broadcast offset (the first
-    partition has no offset: its local min stands alone). Exact for
-    any orderable type; used by drawdown/drift statistics
-    (Page-Hinkley's m_t − min_{i≤t} m_i)."""
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    minima = part.groupBy("__pid").agg(F.min(value_col).alias("__m")).collect()
-    offsets: dict[int, object] = {}
-    acc = None
-    for r in sorted(minima, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = acc  # min of all EARLIER partitions
-        acc = r["__m"] if acc is None else min(acc, r["__m"])
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = F.min(value_col).over(w)
-    keyed = {k: v for k, v in offsets.items() if v is not None}
-    if keyed:
-        # Cast each re-injected minimum to the INPUT column's dtype:
-        # a bare F.lit(Decimal) types as DECIMAL(38,18), and least()
-        # would then coerce a DECIMAL(38,0) input to (38,18) —
-        # silently nulling |x| >= 1e20 (ADVICE r9).
-        vtype = dict(df.dtypes)[value_col]
-        off_expr = F.create_map(
-            *[
-                x
-                for k, v in keyed.items()
-                for x in (F.lit(k), F.lit(v).cast(vtype))
-            ]
-        )[F.col("__pid")]
-        out_expr = F.least(local, F.coalesce(off_expr, local))
-    else:
-        out_expr = local
-    return part.withColumn(out_col, out_expr).drop("__pid")
+    with min in place of sum — MIN each range partition, prefix-min
+    the partition minima driver-side into per-partition carry-ins,
+    then ``least`` of the partition-LOCAL window min and the carry-in
+    (``least`` skips NULL, so the first partition's local min stands
+    alone). Exact for any orderable type; used by drawdown/drift
+    statistics (Page-Hinkley's m_t − min_{i≤t} m_i)."""
+    minimum = F.min(value_col).alias("m")
+    part, rows = _range_scan(df, order_cols, [minimum], n_parts, pin_input=False)
+    carry, best = {}, None
+    for r in rows:
+        carry[r["__pid"]] = best  # min of all EARLIER partitions
+        if r["m"] is not None and (best is None or r["m"] < best):
+            best = r["m"]
+    w = Window.partitionBy("__pid").orderBy(*order_cols)
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    carry_expr = _by_pid(carry, dict(df.dtypes)[value_col])
+    return part.withColumn(
+        out_col, F.least(F.min(value_col).over(w), carry_expr)
+    ).drop("__pid")
 
 
 def running_max_strict(
@@ -962,47 +916,24 @@ def running_max_strict(
     UNBOUNDED PRECEDING AND 1 PRECEDING)`` — the STRICT prefix max —
     WITHOUT the single-partition global window: the
     :func:`stable_global_index` recipe with max as the monoid.
-    Range-partition on the order key, collect one max per partition
-    (bounded), fold strict carry-ins driver-side (partition p's
-    carry = max over partitions < p), then ``greatest`` of the
-    carry-in and the partition-LOCAL strict-prefix window max. The
-    first row overall gets NULL, as the window function would
-    (``greatest`` skips NULLs and returns NULL only when both sides
-    are). This is the watermark primitive: the strict prefix max of
-    event time over ARRIVAL order is exactly the high-watermark each
-    row is judged late against."""
-    from pyspark.sql import Window
-
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    maxes = part.groupBy("__pid").agg(F.max(value_col).alias("m")).collect()
-    carry: dict[int, object] = {}
-    best = None
-    for r in sorted(maxes, key=lambda r: r["__pid"]):
+    Collect one max per range partition, fold strict carry-ins
+    driver-side (partition p's carry = max over partitions < p), then
+    ``greatest`` of the carry-in and the partition-LOCAL strict-prefix
+    window max. The first row overall gets NULL, as the window
+    function would (``greatest`` skips NULLs and returns NULL only when
+    both sides are). This is the watermark primitive: the strict prefix
+    max of event time over ARRIVAL order is exactly the high-watermark
+    each row is judged late against."""
+    maximum = F.max(value_col).alias("m")
+    part, rows = _range_scan(df, order_cols, [maximum], n_parts, pin_input=False)
+    carry, best = {}, None
+    for r in rows:
         carry[r["__pid"]] = best
         if r["m"] is not None and (best is None or r["m"] > best):
             best = r["m"]
-    vtype = dict(zip(part.schema.names, part.schema.fields))[
-        value_col
-    ].dataType.simpleString()
-    # NULL carries (first non-empty partition) are typed casts so the
-    # map literal resolves to map<int, value-type> even when mixed
-    carry_expr = F.create_map(
-        *[
-            c
-            for pid, v in carry.items()
-            for c in (F.lit(pid), F.lit(v).cast(vtype))
-        ]
-    )[F.col("__pid")]
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = Window.partitionBy("__pid").orderBy(*order_cols)
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    carry_expr = _by_pid(carry, dict(df.dtypes)[value_col])
     return part.withColumn(
         out_col, F.greatest(F.max(value_col).over(w), carry_expr)
     ).drop("__pid")

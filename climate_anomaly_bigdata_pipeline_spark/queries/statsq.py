@@ -602,7 +602,7 @@ def mannwhitney_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: U is computed WITHOUT global ranks — per-value arm counts
     (one shuffle), then U_a = Σ_v a(v)·(B_less(v) + b(v)/2) where the
-    cumulative B_less comes from :func:`running_total`'s distributed
+    cumulative B_less comes from :func:`running_totals`' distributed
     prefix sum (range partition + bounded per-partition totals collect
     + local window; never a single-partition ORDER BY window). Every
     U term is an exact multiple of 0.5 below 2^53, so the sum is
@@ -610,7 +610,7 @@ def mannwhitney_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation order symbol-for-symbol.
     """
     from climate_anomaly_bigdata_pipeline_spark.operators.relational import (
-        running_total,
+        running_totals,
     )
 
     ev = Catalog(spark, sf_dir).events.filter(
@@ -624,7 +624,7 @@ def mannwhitney_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("b_cnt"),
     )
-    c = running_total(g, ["value"], "b_cnt", out_col="b_cum").withColumn(
+    c = running_totals(g, ["value"], [("b_cnt", "b_cum")]).withColumn(
         "b_less", F.col("b_cum") - F.col("b_cnt")
     )
     t = F.col("a_cnt") + F.col("b_cnt")
@@ -1776,8 +1776,8 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the classic S_i = P_i − i·T/n is replaced by the integer
 # D_i = n·P_i − i·T = 18-digit-safe in DECIMAL(38,0)/HUGEINT; the
 # change point is argmax |D_i| (ties → earliest day). The prefix sum is
-# the distributed running_totals recipe and the day index comes from
-# stable_global_index — never a single-partition window over the fact;
+# the distributed running_totals recipe, which sums a column of 1s for
+# the day index in the same pass — never a single-partition window;
 # the series itself is calendar-bounded, the argmax is a 1-row ordered
 # limit.
 _CUSUM_ORACLE = """
@@ -1821,22 +1821,24 @@ def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the very end."""
     from climate_anomaly_bigdata_pipeline_spark.operators.relational import (
         running_totals,
-        stable_global_index,
     )
 
     import climate_anomaly_bigdata_pipeline_spark.functions as FN
 
     li = Catalog(spark, sf_dir).lineitem
-    # Pin the fact-sized daily aggregation once — it feeds the global
-    # index (range sampling), the prefix sums, and the (n, total)
-    # aggregate (guide §2.4).
+    # Pin the fact-sized daily aggregation once — it feeds the range
+    # scan (sampling and exchange) and the (n, total) aggregate.
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         (F.round(F.sum(FN.revenue_expr()), 2) * 100)
         .cast("long")
         .alias("c")
     ).localCheckpoint()
-    idx = stable_global_index(daily, ["d"], out_col="i0", pin_input=False)
-    pre = running_totals(idx, ["d"], [("c", "pre")], pin_input=False)
+    pre = running_totals(
+        daily.withColumn("i", F.lit(1)),
+        ["d"],
+        [("c", "pre"), ("i", "i")],
+        pin_input=False,
+    )
     tot = daily.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("c").cast("decimal(38,0)").alias("total"),
@@ -1846,7 +1848,7 @@ def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         "n",
         (
-            dec("n") * dec("pre") - (dec("i0") + F.lit(1)) * dec("total")
+            dec("n") * dec("pre") - dec("i") * dec("total")
         ).alias("di"),
     )
     return (
@@ -2653,8 +2655,7 @@ def page_hinkley_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange yields index AND cents prefix — and return_totals hands
     # back (T, n) driver-side, so the mean-cleared deviation is a
     # row-local expression with python-literal totals: no separate
-    # stable_global_index pass, no broadcast join. (Same fusion
-    # opportunity exists in cusum_changepoint_daily.)
+    # stable_global_index pass, no broadcast join.
     pre, (total, n_days) = running_totals(
         daily.withColumn("__one", F.lit(1)),
         ["d"],
@@ -3138,7 +3139,6 @@ def isotonic_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     per start day) and one grouped max per end day."""
     from climate_anomaly_bigdata_pipeline_spark.operators.relational import (
         running_totals,
-        stable_global_index,
     )
 
     import climate_anomaly_bigdata_pipeline_spark.functions as FN
@@ -3147,17 +3147,17 @@ def isotonic_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         (F.round(F.sum(FN.revenue_expr()), 2) * 100).cast("long").alias("c")
     )
-    idx = stable_global_index(daily, ["d"], out_col="i0")
-    # pin_input=False: idx is a cheap window over stable_global_index's
-    # own checkpointed range partitioning — a second pin would copy it
-    # (ADVICE r13 chained-site note).
-    pre = running_totals(idx, ["d"], [("c", "pre")], pin_input=False)
+    # The 1-based day index is the prefix sum of a literal 1: one range
+    # scan yields index and cents prefix together.
+    pre = running_totals(
+        daily.withColumn("i", F.lit(1)), ["d"], [("c", "pre"), ("i", "i")]
+    )
     a = pre.select(
-        (F.col("i0") + 1).alias("j"),
+        F.col("i").alias("j"),
         (F.col("pre") - F.col("c")).alias("pj"),
     )
     b = pre.select(
-        (F.col("i0") + 1).alias("k"),
+        F.col("i").alias("k"),
         F.col("d").alias("dk"),
         F.col("c").alias("ck"),
         F.col("pre").alias("pk"),

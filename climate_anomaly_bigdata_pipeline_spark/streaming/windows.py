@@ -15,12 +15,13 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet-backed events stream with the same timestamp repairs as
-    the batch Catalog (catalog.Catalog._normalize).
+    the batch Catalog (:meth:`Catalog._normalize`).
 
     The file source needs an explicit schema, and the testdata's
     physical ``ts`` type has varied across generator versions
@@ -33,16 +34,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     # The streaming file source wants a directory; select just the
     # events file from the scale-factor dir via pathGlobFilter.
-    raw = (
+    return Catalog._normalize(
+        "events",
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
 
 
 def windowed_counts_stream(

@@ -12,6 +12,7 @@ from climate_anomaly_bigdata_pipeline_spark.session import get_spark
 _TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(_TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(_TESTDATA, "sf0.01")
+SF_SCALE = os.path.join(_TESTDATA, "sf0.1")
 
 
 @pytest.fixture(scope="session")
@@ -37,3 +38,8 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def sf_scale_dir() -> str:
+    return SF_SCALE

@@ -13,9 +13,6 @@ from climate_anomaly_bigdata_pipeline_spark.operators import similarity as SIM
 from climate_anomaly_bigdata_pipeline_spark.queries import similarityq as SQ
 from climate_anomaly_bigdata_pipeline_spark.sources import artifacts as ART
 
-SF = "/root/testdata/sf0.001"
-
-
 @pytest.fixture
 def fresh_store(tmp_path, monkeypatch):
     """Empty artifact dir + cleared process memos, restored after."""
@@ -53,9 +50,9 @@ def test_missing_artifact_loads_none(tmp_path):
 
 
 def test_second_session_reloads_ivf_without_training(
-    spark, fresh_store, monkeypatch
+    spark, sf_dir, fresh_store, monkeypatch
 ):
-    trained = SQ._ivf_codebook(spark, SF)  # session 1: trains + persists
+    trained = SQ._ivf_codebook(spark, sf_dir)  # session 1: trains + persists
     assert os.listdir(fresh_store)
 
     # "Session 2": fresh memo; training is forbidden.
@@ -65,21 +62,21 @@ def test_second_session_reloads_ivf_without_training(
         raise AssertionError("reload path must not train")
 
     monkeypatch.setattr(SIM, "train_ivf_codebook", boom)
-    reloaded = SQ._ivf_codebook(spark, SF)
+    reloaded = SQ._ivf_codebook(spark, sf_dir)
     assert reloaded == trained
 
 
 def test_second_session_reloads_pq_without_training(
-    spark, fresh_store, monkeypatch
+    spark, sf_dir, fresh_store, monkeypatch
 ):
-    trained = SQ._pq_books(spark, SF)
+    trained = SQ._pq_books(spark, sf_dir)
     SQ._PQ_BOOKS.clear()
 
     def boom(*a, **k):
         raise AssertionError("reload path must not train")
 
     monkeypatch.setattr(SIM, "train_pq_codebooks", boom)
-    reloaded = SQ._pq_books(spark, SF)
+    reloaded = SQ._pq_books(spark, sf_dir)
     assert reloaded == trained
 
 
@@ -97,7 +94,9 @@ def test_corpus_fingerprint_binds_artifact_to_data(tmp_path):
     assert ART.ivf_path(str(d1), 16, 2, 4) != ART.ivf_path(str(d1), 8, 2, 4)
 
 
-def test_corpus_rewritten_in_place_is_served_anew(spark, fresh_store, tmp_path):
+def test_corpus_rewritten_in_place_is_served_anew(
+    spark, sf_dir, fresh_store, tmp_path
+):
     """The in-process memos follow the corpus' file listing, not its
     path: rewriting ``embeddings.parquet`` in place (400 → 500 rows,
     so 20 → 22 centroids) must not serve the old count or codebook."""
@@ -107,7 +106,7 @@ def test_corpus_rewritten_in_place_is_served_anew(spark, fresh_store, tmp_path):
 
     d = tmp_path / "corpus"
     d.mkdir()
-    full = pq.read_table(os.path.join(SF, "embeddings.parquet"))
+    full = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
     for rows in (400, full.num_rows):
         pq.write_table(full.slice(0, rows), str(d / "embeddings.parquet"))
         ok, msg = run_check(spark, "ivf_ann_topk", str(d))

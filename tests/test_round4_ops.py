@@ -203,14 +203,14 @@ def test_segmented_edit_pairs_equal_brute_pairs(spark):
         assert s == b, (nseg, m, sorted(b - s)[:5], sorted(s - b)[:5])
 
 
-def test_segmented_candidates_prune_vs_quadratic(spark):
+def test_segmented_candidates_prune_vs_quadratic(spark, sf_scale_dir):
     """On the sf0.1 customer table the (4 segments, 2 matches) block
     cuts candidates ~5x below the (nation, mktsegment)-block quadratic
     — and >=5x counting only pairs the verifier then rejects, which is
     the work the second blocking key exists to remove."""
     from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 
-    cust = Catalog(spark, "/root/testdata/sf0.1").customer.select(
+    cust = Catalog(spark, sf_scale_dir).customer.select(
         "c_nationkey", "c_mktsegment", "c_custkey", "c_name"
     )
     quad = (

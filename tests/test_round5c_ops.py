@@ -1,4 +1,4 @@
-"""Round-5 additions: distributed prefix sum (running_total), the
+"""Round-5 additions: distributed prefix sum (running_totals), the
 daily-revenue ACF, and the Mann-Whitney U test."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from climate_anomaly_bigdata_pipeline_spark.operators.relational import running_total
+from climate_anomaly_bigdata_pipeline_spark.operators.relational import running_totals
 from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
 from tests.oracle_utils import run_check
 
@@ -27,7 +27,7 @@ def test_running_total_matches_window_cumsum(spark):
     df = spark.createDataFrame(rows, "k long, v long").repartition(13)
     got = {
         r["k"]: r["rt"]
-        for r in running_total(df, ["k"], "v", out_col="rt").collect()
+        for r in running_totals(df, ["k"], [("v", "rt")]).collect()
     }
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     want = {
@@ -46,7 +46,7 @@ def test_running_total_no_single_partition_window(spark):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
-    out = running_total(df, ["k"], "v")
+    out = running_totals(df, ["k"], [("v", "running_total")])
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")

@@ -67,7 +67,7 @@ def test_cooccurrence_oversize_drop_is_explicit_opt_in(spark):
         G.cooccurrence_edges(df, "g", "it", on_oversize="alert")
 
 
-def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark):
+def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark, sf_scale_dir):
     """The kcore_copurchase oracle unrolls a FIXED number of peeling
     rounds (``_KCORE_ROUNDS``) while the engine iterates to fixpoint.
     Assert the engine's measured depth at sf0.1 (10× the driver's
@@ -78,7 +78,7 @@ def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark):
         _KCORE_ROUNDS,
     )
 
-    li = Catalog(spark, "/root/testdata/sf0.1").lineitem
+    li = Catalog(spark, sf_scale_dir).lineitem
     edges = G.cooccurrence_edges(
         li.select("l_orderkey", "l_partkey").distinct(),
         "l_orderkey",

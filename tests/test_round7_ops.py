@@ -112,10 +112,10 @@ def test_top_duplicated_windows(spark):
     assert all(r["n_occ"] >= 2 for r in rows)
 
 
-def test_substring_query_plan_is_linear(spark):
+def test_substring_query_plan_is_linear(spark, sf_dir):
     """The registered query must not plan a cartesian/nested-loop join:
     window counting is hash-keyed end to end."""
-    plan = plan_of(QUERIES["exact_substring_dup_stats"](spark, "/root/testdata/sf0.001"))
+    plan = plan_of(QUERIES["exact_substring_dup_stats"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -456,7 +456,7 @@ def test_cvm_identical_samples_is_zero(spark):
 # ---- bipartite node-id separation (zero-key regression) ----------------------------
 
 
-def test_purchase_graph_union_is_duplicate_free(spark):
+def test_purchase_graph_union_is_duplicate_free(spark, sf_dir):
     """Keys start at 0, so supplier ids must be shifted before negation:
     a bare -suppkey maps supplier 0 onto customer 0 and (when customer
     0 buys from supplier 0) mints a self-loop the symmetrizing UNION
@@ -464,7 +464,7 @@ def test_purchase_graph_union_is_duplicate_free(spark):
     caught a 2887-vs-2888 edge mismatch before this fix."""
     from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 
-    c = Catalog(spark, "/root/testdata/sf0.001")
+    c = Catalog(spark, sf_dir)
     base = (
         c.orders.join(c.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
         .select(

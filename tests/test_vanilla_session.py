@@ -9,9 +9,13 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# argv: the repo root to import the engine from, then the testdata dir.
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+repo, sf_dir = sys.argv[1:3]
+sys.path.insert(0, repo)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .appName("vanilla").config("spark.ui.enabled", "false").getOrCreate())
@@ -19,15 +23,15 @@ assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # genuine vanilla
 import __spark_entry__ as E
 assert E.entry(spark).count() > 0
 qs = E.queries()
-assert qs["zscore_anomaly"](spark, "/root/testdata/sf0.001").count() > 0
-assert qs["parse_delimited_roundtrip"](spark, "/root/testdata/sf0.001").count() > 0
+assert qs["zscore_anomaly"](spark, sf_dir).count() > 0
+assert qs["parse_delimited_roundtrip"](spark, sf_dir).count() > 0
 print("VANILLA_OK")
 """
 
 
-def test_engine_under_vanilla_driver_session():
+def test_engine_under_vanilla_driver_session(sf_dir):
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, REPO, sf_dir],
         capture_output=True,
         text=True,
         timeout=300,
@@ -39,10 +43,9 @@ def test_python_udf_query_runs_outside_the_repo(tmp_path, sf_dir):
     """Python workers import the package to run its UDFs; started from
     another directory with no PYTHONPATH, they find it only through the
     path ``get_spark`` hands them."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "run_query.py"),
+        [sys.executable, os.path.join(REPO, "tools", "run_query.py"),
          "phash_image_dedup", sf_dir, "-n", "1"],
         cwd=tmp_path,
         env=env,

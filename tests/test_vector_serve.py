@@ -12,12 +12,11 @@ from climate_anomaly_bigdata_pipeline_spark.operators.similarity import (
 )
 from climate_anomaly_bigdata_pipeline_spark.streaming import vector_serve as VS
 
-SF = "/root/testdata/sf0.01"
 N_CENTROIDS = 4
 
 
-def _fixture(spark):
-    emb = Catalog(spark, SF).embeddings
+def _fixture(spark, sf):
+    emb = Catalog(spark, sf).embeddings
     cents = train_ivf_codebook(emb, N_CENTROIDS, 0)
     assigned = VS.assign_corpus_cells(emb, cents).localCheckpoint()
     qpdf = (
@@ -44,18 +43,18 @@ def _brute_topk(emb_pdf, qpdf, k):
     return want
 
 
-def test_full_probe_serving_is_exact(spark):
-    cents, assigned, qpdf, queries = _fixture(spark)
+def test_full_probe_serving_is_exact(spark, sf_oracle_dir):
+    cents, assigned, qpdf, queries = _fixture(spark, sf_oracle_dir)
     out = VS.ann_serve_batch(
         queries, assigned, cents, k=5, nprobe=N_CENTROIDS
     )
     got = {(r.query_id, r.neighbor_id, r.rank) for r in out.collect()}
-    emb_pdf = Catalog(spark, SF).embeddings.toPandas()
+    emb_pdf = Catalog(spark, sf_oracle_dir).embeddings.toPandas()
     assert got == _brute_topk(emb_pdf, qpdf, k=5)
 
 
-def test_partial_probe_only_scores_probed_cells(spark):
-    cents, assigned, qpdf, queries = _fixture(spark)
+def test_partial_probe_only_scores_probed_cells(spark, sf_oracle_dir):
+    cents, assigned, qpdf, queries = _fixture(spark, sf_oracle_dir)
     out = VS.ann_serve_batch(queries, assigned, cents, k=5, nprobe=1)
     cell_of = {
         r[0]: r.cell
