@@ -168,7 +168,7 @@ def zscore_exact(
         cond = " AND ".join(
             f"{ident(c)} <=> {ident(k)}" for c, k in zip(partition_cols, keys)
         )
-        joined = df.join(hint(keyed), F.expr(cond)).drop(*keys)
+        joined = df.join(hint(keyed), F.expr(cond))
     else:
         joined = df.crossJoin(hint(df.agg(*aggs)))
     s1, s2, n = (f"CAST({c} AS DOUBLE)" for c in (c_s1, c_s2, c_n))
@@ -177,7 +177,11 @@ def zscore_exact(
         f"CASE WHEN {n} < 2 OR {std} = 0 THEN 0.0D"
         f" ELSE round(({x} - {s1} / {n}) / {std}, {int(scale)}) END"
     )
-    return joined.withColumn(z_name, F.expr(z)).drop(c_s1, c_s2, c_n)
+    # One select keeps the input's columns (z replaces a same-named one
+    # in place, as withColumn would) and drops the keys and moments.
+    z_col = f"{z} AS {ident(z_name)}"
+    out = [z_col if c == z_name else ident(c) for c in df.columns]
+    return joined.selectExpr(*out, *([] if z_name in df.columns else [z_col]))
 
 
 def classify_extremes(

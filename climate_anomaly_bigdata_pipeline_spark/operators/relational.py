@@ -822,12 +822,19 @@ def running_totals(
     w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     totals = []
     for i, (value_col, out_col) in enumerate(value_out):
-        offsets, acc = {}, 0
+        # The carry stays None until an earlier partition has a non-NULL
+        # value. A row before its own partition's first non-NULL value
+        # then gets the carried sum, or NULL (as the window) when there
+        # is none.
+        offsets, acc = {}, None
         for r in rows:
             offsets[r["__pid"]] = acc
-            acc += r[f"__t_{i}"] or 0
-        totals.append(acc)
-        part = part.withColumn(out_col, _by_pid(offsets) + F.sum(value_col).over(w))
+            t = r[f"__t_{i}"]
+            if t is not None:
+                acc = t if acc is None else acc + t
+        totals.append(0 if acc is None else acc)
+        offset, local = _by_pid(offsets), F.sum(value_col).over(w)
+        part = part.withColumn(out_col, F.coalesce(offset + local, offset, local))
     out = part.drop("__pid")
     return (out, totals) if return_totals else out
 

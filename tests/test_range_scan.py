@@ -1,7 +1,8 @@
 """The five distributed ordered scans in ``operators/relational.py`` on
-the smallest inputs: empty and one row, with more range partitions than
-rows. Each must equal its single-partition ``Window.orderBy`` form — in
-particular, no carry-in at all must still plan and run."""
+the smallest inputs (empty and one row, with more range partitions than
+rows) and on NULL runs that cross range partitions. Each must equal its
+single-partition ``Window.orderBy`` form — in particular, no carry-in at
+all must still plan and run."""
 
 from __future__ import annotations
 
@@ -41,10 +42,20 @@ _SCANS = {
 }
 
 
-@pytest.mark.parametrize("n_rows", [0, 1])
+# input name -> (k, v) rows; the NULL runs put a range partition's
+# first rows before its first non-NULL value
+_INPUTS = {
+    "0": [],
+    "1": [(0, 10)],
+    "trailing_nulls": [(k, k % 7 if k < 50 else None) for k in range(100)],
+    "leading_nulls": [(k, None if k < 50 else k % 7) for k in range(100)],
+}
+
+
+@pytest.mark.parametrize("rows", sorted(_INPUTS))
 @pytest.mark.parametrize("op", sorted(_SCANS))
-def test_ordered_scan_matches_window_on_tiny_input(spark, op, n_rows):
-    df = spark.createDataFrame([(i, 10 - i) for i in range(n_rows)], "k long, v long")
+def test_ordered_scan_matches_window_on_tiny_input(spark, op, rows):
+    df = spark.createDataFrame(_INPUTS[rows], "k long, v long")
     scan, ref = _SCANS[op]
     got = scan(df).select("k", "out").orderBy("k").collect()
     want = df.select("k", ref().alias("out")).orderBy("k").collect()
