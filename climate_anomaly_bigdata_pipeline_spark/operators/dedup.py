@@ -752,111 +752,20 @@ def connected_components(
     pairs: DataFrame,
     src_col: str = "id1",
     dst_col: str = "id2",
-    max_iter: int = 20,
+    max_iter: int = 50,
     local_max_edges: int | None = None,
 ) -> DataFrame:
     """Connected components over a candidate-pair graph — the step that
     turns near-dup PAIRS into dedup CLUSTERS (keep one doc per
-    component). Iterative min-label propagation: every node repeatedly
-    adopts the smallest label among itself and its neighbors until a
-    fixpoint; output is (node, cluster_id = component minimum).
+    component). Returns (node, cluster_id = component min) for every
+    node appearing in ``pairs``; a self-pair (x, x) puts an isolated x
+    in its own cluster.
 
-    Convergence takes O(graph diameter) rounds — near-dup components
-    are near-cliques, so 2-4 in practice; ``max_iter`` bounds
-    pathological chains. Each round is one shuffle join + one grouped
-    min (label table is 2 columns — node payloads never loop).
-    The per-round convergence check is a bounded count action, and the
-    label lineage is truncated with ``localCheckpoint`` so the plan
-    doesn't grow by one join per round (the classic iterative-Spark
-    trap); at 100 TB swap in reliable ``checkpoint``. For graphs whose
-    DIAMETER is large (chains, meshes — not the near-clique dedup
-    case), use :func:`connected_components_star`, which converges in
-    O(log^2 n) rounds regardless of diameter.
-
-    ``local_max_edges`` (default 8M edges)
-    gates a driver-local endgame: when the deduped edge set is under
-    the ceiling, labels come from one Arrow collect + numpy min-label
-    (see :func:`_cc_local_labels`) instead of the shuffle rounds —
-    identical integer labels, broadcast-join-sized driver memory.
-    """
-    # Orient + distinct FIRST and checkpoint that half-sized set: the
-    # old bidirectional union referenced the caller's pair subtree
-    # twice inside the one checkpoint job (union branches get no CSE),
-    # so expensive pair generators ran twice (r14, guide §2.4). The
-    # bidirectional set is re-derived from the checkpointed blocks;
-    # duplicate self-loop rows are harmless under the grouped MIN.
-    half = (
-        pairs.select(
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("src"),
-            F.least(F.col(src_col), F.col(dst_col)).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    if local_max_edges is None:
-        local_max_edges = _CC_LOCAL_MAX_EDGES
-    if _cc_local_eligible(half, "src", local_max_edges):
-        return _cc_local_labels(half, "src", "dst")
-
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("cluster_id", F.col("node"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("src"), F.col("cluster_id").alias("src_label")
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("src_label").alias("nbr_label"))
-        )
-        # Fold the convergence flag into the same projection that
-        # computes the new label: the old label is already on the row,
-        # so no second join is needed to detect change — one join +
-        # one bounded count per round instead of two joins + a count.
-        new_label = F.least(
-            F.col("cluster_id"),
-            F.coalesce(F.col("nbr_label"), F.col("cluster_id")),
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                new_label.alias("cluster_id"),
-                (new_label < F.col("cluster_id")).alias("__changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
-        labels = new_labels.drop("__changed")
-        if changed == 0:
-            break
-    return labels.select(F.col("node"), F.col("cluster_id"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src_col: str = "id1",
-    dst_col: str = "id2",
-    max_iter: int = 50,
-    local_max_edges: int | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same contract as :func:`connected_components`
-    ((node, cluster_id = component min) for every node appearing in
-    ``pairs``), but convergence is O(log^2 n) ROUNDS INDEPENDENT OF
-    GRAPH DIAMETER, where plain min-label propagation needs O(diameter)
-    rounds and silently truncates a long chain at ``max_iter``.
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): convergence is
+    O(log^2 n) ROUNDS INDEPENDENT OF GRAPH DIAMETER, where min-label
+    propagation needs one round per hop, so long chains (sequential
+    name suffixes, event chains) cost no more than near-cliques.
 
     Per round, on the current edge set E (kept oriented large->small,
     distinct, self-loop-free):
@@ -882,20 +791,18 @@ def connected_components_star(
     both steps (the center is below every leaf, so large-star re-emits
     the star and small-star re-points leaves at the same minimum).
     That's ONE bounded intersect probe, run every second round since
-    star convergence takes several rounds anyway.
-
-    Used by the dedup pipeline when cluster shapes are unknown;
-    property-tested equal to the propagation variant on random graphs
-    and on a 10k-node chain where propagation's default cap truncates
-    (``tests/test_round4_ops.py``).
+    star convergence takes several rounds anyway. A loop that has not
+    converged after ``max_iter`` rounds raises instead of returning
+    truncated labels.
 
     ``local_max_edges`` (default 8M edges)
     gates the driver-local endgame (:func:`_cc_local_labels`): under
     the ceiling, one Arrow collect + numpy min-label/pointer-doubling
     replaces the star rounds entirely — the Kiveris-family papers'
     own "finish in memory once the graph is small" move, with
-    identical integer labels. Above the ceiling the distributed
-    O(log² n)-round loop below runs unchanged.
+    identical integer labels. Above the ceiling (or with
+    ``local_max_edges=0``) the distributed O(log² n)-round loop below
+    runs.
     """
     # Checkpoint the oriented-distinct pair set BEFORE dropping
     # self-loops, so the node set can be derived from the checkpointed
@@ -968,10 +875,9 @@ def connected_components_star(
     else:
         # Truncated output would be silently WRONG (labels one or more
         # hops from the component minimum, possibly contradictory rows
-        # per node) — unlike plain propagation there is no partial-
-        # progress interpretation, so refuse loudly.
+        # per node), so refuse loudly.
         raise RuntimeError(
-            f"connected_components_star did not converge within "
+            f"connected_components did not converge within "
             f"max_iter={max_iter} rounds; raise max_iter "
             f"(O(log^2 n) rounds suffice for any graph)"
         )

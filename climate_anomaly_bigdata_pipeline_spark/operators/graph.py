@@ -19,7 +19,7 @@ An external SQL oracle reproduces the iterations verbatim
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -30,30 +30,15 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 3,
     broadcast_ranks: bool = False,
-    tol: float | None = None,
-    dangling: str = "none",
 ) -> DataFrame:
-    """PageRank over a directed edge list, up to ``n_iter`` synchronous
+    """PageRank over a directed edge list, ``n_iter`` synchronous
     iterations from the uniform start: r₀ = 1/N and
 
-        r_{t+1}(v) = (1−d)/N + d · (Σ_{u→v} r_t(u) / outdeg(u) [+ m_t/N]).
+        r_{t+1}(v) = (1−d)/N + d · Σ_{u→v} r_t(u) / outdeg(u).
 
-    ``dangling`` picks the treatment of nodes with no out-edges:
-
-    * ``"none"`` (default): a dangling node absorbs rank (total mass
-      < 1) — callers add reverse edges or a sink node when they want
-      conservation. This is the oracle-mirrored mode.
-    * ``"redistribute"``: the stochastic-matrix variant — each round
-      the dangling mass m_t (DECIMAL sum of dangling nodes' ranks, so
-      order-independent) is spread uniformly, the ``m_t/N`` term
-      above. Total mass stays 1 every round; one bounded scalar
-      collect per round (same cost class as the tol check).
-
-    ``tol`` (optional) adds convergence termination: iteration stops
-    early once the L1 delta Σ|r_{t+1} − r_t| drops below ``tol``.
-    Costs one keyed self-join + scalar collect per round — a driver
-    round-trip a fixed-iteration loop doesn't pay, which is why it's
-    opt-in; ``n_iter`` remains the hard cap either way.
+    A node with no out-edges absorbs rank (total mass < 1); callers add
+    reverse edges or a sink node when they want conservation. The
+    fixed iteration count is what the oracle mirrors.
 
     Deterministic: the contribution sum is DECIMAL
     (order-independent), every other step is double arithmetic on
@@ -70,8 +55,6 @@ def pagerank(
     ~10M nodes per 160 MB); the shuffle-join default is the path that
     scales to arbitrary |V|.
     """
-    if dangling not in ("none", "redistribute"):
-        raise ValueError(f"dangling must be 'none'|'redistribute': {dangling}")
     # The 2-column edge list is consumed three times before the loop
     # (out-degree build, degree-join probe, node set); each un-pinned
     # consumption replays the caller's edge construction — for the
@@ -103,17 +86,10 @@ def pagerank(
     n = nodes.count()
     if n == 0:  # empty edge list: empty rank table, not a ZeroDivision
         return nodes.withColumn("rank", F.lit(0.0))
-    if dangling == "redistribute":
-        # Node-level dangling flag, computed once (nodes absent from
-        # the out-degree table).
-        dang = nodes.join(
-            deg.withColumnRenamed("src", "node"), "node", "left_anti"
-        ).localCheckpoint()
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
     for _ in range(n_iter):
-        prev = ranks
         r = ranks.withColumnRenamed("node", "src")
         if broadcast_ranks:
             r = F.broadcast(r)
@@ -128,36 +104,18 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        extra = 0.0
-        if dangling == "redistribute":
-            row = (
-                dang.join(ranks, "node")
-                .agg(F.sum(F.col("rank").cast("decimal(30,18)")).alias("m"))
-                .first()
-            )
-            m = float(row["m"]) if row["m"] is not None else 0.0
-            extra = damping * m / n
         ranks = (
             nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",
                 (
-                    F.lit(base + extra)
+                    F.lit(base)
                     + F.lit(damping)
                     * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
                 ).alias("rank"),
             )
             .localCheckpoint(eager=False)
         )
-        if tol is not None:
-            delta = (
-                ranks.withColumnRenamed("rank", "r_new")
-                .join(prev.withColumnRenamed("rank", "r_old"), "node")
-                .agg(F.sum(F.abs(F.col("r_new") - F.col("r_old"))).alias("d"))
-                .first()["d"]
-            )
-            if delta is not None and delta < tol:
-                break
     return ranks
 
 
@@ -167,7 +125,6 @@ def cooccurrence_edges(
     item_col: str,
     min_support: int = 2,
     max_group_size: int | None = 100_000,
-    on_oversize: str = "error",
 ) -> DataFrame:
     """Weighted co-occurrence edge list: ``(u, v, w)`` where u < v are
     items sharing a group and ``w`` counts the shared groups, kept at
@@ -182,61 +139,33 @@ def cooccurrence_edges(
     pair structs in a single task — must not OOM an executor. Pass
     ``None`` to disable (only when the group domain is known-bounded).
 
-    No silent caps: ``on_oversize`` picks what happens when the cap
-    would engage, evaluated inside the normal pass (no extra job):
-
-    - ``"error"`` (default): fail the job via a plan-embedded
-      ``raise_error`` — the assert-not-engaged contract the production
-      graph queries rely on (results are never quietly incomplete).
-    - ``"observe"``: drop over-cap groups but count them with
-      ``DataFrame.observe``; the ``Observation`` is exposed as
-      ``result.oversize_observation`` (metric key
-      ``oversize_groups_dropped``) so callers can alert after the
-      action completes.
-    - ``"drop"``: documented silent drop — explicit opt-in only.
+    The cap is never silent: an over-cap group fails the job through a
+    plan-embedded ``raise_error``, evaluated inside the normal pass (no
+    extra job), so results are never quietly incomplete.
     """
-    if on_oversize not in ("error", "observe", "drop"):
-        raise ValueError(f"on_oversize: {on_oversize!r}")
     sets = (
         df.select(F.col(group_col).alias("g"), F.col(item_col).alias("it"))
         .groupBy("g")
         .agg(F.array_sort(F.collect_set("it")).alias("items"))
         .where(F.size("items") >= 2)
     )
-    observation = None
     if max_group_size is not None:
-        if on_oversize == "error":
-            # The filter predicate is evaluated for every group during
-            # the normal pass; an over-cap group detonates the job
-            # instead of silently vanishing from the edge list.
-            sets = sets.where(
-                F.when(
-                    F.size("items") > max_group_size,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "cooccurrence_edges: group exceeds "
-                                f"max_group_size={max_group_size}: "
-                            ),
-                            F.col("g").cast("string"),
-                            F.lit(" size="),
-                            F.size("items").cast("string"),
-                        )
-                    ).cast("boolean"),
-                ).otherwise(F.lit(True))
-            )
-        else:
-            if on_oversize == "observe":
-                from pyspark.sql import Observation
-
-                observation = Observation()
-                sets = sets.observe(
-                    observation,
-                    F.sum(
-                        (F.size("items") > max_group_size).cast("long")
-                    ).alias("oversize_groups_dropped"),
-                )
-            sets = sets.where(F.size("items") <= max_group_size)
+        sets = sets.where(
+            F.when(
+                F.size("items") > max_group_size,
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "cooccurrence_edges: group exceeds "
+                            f"max_group_size={max_group_size}: "
+                        ),
+                        F.col("g").cast("string"),
+                        F.lit(" size="),
+                        F.size("items").cast("string"),
+                    )
+                ).cast("boolean"),
+            ).otherwise(F.lit(True))
+        )
     pairs = sets.select(
         F.explode(
             F.flatten(
@@ -254,27 +183,17 @@ def cooccurrence_edges(
             )
         ).alias("p")
     ).select("p.u", "p.v")
-    out = (
+    return (
         pairs.groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= min_support)
     )
-    if observation is not None:
-        out.oversize_observation = observation
-    return out
 
 
-def oriented_triangles(
-    edges: DataFrame, u_col: str = "u", v_col: str = "v"
-) -> tuple[DataFrame, DataFrame]:
-    """Enumerate each triangle of an undirected edge list exactly once
-    via the degree-ordered orientation (the triangles_per_node core,
-    extracted in round 11 so edge-support can reuse it): returns
-    ``(tri, canonical)`` where ``tri`` has one row (a, b, c) per
-    triangle and ``canonical`` is the deduped self-loop-free u<v edge
-    set the triangles were found over. See triangles_per_node for the
-    complexity argument."""
-    e = (
+def _canonical_edges(edges: DataFrame, u_col: str, v_col: str) -> DataFrame:
+    """The deduped, self-loop-free u<v edge set of an undirected edge
+    list, lineage-truncated (every caller reads it more than once)."""
+    return (
         edges.select(
             F.least(u_col, v_col).alias("u"),
             F.greatest(u_col, v_col).alias("v"),
@@ -283,16 +202,22 @@ def oriented_triangles(
         .distinct()
         .localCheckpoint()
     )
+
+
+def _orient(e: DataFrame) -> DataFrame:
+    """Orient a canonical edge set by (degree, id): each edge becomes
+    ``(s, d)`` from the lower endpoint to the higher one. Acyclic, so
+    every triangle of ``e`` or of any subgraph of it has exactly one
+    node with both of its edges pointing out."""
     deg = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    # Orient by (deg, id): lower endpoint → higher endpoint.
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    oriented = (
+    return (
         e.join(du, "u")
         .join(dv, "v")
         .select(
@@ -307,6 +232,12 @@ def oriented_triangles(
         .select(F.col("o.s").alias("s"), F.col("o.d").alias("d"))
         .localCheckpoint()
     )
+
+
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """One row ``(a, b, c)`` per triangle of an oriented edge set: the
+    wedges a→b, a→c (b < c) closed by an edge between b and c in
+    either direction."""
     w1 = oriented.select(F.col("s").alias("a"), F.col("d").alias("b"))
     w2 = oriented.select(F.col("s").alias("a"), F.col("d").alias("c"))
     wedges = w1.join(w2, "a").where(F.col("b") < F.col("c"))
@@ -314,8 +245,43 @@ def oriented_triangles(
     closing = oriented.select(F.col("s").alias("b"), F.col("d").alias("c")).union(
         oriented.select(F.col("d").alias("b"), F.col("s").alias("c"))
     )
-    tri = wedges.join(closing, ["b", "c"])
-    return tri.select("a", "b", "c"), e
+    return wedges.join(closing, ["b", "c"]).select("a", "b", "c")
+
+
+def _edge_support(tri: DataFrame) -> DataFrame:
+    """``(u, v, support)``: the number of triangles of ``tri`` on each
+    canonical u<v edge that lies in at least one."""
+    tri_edges = tri.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.least("a", "b").alias("u"),
+                    F.greatest("a", "b").alias("v"),
+                ),
+                F.struct(
+                    F.least("a", "c").alias("u"),
+                    F.greatest("a", "c").alias("v"),
+                ),
+                F.struct(
+                    F.least("b", "c").alias("u"),
+                    F.greatest("b", "c").alias("v"),
+                ),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    return tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
+
+
+def oriented_triangles(
+    edges: DataFrame, u_col: str = "u", v_col: str = "v"
+) -> tuple[DataFrame, DataFrame]:
+    """Enumerate each triangle of an undirected edge list exactly once
+    via the degree-ordered orientation: returns ``(tri, canonical)``
+    where ``tri`` has one row (a, b, c) per triangle and ``canonical``
+    is the deduped self-loop-free u<v edge set the triangles were found
+    over. See triangles_per_node for the complexity argument."""
+    e = _canonical_edges(edges, u_col, v_col)
+    return _triangles(_orient(e)), e
 
 
 def triangles_per_node(
@@ -359,27 +325,7 @@ def triangle_support_per_edge(
     — same O(m^1.5) wedge bound and all-equi-join shape as
     triangles_per_node."""
     tri, canonical = oriented_triangles(edges, u_col, v_col)
-    tri_edges = tri.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.least("a", "b").alias("u"),
-                    F.greatest("a", "b").alias("v"),
-                ),
-                F.struct(
-                    F.least("a", "c").alias("u"),
-                    F.greatest("a", "c").alias("v"),
-                ),
-                F.struct(
-                    F.least("b", "c").alias("u"),
-                    F.greatest("b", "c").alias("v"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    sup = tri_edges.groupBy("u", "v").agg(
-        F.count(F.lit(1)).alias("support")
-    )
+    sup = _edge_support(tri)
     return canonical.join(sup, ["u", "v"], "left").select(
         "u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support")
     )
@@ -492,7 +438,6 @@ def k_core(
 def adamic_adar(
     edges: DataFrame,
     max_neighbor_degree: int | None = None,
-    on_overcap: str = "error",
 ) -> DataFrame:
     """Adamic-Adar link-prediction scores for all non-adjacent pairs:
     ``(u, v, common_neighbors, aa_score)`` with
@@ -510,24 +455,16 @@ def adamic_adar(
     detonates it quadratically. ``max_neighbor_degree`` bounds the
     blow-up by dropping SHARED-NEIGHBOR roles above the cap (each
     contributes ≤ 1/ln(cap) per pair, so high-degree hubs carry the
-    least per-pair signal — the standard mitigation). Like
-    :func:`cooccurrence_edges`, the cap is never silent:
-
-    - ``"error"`` (default): a plan-embedded ``raise_error`` fails the
-      job if any neighbor exceeds the cap — the assert-not-engaged
-      contract for queries whose oracle mirrors the cap.
-    - ``"observe"``: drop over-cap wedge centers but count the wedges
-      that vanish with ``DataFrame.observe``; exposed as
-      ``result.overcap_observation`` (metric key
-      ``capped_wedges_dropped`` = Σ_{deg(w)>cap} C(deg(w), 2)).
-    - ``"drop"``: documented silent drop — explicit opt-in only.
+    least per-pair signal — the standard mitigation). The cap is never
+    silent: the wedges it drops are counted with ``DataFrame.observe``,
+    exposed as ``result.overcap_observation`` (metric key
+    ``capped_wedges_dropped`` = Σ_{deg(w)>cap} C(deg(w), 2); None when
+    no cap is set).
 
     Float parity (for cross-engine oracles): the per-pair score folds
     cnt/ln(deg) over the degree-sorted (deg, cnt) list in pinned order
     and rounds to 6 decimals to absorb ln() ulp differences.
     """
-    if on_overcap not in ("error", "observe", "drop"):
-        raise ValueError(f"on_overcap: {on_overcap!r}")
     edges = edges.select("u", "v").localCheckpoint()  # adjacency ×2 + anti-join
     adj = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
@@ -536,42 +473,21 @@ def adamic_adar(
     observation = None
     if max_neighbor_degree is not None:
         cap = int(max_neighbor_degree)
-        if on_overcap == "error":
-            deg = deg.where(
+        observation = Observation()
+        deg = deg.observe(
+            observation,
+            F.sum(
                 F.when(
                     F.col("k") > cap,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "adamic_adar: neighbor degree exceeds "
-                                f"max_neighbor_degree={cap}: node="
-                            ),
-                            F.col("node").cast("string"),
-                            F.lit(" deg="),
-                            F.col("k").cast("string"),
-                        )
-                    ).cast("boolean"),
-                ).otherwise(F.lit(True))
-            )
-        else:
-            if on_overcap == "observe":
-                from pyspark.sql import Observation
-
-                observation = Observation()
-                deg = deg.observe(
-                    observation,
-                    F.sum(
-                        F.when(
-                            F.col("k") > cap,
-                            F.col("k") * (F.col("k") - 1) / 2,
-                        ).otherwise(F.lit(0)).cast("long")
-                    ).alias("capped_wedges_dropped"),
-                )
-            # dropping the DEGREE row removes the node only in its
-            # wedge-center (shared-neighbor) role; it still appears as
-            # an endpoint of other wedges, which is the semantics the
-            # oracle mirror (WHERE k <= cap in the degree CTE) has.
-            deg = deg.where(F.col("k") <= cap)
+                    F.col("k") * (F.col("k") - 1) / 2,
+                ).otherwise(F.lit(0)).cast("long")
+            ).alias("capped_wedges_dropped"),
+        )
+        # dropping the DEGREE row removes the node only in its
+        # wedge-center (shared-neighbor) role; it still appears as
+        # an endpoint of other wedges, which is the semantics the
+        # oracle mirror (WHERE k <= cap in the degree CTE) has.
+        deg = deg.where(F.col("k") <= cap)
     adjd = adj.join(
         deg.select(F.col("node").alias("nbr"), F.col("k").alias("kw")),
         "nbr",
@@ -681,15 +597,6 @@ def ktruss_decomposition(
     an un-truncated peel replays every prior round's triangle join
     per action, going quadratic in rounds.
     """
-    e = (
-        edges.select(
-            F.least(u_col, v_col).alias("u"),
-            F.greatest(u_col, v_col).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
     # Orient ONCE by the initial graph's (degree, id) order and reuse
     # the orientation for every peel round: any acyclic orientation
     # enumerates each triangle of any SUBGRAPH exactly once, and the
@@ -698,76 +605,22 @@ def ktruss_decomposition(
     # round (the triangle_support_per_edge path) re-derives degrees,
     # re-canonicalizes, and double-checkpoints every round — measured
     # ~2x the whole peel's cost at sf1.
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    cur = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("d")),
-            )
-            .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("d")))
-            .alias("o")
-        )
-        .select(F.col("o.s").alias("s"), F.col("o.d").alias("d"))
-        .localCheckpoint()
-    )
+    cur = _orient(_canonical_edges(edges, u_col, v_col))
     n = cur.count()
     out: list[tuple[int, int, int]] = []
     for k in range(3, k_max + 1):
         for _ in range(max_rounds):
             if n == 0:
                 break
-            w1 = cur.select(F.col("s").alias("a"), F.col("d").alias("b"))
-            w2 = cur.select(F.col("s").alias("a"), F.col("d").alias("c"))
-            wedges = w1.join(w2, "a").where(F.col("b") < F.col("c"))
-            closing = cur.select(
-                F.col("s").alias("b"), F.col("d").alias("c")
-            ).union(cur.select(F.col("d").alias("b"), F.col("s").alias("c")))
-            tri = wedges.join(closing, ["b", "c"]).select("a", "b", "c")
-            tri_edges = tri.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.least("a", "b").alias("s"),
-                            F.greatest("a", "b").alias("d"),
-                        ),
-                        F.struct(
-                            F.least("a", "c").alias("s"),
-                            F.greatest("a", "c").alias("d"),
-                        ),
-                        F.struct(
-                            F.least("b", "c").alias("s"),
-                            F.greatest("b", "c").alias("d"),
-                        ),
-                    )
-                ).alias("t")
-            ).select("t.s", "t.d")
-            sup = tri_edges.groupBy("s", "d").agg(
-                F.count(F.lit(1)).alias("support")
-            )
+            sup = _edge_support(_triangles(cur))
             # an oriented edge (s, d) has s < d OR s > d depending on
-            # the degree rule; canonical support rows are (min, max),
+            # the degree rule; support rows are canonical (min, max),
             # so probe both orders with one keyed join on the
             # canonical pair
             keep = (
-                cur.withColumn("cs", F.least("s", "d"))
-                .withColumn("cd", F.greatest("s", "d"))
-                .join(
-                    sup.withColumnRenamed("s", "cs").withColumnRenamed(
-                        "d", "cd"
-                    ),
-                    ["cs", "cd"],
-                )
+                cur.withColumn("u", F.least("s", "d"))
+                .withColumn("v", F.greatest("s", "d"))
+                .join(sup, ["u", "v"])
                 .filter(F.col("support") >= k - 2)
                 .select("s", "d")
                 .localCheckpoint()

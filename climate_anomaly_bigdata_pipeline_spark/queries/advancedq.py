@@ -1054,11 +1054,7 @@ def adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = G.cooccurrence_edges(
         li, "l_orderkey", "l_partkey", min_support=2
     ).drop("w")
-    sc = G.adamic_adar(
-        edges,
-        max_neighbor_degree=_AA_DEGREE_CAP,
-        on_overcap="observe",
-    )
+    sc = G.adamic_adar(edges, max_neighbor_degree=_AA_DEGREE_CAP)
     out = (
         sc.select(
             F.col("u").alias("part_u"),

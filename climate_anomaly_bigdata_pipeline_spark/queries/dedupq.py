@@ -375,9 +375,8 @@ GROUP BY node
 def dedup_clusters_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The candidates->clusters step that completes the dedup pipeline:
     every 4th embedding appears three times (original + two copies);
-    brute cosine>=0.99 pairs feed iterative min-label propagation
-    (connected components), assigning each member its component-minimum
-    cluster_id — downstream, keep one row per cluster. The oracle walks
+    brute cosine>=0.99 pairs feed connected components, assigning each
+    member its component-minimum cluster_id — downstream, keep one row per cluster. The oracle walks
     the same graph with a recursive CTE."""
     emb = Catalog(spark, sf_dir).embeddings.filter(F.col("vec_id") % 4 == 0)
     corpus = (
@@ -673,12 +672,11 @@ def entity_resolution_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quadratic oracle is unchanged. Candidate count at sf0.1 drops
     902k -> 185k (4.9x; 5.7x on non-matching pairs).
 
-    Components come from the large-star/small-star variant: sequential
-    name suffixes chain ("...0041" ~ "...0042" ~ "...0043"), giving the
-    similarity graph a ~12-hop diameter at sf0.1 — min-label
-    propagation needs one round per hop (measured 12 rounds, 9.6 s)
-    where star CC converges diameter-independently (identical labels,
-    5.2 s)."""
+    Sequential name suffixes chain ("...0041" ~ "...0042" ~ "...0043"),
+    giving the similarity graph a ~12-hop diameter at sf0.1; the
+    large-star/small-star rounds of ``connected_components`` converge
+    independently of that diameter (min-label propagation measured 12
+    rounds, 9.6 s, against 5.2 s for star CC with identical labels)."""
     cust = Catalog(spark, sf_dir).customer
     pairs = DD.edit_distance_pairs_segmented(
         cust.select("c_nationkey", "c_mktsegment", "c_custkey", "c_name"),
@@ -689,7 +687,7 @@ def entity_resolution_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_segments=4,
         min_matches=2,
     )
-    labels = DD.connected_components_star(pairs, "id1", "id2").withColumnRenamed(
+    labels = DD.connected_components(pairs, "id1", "id2").withColumnRenamed(
         "node", "c_custkey"
     )
     out = cust.select("c_custkey").join(labels, "c_custkey", "left")
@@ -716,9 +714,8 @@ def chain_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components on a LONG-CHAIN graph: each user's events
     are linked consecutively in (ts, event_id) order, giving path
     graphs ~67 hops deep at sf0.01 — the adversarial diameter case for
-    min-label propagation, whose default 20-round cap silently
-    truncates such chains. Labels come from
-    ``connected_components_star`` (Kiveris et al. SoCC'14): alternating
+    min-label propagation, which needs one round per hop. Labels come
+    from ``connected_components`` (Kiveris et al. SoCC'14): alternating
     large-star/small-star halves path lengths every round, so
     convergence is O(log^2 n) rounds INDEPENDENT of diameter — the
     100 TB answer for web-graph-shaped dedup clusters. The oracle
@@ -733,7 +730,7 @@ def chain_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev_id").isNotNull())
         .select(F.col("prev_id").alias("id1"), F.col("event_id").alias("id2"))
     )
-    labels = DD.connected_components_star(edges, max_iter=50)
+    labels = DD.connected_components(edges, max_iter=50)
     out = ev.select("event_id").join(
         labels.withColumnRenamed("node", "event_id"), "event_id", "left"
     )

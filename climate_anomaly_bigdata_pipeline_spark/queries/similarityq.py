@@ -125,16 +125,18 @@ _MEMO_LOCK = threading.Lock()
 
 
 def _corpus_memo(memo: OrderedDict, spark: SparkSession, sf_dir: str, build):
-    """``build()`` for the corpus under ``sf_dir``, memoized in ``memo``
-    under the embeddings table's ``(file, size, mtime)`` listing (the
-    key of the catalog's table cache), so a corpus rewritten in place
-    is built anew; ``memo`` keeps at most ``_MAX_CORPORA`` entries."""
+    """``build(key)`` for the corpus under ``sf_dir``, memoized in
+    ``memo`` under ``key``, the embeddings table's ``(file, size,
+    mtime)`` listing (the key of the catalog's table cache), so a corpus
+    rewritten in place is built anew; ``build`` keys its artifact file
+    by the same listing. ``memo`` keeps at most ``_MAX_CORPORA``
+    entries."""
     key = Catalog(spark, sf_dir).fingerprint("embeddings")
     with _MEMO_LOCK:
         if key in memo:
             memo.move_to_end(key)
             return memo[key]
-    value = build()
+    value = build(key)
     with _MEMO_LOCK:
         memo[key] = value
         while len(memo) > _MAX_CORPORA:
@@ -332,9 +334,9 @@ _CODEBOOKS: OrderedDict = OrderedDict()
 
 
 def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
-    def build() -> list[tuple[int, list[float]]]:
+    def build(key: tuple) -> list[tuple[int, list[float]]]:
         nc = _n_centroids(spark, sf_dir)
-        path = ART.ivf_path(sf_dir, nc, _TRAIN_ITERS, _TRAIN_SAMPLE_MOD)
+        path = ART.ivf_path(key, nc, _TRAIN_ITERS, _TRAIN_SAMPLE_MOD)
         book = ART.load_ivf(path)
         if book is None:
             emb = Catalog(spark, sf_dir).embeddings
@@ -725,8 +727,8 @@ _PQ_BOOKS: OrderedDict = OrderedDict()
 
 
 def _pq_books(spark: SparkSession, sf_dir: str) -> "SIM.PQCodebooks":
-    def build() -> "SIM.PQCodebooks":
-        path = ART.pq_path(sf_dir, _PQ_M, _PQ_K, _PQ_ITERS, _TRAIN_SAMPLE_MOD)
+    def build(key: tuple) -> "SIM.PQCodebooks":
+        path = ART.pq_path(key, _PQ_M, _PQ_K, _PQ_ITERS, _TRAIN_SAMPLE_MOD)
         books = ART.load_pq(path)
         if books is None:
             emb = Catalog(spark, sf_dir).embeddings

@@ -13,10 +13,12 @@ shape within one session; this module extends it across sessions:
 * later sessions → loaded with pyarrow (zero Spark jobs, zero
   training passes over the corpus).
 
-Keys bind the artifact to corpus + recipe: the sf_dir path, the
-training hyperparameters, and the size+mtime of the corpus'
-``embeddings.parquet`` (a regenerated corpus invalidates the cache
-and retrains — stale artifacts are never served).
+Keys bind the artifact to corpus + recipe: a hash of the embeddings
+table's ``(file, size, mtime)`` listing (``Catalog.fingerprint``, the
+same key the in-process memo uses) plus the training hyperparameters.
+A regenerated corpus, a part file rewritten in place or a corpus on
+any Hadoop file system therefore gets a new key and retrains — stale
+artifacts are never served.
 
 The artifacts are deliberately stored in the same long format the
 DuckDB oracles emit (``cid/pos/val`` and ``sub/code/pos/val``): the
@@ -51,22 +53,9 @@ def artifact_dir() -> str:
     return d
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Corpus identity = path + embeddings file size/mtime (cheap, no
-    scan). A regenerated corpus gets a new fingerprint → retrain."""
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(emb)
-        sig = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = sf_dir
-    return hashlib.md5(sig.encode()).hexdigest()[:16]
-
-
-def _path(kind: str, sf_dir: str, params: str) -> str:
-    return os.path.join(
-        artifact_dir(), f"{kind}_{_corpus_fingerprint(sf_dir)}_{params}.parquet"
-    )
+def _path(kind: str, corpus_key: tuple, params: str) -> str:
+    digest = hashlib.md5(repr(corpus_key).encode()).hexdigest()[:16]
+    return os.path.join(artifact_dir(), f"{kind}_{digest}_{params}.parquet")
 
 
 def _atomic_write(table: pa.Table, path: str) -> None:
@@ -85,8 +74,8 @@ def _atomic_write(table: pa.Table, path: str) -> None:
 # ---- IVF coarse codebook ----------------------------------------------------
 
 
-def ivf_path(sf_dir: str, n_centroids: int, n_iters: int, sample_mod) -> str:
-    return _path("ivf", sf_dir, f"c{n_centroids}_i{n_iters}_s{sample_mod}")
+def ivf_path(corpus_key: tuple, n_centroids: int, n_iters: int, sample_mod) -> str:
+    return _path("ivf", corpus_key, f"c{n_centroids}_i{n_iters}_s{sample_mod}")
 
 
 def save_ivf(codebook: IvfCodebook, path: str) -> None:
@@ -124,8 +113,8 @@ def load_ivf(path: str) -> IvfCodebook | None:
 # ---- PQ per-subspace codebooks ----------------------------------------------
 
 
-def pq_path(sf_dir: str, m: int, k: int, n_iters: int, sample_mod) -> str:
-    return _path("pq", sf_dir, f"m{m}_k{k}_i{n_iters}_s{sample_mod}")
+def pq_path(corpus_key: tuple, m: int, k: int, n_iters: int, sample_mod) -> str:
+    return _path("pq", corpus_key, f"m{m}_k{k}_i{n_iters}_s{sample_mod}")
 
 
 def save_pq(books: PQCodebooks, path: str) -> None:

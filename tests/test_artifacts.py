@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 from climate_anomaly_bigdata_pipeline_spark.operators import similarity as SIM
 from climate_anomaly_bigdata_pipeline_spark.queries import similarityq as SQ
 from climate_anomaly_bigdata_pipeline_spark.sources import artifacts as ART
@@ -80,18 +81,55 @@ def test_second_session_reloads_pq_without_training(
     assert reloaded == trained
 
 
-def test_corpus_fingerprint_binds_artifact_to_data(tmp_path):
-    """A regenerated corpus (different embeddings size/mtime) must key
-    to a different artifact path — stale codebooks are never served."""
+def test_corpus_fingerprint_binds_artifact_to_data(spark, tmp_path):
+    """The artifact path follows the corpus' file listing: a different
+    corpus (different embeddings size/mtime) keys to a different
+    artifact path, the same listing to the same path."""
     d1, d2 = tmp_path / "sfA", tmp_path / "sfB"
     for d, payload in ((d1, b"x" * 10), (d2, b"y" * 20)):
         d.mkdir()
         (d / "embeddings.parquet").write_bytes(payload)
-    p1 = ART.ivf_path(str(d1), 16, 2, 4)
-    p2 = ART.ivf_path(str(d2), 16, 2, 4)
-    assert p1 != p2
+    k1 = Catalog(spark, str(d1)).fingerprint("embeddings")
+    k2 = Catalog(spark, str(d2)).fingerprint("embeddings")
+    assert ART.ivf_path(k1, 16, 2, 4) != ART.ivf_path(k2, 16, 2, 4)
+    assert ART.ivf_path(k1, 16, 2, 4) == ART.ivf_path(
+        Catalog(spark, str(d1)).fingerprint("embeddings"), 16, 2, 4
+    )
     # Same corpus, different hyperparameters → different artifact.
-    assert ART.ivf_path(str(d1), 16, 2, 4) != ART.ivf_path(str(d1), 8, 2, 4)
+    assert ART.ivf_path(k1, 16, 2, 4) != ART.ivf_path(k1, 8, 2, 4)
+    assert ART.pq_path(k1, 8, 16, 1, 4) != ART.pq_path(k2, 8, 16, 1, 4)
+
+
+def test_directory_corpus_rewritten_in_place_retrains_codebook(
+    spark, sf_dir, fresh_store, tmp_path
+):
+    """A directory-form embeddings table whose part file is rewritten in
+    place (same name, same row count, so the same centroid count) must
+    not be served the codebook trained on the old rows: the directory's
+    own size and mtime do not change, its listing does."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "corpus"
+    part = d / "embeddings.parquet" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    full = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    pq.write_table(full.slice(0, 100), str(part))
+    old = SQ._ivf_codebook(spark, str(d))
+
+    pq.write_table(full.slice(100, 100), str(part))
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+    new = SQ._ivf_codebook(spark, str(d))
+
+    want = SIM.train_ivf_codebook(
+        Catalog(spark, str(d)).embeddings,
+        len(old),
+        SQ._TRAIN_ITERS,
+        sample_mod=SQ._TRAIN_SAMPLE_MOD,
+    )
+    assert new == want
+    assert new != old
+    assert len([f for f in os.listdir(fresh_store) if f.startswith("ivf_")]) == 2
 
 
 def test_corpus_rewritten_in_place_is_served_anew(
@@ -121,5 +159,5 @@ def test_corpus_memo_stays_bounded(spark, tmp_path):
         d = tmp_path / f"corpus{i}"
         d.mkdir()
         (d / "embeddings.parquet").write_bytes(b"x")
-        assert SQ._corpus_memo(memo, spark, str(d), lambda: i) == i
+        assert SQ._corpus_memo(memo, spark, str(d), lambda key: i) == i
     assert len(memo) == SQ._MAX_CORPORA

@@ -290,7 +290,7 @@ def test_star_cc_round_plan_no_cartesian(spark):
     edges = spark.range(1000).select(
         F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
     )
-    out = D.connected_components_star(edges, max_iter=50)
+    out = D.connected_components(edges, max_iter=50)
     plan = plan_of(out)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

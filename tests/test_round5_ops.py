@@ -1,6 +1,5 @@
-"""Round-5 additions: PageRank convergence/dangling-mass variants,
-AQE skew-join evidence, and the bucketed iterative-loop demonstration
-(VERDICT r4 items 6-8)."""
+"""Round-5 additions: AQE skew-join evidence and the bucketed
+iterative-loop demonstration (VERDICT r4 items 6-8)."""
 
 from __future__ import annotations
 
@@ -8,10 +7,8 @@ import contextlib
 import io
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
-from climate_anomaly_bigdata_pipeline_spark.operators import graph as G
 from climate_anomaly_bigdata_pipeline_spark.operators import relational as R
 
 
@@ -20,88 +17,6 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-# ---- PageRank: reference parity, dangling mass, tol termination -------------
-
-
-def _ref_pagerank(edges, d=0.85, iters=3, dangling="none", tol=None):
-    """Closed-form reference: the same recurrence in plain Python."""
-    nodes = sorted({u for u, _ in edges} | {v for _, v in edges})
-    n = len(nodes)
-    out: dict = {}
-    for u, _ in edges:
-        out[u] = out.get(u, 0) + 1
-    r = {x: 1.0 / n for x in nodes}
-    for _ in range(iters):
-        contrib = {x: 0.0 for x in nodes}
-        for u, v in edges:
-            contrib[v] += r[u] / out[u]
-        m = (
-            sum(r[x] for x in nodes if x not in out)
-            if dangling == "redistribute"
-            else 0.0
-        )
-        new = {
-            x: (1 - d) / n + d * (contrib[x] + m / n)
-            for x in nodes
-        }
-        delta = sum(abs(new[x] - r[x]) for x in nodes)
-        r = new
-        if tol is not None and delta < tol:
-            break
-    return r
-
-
-# 1→2→3→4 (4 dangling), plus 1→3, 2→4, and an isolated-ish 5→1.
-_EDGES = [(1, 2), (2, 3), (3, 4), (1, 3), (2, 4), (5, 1)]
-
-
-def _spark_ranks(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r["node"]: r["rank"] for r in G.pagerank(df, **kw).collect()
-    }
-
-
-@pytest.mark.parametrize("dangling", ["none", "redistribute"])
-def test_pagerank_matches_python_reference(spark, dangling):
-    got = _spark_ranks(spark, _EDGES, n_iter=4, dangling=dangling)
-    want = _ref_pagerank(_EDGES, iters=4, dangling=dangling)
-    assert set(got) == set(want)
-    for x in want:
-        assert abs(got[x] - want[x]) < 1e-12, (x, got[x], want[x])
-
-
-def test_pagerank_redistribute_conserves_mass(spark):
-    got = _spark_ranks(spark, _EDGES, n_iter=6, dangling="redistribute")
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-    # default mode leaks mass through the dangling node 4
-    leaky = _spark_ranks(spark, _EDGES, n_iter=6)
-    assert sum(leaky.values()) < 1.0 - 1e-3
-
-
-def test_pagerank_tol_stops_early(spark):
-    # tol large enough that round 1's delta already clears it: the
-    # result must equal the 1-iteration reference, not the 10-iteration
-    # one (proves the break executes).
-    got = _spark_ranks(spark, _EDGES, n_iter=10, tol=10.0)
-    want1 = _ref_pagerank(_EDGES, iters=1)
-    want10 = _ref_pagerank(_EDGES, iters=10)
-    for x in want1:
-        assert abs(got[x] - want1[x]) < 1e-12
-    assert any(abs(want1[x] - want10[x]) > 1e-6 for x in want1)
-
-
-def test_pagerank_tol_converged_fixed_point(spark):
-    got = _spark_ranks(
-        spark, _EDGES, n_iter=100, tol=1e-12, dangling="redistribute"
-    )
-    want = _ref_pagerank(
-        _EDGES, iters=100, dangling="redistribute", tol=1e-12
-    )
-    for x in want:
-        assert abs(got[x] - want[x]) < 1e-9
 
 
 # ---- AQE skew-join: split evidence + salted-join parity ---------------------

@@ -40,33 +40,6 @@ def test_cooccurrence_error_mode_silent_when_under_cap(spark):
     assert weights[(101, 102)] == 2
 
 
-def test_cooccurrence_oversize_observe_counts_drops(spark):
-    df = _mega_basket(spark)
-    edges = G.cooccurrence_edges(
-        df, "g", "it", min_support=1, max_group_size=10,
-        on_oversize="observe",
-    )
-    rows = edges.collect()
-    # Mega-group gone; only the two small baskets' pairs remain.
-    pairs = {(r.u, r.v) for r in rows}
-    assert pairs == {
-        (100, 101), (100, 102), (101, 102), (101, 103), (102, 103),
-    }
-    metric = edges.oversize_observation.get["oversize_groups_dropped"]
-    assert metric == 1
-
-
-def test_cooccurrence_oversize_drop_is_explicit_opt_in(spark):
-    df = _mega_basket(spark)
-    rows = G.cooccurrence_edges(
-        df, "g", "it", min_support=1, max_group_size=10,
-        on_oversize="drop",
-    ).collect()
-    assert len(rows) == 5
-    with pytest.raises(ValueError):
-        G.cooccurrence_edges(df, "g", "it", on_oversize="alert")
-
-
 def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark, sf_scale_dir):
     """The kcore_copurchase oracle unrolls a FIXED number of peeling
     rounds (``_KCORE_ROUNDS``) while the engine iterates to fixpoint.

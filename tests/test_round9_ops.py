@@ -43,9 +43,7 @@ def test_adamic_adar_uncapped_scores(spark):
 
 
 def test_adamic_adar_cap_observe_drops_hub_wedges(spark):
-    out = G.adamic_adar(
-        _edges(spark, HUB), max_neighbor_degree=3, on_overcap="observe"
-    )
+    out = G.adamic_adar(_edges(spark, HUB), max_neighbor_degree=3)
     rows = out.collect()
     # hub (deg 6) is no longer a wedge center: only center 50 remains,
     # so the sole candidate pair is (1, 2) via 50... plus (50, 100)
@@ -62,17 +60,6 @@ def test_adamic_adar_cap_observe_drops_hub_wedges(spark):
     assert got["capped_wedges_dropped"] == 15
 
 
-def test_adamic_adar_cap_error_detonates(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import SparkRuntimeException
-
-    df = G.adamic_adar(
-        _edges(spark, HUB), max_neighbor_degree=3, on_overcap="error"
-    )
-    with pytest.raises((Py4JJavaError, SparkRuntimeException)):
-        df.collect()
-
-
 def test_adamic_adar_cap_never_engages_on_copurchase(spark, sf_oracle_dir):
     """The registry query's cap=64 is assert-grade at tested scales
     (measured max co-purchase degree: 13 at sf0.01)."""
@@ -82,7 +69,7 @@ def test_adamic_adar_cap_never_engages_on_copurchase(spark, sf_oracle_dir):
     edges = G.cooccurrence_edges(
         li, "l_orderkey", "l_partkey", min_support=2
     ).drop("w")
-    out = G.adamic_adar(edges, max_neighbor_degree=64, on_overcap="observe")
+    out = G.adamic_adar(edges, max_neighbor_degree=64)
     out.write.format("noop").mode("overwrite").save()
     assert out.overcap_observation.get["capped_wedges_dropped"] == 0
 
