@@ -2,9 +2,8 @@
 
 The reference hard-codes an HDFS path convention per Medallion layer
 (``jobs/common.py:11-19``). This generalizes that into a tiny catalog:
-a directory of ``<table>.parquet`` datasets loadable as DataFrames and
-registrable as temp views, so every operator addresses tables by name
-rather than by path.
+a directory of ``<table>.parquet`` datasets loadable as DataFrames, so
+every operator addresses tables by name rather than by path.
 
 Scans stay ``spark.read.parquet`` so Catalyst gets column pruning and
 predicate pushdown for free (reference behavior per SURVEY.md §4).
@@ -220,9 +219,3 @@ class Catalog:
         if name in TABLES:
             return self.table(name)
         raise AttributeError(name)
-
-    def register_views(self, tables: tuple[str, ...] = TABLES) -> None:
-        """Expose each table as a temp view for the SQL front-end."""
-        for name in tables:
-            if os.path.exists(self.path(name)):
-                self.table(name).createOrReplaceTempView(name)

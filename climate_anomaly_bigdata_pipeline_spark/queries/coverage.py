@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-from climate_anomaly_bigdata_pipeline_spark.queries import query
+from climate_anomaly_bigdata_pipeline_spark.queries import query, sql_query
 
 _CUBE_ORACLE = """
 SELECT
@@ -137,26 +137,16 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select("event_type", "exact_users", within.alias("within_tol"))
 
 
-# One SQL text, two engines: the Spark side executes the IDENTICAL
-# string through the SQL front-end (spark.sql over registered views),
-# demonstrating the Column-API/SQL equivalence SURVEY §2.7 requires.
-_GROUPING_SETS_SQL = """
+# GROUPING SETS totals: one Expand and a single aggregation over the
+# three sets, the same plan family as rollup/cube, no multi-scan.
+sql_query("grouping_sets_lineitem", """
 SELECT
     l_returnflag, l_linestatus,
     round(sum(l_quantity), 2) AS sum_qty,
     count(*) AS n_rows
-FROM lineitem
+FROM {lineitem}
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-
-@query("grouping_sets_lineitem", oracle=_GROUPING_SETS_SQL)
-def grouping_sets_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS totals via the SQL front-end — the exact oracle
-    string runs on Spark (one Expand + single aggregation over the
-    three sets, same plan family as rollup/cube — no multi-scan)."""
-    Catalog(spark, sf_dir).register_views(("lineitem",))
-    return spark.sql(_GROUPING_SETS_SQL)
+""")
 
 
 _STRAT_SAMPLE_ORACLE = """

@@ -1,17 +1,14 @@
-"""Classic TPC-H query shapes the registry did not yet cover: Q3
-(shipping-priority top-k), Q7 (nation-pair volume shipping), Q8
-(market share), Q12 (priority × lateness counts), Q13 (customer order
-distribution), Q14 (promo revenue share), Q19 (disjunctive predicate
-revenue).
+"""The TPC-H query set: 21 of the 22 queries (Q11 reads only partsupp,
+which the data model does not have), adapted where a column or table is
+missing.
 
-These exercise optimizer shapes the reference's 3-job ETL pipeline
-never stresses — multi-way join reordering under selective dimension
-filters, conditional aggregation, left-join-then-histogram, and a
-disjunction of conjunctive range predicates that Catalyst must keep
-pushable — and they are the canonical shapes a user scaling to 100 TB
-cares about. Join strategy notes per query; every money aggregate uses
-the exact-decimal parity recipe from ``functions`` (order-independent
-sums, bit-identical across engines).
+Each query is one SQL text, registered with ``sql_query``: Spark runs it
+through ``spark.sql`` over the ``Catalog`` tables and DuckDB runs it as
+the oracle, so the check stays one between two engines. A join the plan
+should broadcast carries a ``/*+ BROADCAST(alias) */`` hint, which DuckDB
+reads as a comment. Every money aggregate sums in exact DECIMAL
+(order-independent, bit-identical across engines) and divides in double
+once per group, the same FP operations on both engines.
 
 Reference parity: the reference's analytics live in a notebook
 (``climate_analysis.ipynb`` merges/top-k cells); these generalize the
@@ -20,147 +17,73 @@ same join+aggregate patterns to the standard benchmark shapes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from climate_anomaly_bigdata_pipeline_spark.queries import sql_query
 
-from climate_anomaly_bigdata_pipeline_spark import functions as FN
-from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-from climate_anomaly_bigdata_pipeline_spark.queries import query
-
-# --- Q3: shipping priority --------------------------------------------------
-
-_Q3_ORACLE = """
-SELECT l.l_orderkey,
+# Q3 shipping priority: the top-10 highest-revenue not-yet-shipped orders
+# of one market segment. Scale notes: the segment and date filters reach
+# the parquet scans, the filtered customer side is broadcast, and the
+# top-10 is a TakeOrdered, so no global sort materializes. Ties break on
+# (o_orderdate, l_orderkey), so the result is deterministic across engines.
+sql_query("q3_shipping_priority", """
+SELECT /*+ BROADCAST(c) */ l.l_orderkey,
        CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
             AS DOUBLE) AS revenue,
        o.o_orderdate, o.o_orderpriority
-FROM customer c
-JOIN orders o   ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+FROM {customer} c
+JOIN {orders} o   ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
 WHERE c.c_mktsegment = 'BUILDING'
   AND o.o_orderdate < TIMESTAMP '1998-01-01'
   AND l.l_shipdate  > TIMESTAMP '1998-01-01'
 GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
 ORDER BY revenue DESC, o.o_orderdate ASC, l.l_orderkey ASC
 LIMIT 10
-"""
+""")
 
-
-@query("q3_shipping_priority", oracle=_Q3_ORACLE)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: top-10 highest-revenue not-yet-shipped orders for
-    one market segment.
-
-    Scale notes: the segment filter prunes customer BEFORE the join
-    (predicate pushdown to the parquet scan), the filtered customer
-    side is broadcast, and the final top-10 is a TakeOrdered — no
-    global sort materializes. Ties broken (o_orderdate, l_orderkey) so
-    the result is deterministic across engines.
-    """
-    c = Catalog(spark, sf_dir)
-    cust = c.customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    od = c.orders.filter(F.col("o_orderdate") < "1998-01-01").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
-    )
-    li = c.lineitem.filter(F.col("l_shipdate") > "1998-01-01").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    agg = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(cust), od.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"))
-    )
-    return agg.select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority").orderBy(
-        F.desc("revenue"), F.asc("o_orderdate"), F.asc("l_orderkey")
-    ).limit(10)
-
-
-# --- Q7: volume shipping between two nations --------------------------------
-
-_Q7_ORACLE = """
-SELECT ns.n_name AS supp_nation,
+# Q7 volume shipping: bilateral trade volume between two nations by ship
+# year. Scale notes: supplier, customer and both nation aliases are
+# broadcast (all bounded dims), so the fact tables shuffle once, for
+# lineitem⋈orders. The nation-pair disjunction also prunes each nation
+# side to the two named nations before the join.
+sql_query("q7_volume_shipping", """
+SELECT /*+ BROADCAST(s, c, ns, nc) */ ns.n_name AS supp_nation,
        nc.n_name AS cust_nation,
        year(l.l_shipdate) AS ship_year,
        CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
             AS DOUBLE) AS revenue,
        count(*) AS n_items
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
-JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
+FROM {lineitem} l
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c ON o.o_custkey = c.c_custkey
+JOIN {nation} ns  ON s.s_nationkey = ns.n_nationkey
+JOIN {nation} nc  ON c.c_nationkey = nc.n_nationkey
 WHERE (ns.n_name = 'NATION_1' AND nc.n_name = 'NATION_2')
    OR (ns.n_name = 'NATION_2' AND nc.n_name = 'NATION_1')
 GROUP BY ns.n_name, nc.n_name, year(l.l_shipdate)
-"""
+""")
 
-
-@query("q7_volume_shipping", oracle=_Q7_ORACLE)
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by
-    ship year.
-
-    Scale notes: supplier, customer, and both nation aliases are
-    broadcast (all bounded dims), so the fact table shuffles exactly
-    once — for the lineitem⋈orders equi join — and the nation-pair
-    disjunction is applied before the final partial-aggregated
-    groupBy. At 100 TB the supplier/customer nation filters would also
-    be pushed into the dim scans by Catalyst (they are here: the
-    broadcast sides carry only matching nationkeys).
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    od = c.orders.select("o_orderkey", "o_custkey")
-    su = c.supplier.select("s_suppkey", "s_nationkey")
-    cu = c.customer.select("c_custkey", "c_nationkey")
-    na = c.nation.select("n_nationkey", "n_name")
-    ns = na.withColumnRenamed("n_name", "supp_nation").withColumnRenamed(
-        "n_nationkey", "ns_key"
-    )
-    nc = na.withColumnRenamed("n_name", "cust_nation").withColumnRenamed(
-        "n_nationkey", "nc_key"
-    )
-    j = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .join(F.broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
-        .join(F.broadcast(nc), F.col("c_nationkey") == F.col("nc_key"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-    )
-    return j.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
-    ).agg(
-        F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-# --- Q8: market share -------------------------------------------------------
-
-_Q8_ORACLE = """
+# Q8 market share: NATION_3's share of PROMO-part revenue sold into ASIA
+# customers, by order year. Scale notes: the p_type and r_name filters
+# prune part and region at the scan; part, supplier, customer, both
+# nations and region are broadcast. The share is one pass of conditional
+# aggregation, no second join or self-union.
+sql_query("q8_market_share", """
 WITH base AS (
-    SELECT year(o.o_orderdate) AS order_year,
+    SELECT /*+ BROADCAST(p, s, c, nc, r, ns) */ year(o.o_orderdate) AS order_year,
            CAST(l.l_extendedprice AS DECIMAL(18,6))
              * (1 - CAST(l.l_discount AS DECIMAL(18,6))) AS vol,
            ns.n_name AS supp_nation
-    FROM lineitem l
-    JOIN part p     ON l.l_partkey = p.p_partkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-    JOIN region r   ON nc.n_regionkey = r.r_regionkey
-    JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
+    FROM {lineitem} l
+    JOIN {part} p     ON l.l_partkey = p.p_partkey
+    JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+    JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN {nation} nc  ON c.c_nationkey = nc.n_nationkey
+    JOIN {region} r   ON nc.n_regionkey = r.r_regionkey
+    JOIN {nation} ns  ON s.s_nationkey = ns.n_nationkey
     WHERE r.r_name = 'ASIA' AND p.p_type = 'PROMO'
 )
 SELECT order_year,
@@ -170,144 +93,45 @@ SELECT order_year,
        CAST(round(sum(vol), 2) AS DOUBLE) AS total_volume
 FROM base
 GROUP BY order_year
-"""
+""")
 
-
-@query("q8_market_share", oracle=_Q8_ORACLE)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: NATION_3's share of PROMO-part revenue sold into
-    ASIA customers, by order year.
-
-    Scale notes: the p_type filter prunes part at the scan; part,
-    supplier, customer, nation×2, region are all broadcast; the
-    conditional share is one pass of conditional aggregation (no
-    second join or self-union). Division happens once per group in
-    double after exact decimal sums — engine-identical.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    pa = c.part.filter(F.col("p_type") == "PROMO").select("p_partkey")
-    su = c.supplier.select("s_suppkey", "s_nationkey")
-    od = c.orders.select("o_orderkey", "o_custkey", "o_orderdate")
-    cu = c.customer.select("c_custkey", "c_nationkey")
-    na = c.nation
-    re = c.region.filter(F.col("r_name") == "ASIA").select("r_regionkey")
-    nc = na.select(
-        F.col("n_nationkey").alias("nc_key"), F.col("n_regionkey").alias("nc_region")
-    )
-    ns = na.select(
-        F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("supp_nation")
-    )
-    vol = FN.revenue_expr()
-    zero = F.lit(0).cast(FN.MONEY)
-    j = (
-        li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
-        .join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .join(F.broadcast(nc), F.col("c_nationkey") == F.col("nc_key"))
-        .join(F.broadcast(re), F.col("nc_region") == F.col("r_regionkey"))
-        .join(F.broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
-    )
-    g = j.groupBy(F.year("o_orderdate").alias("order_year")).agg(
-        F.sum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(zero)).alias(
-            "nation_vol"
-        ),
-        F.sum(vol).alias("all_vol"),
-    )
-    return g.select(
-        "order_year",
-        F.round(
-            F.col("nation_vol").cast("double") / F.col("all_vol").cast("double"), 6
-        )
-        .cast("double")
-        .alias("mkt_share"),
-        F.round(F.col("all_vol"), 2).cast("double").alias("total_volume"),
-    )
-
-
-# --- Q12: lateness × priority counts ---------------------------------------
-
-_Q12_ORACLE = """
+# Q12 (shipmode -> returnflag): for lines shipped more than 90 days after
+# the order, count high- and low-priority orders. Scale notes: one
+# fact⋈fact equi join (the only shuffle); the lateness predicate is a
+# post-join filter and the conditional counts are one aggregation pass.
+sql_query("q12_late_priority_lines", """
 SELECT l.l_returnflag,
        CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                 THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                 THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
+FROM {lineitem} l
+JOIN {orders} o ON l.l_orderkey = o.o_orderkey
 WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
 GROUP BY l.l_returnflag
-"""
+""")
 
-
-@query("q12_late_priority_lines", oracle=_Q12_ORACLE)
-def q12_late_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipmode→returnflag): for late-shipped lines
-    (>90 days after order), count high- vs low-priority orders.
-
-    Scale notes: single fact⋈fact equi join (the only shuffle), the
-    lateness predicate is a post-join filter on already-projected
-    columns, and the conditional counts are one aggregation pass.
-    Integer-only output — trivially engine-exact.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.select("l_orderkey", "l_returnflag", "l_shipdate")
-    od = c.orders.select("o_orderkey", "o_orderpriority", "o_orderdate")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~hi, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-# --- Q13: customer order-count distribution ---------------------------------
-
-_Q13_ORACLE = """
+# Q13 customer distribution: a histogram of customers by how many orders
+# they placed, zero included through the left join. Scale notes: the
+# second aggregate runs over a tiny distinct-count domain.
+sql_query("q13_customer_distribution", """
 WITH per_cust AS (
     SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-    FROM customer c
-    LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+    FROM {customer} c
+    LEFT JOIN {orders} o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey
 )
 SELECT c_count, count(*) AS custdist
 FROM per_cust
 GROUP BY c_count
-"""
+""")
 
-
-@query("q13_customer_distribution", oracle=_Q13_ORACLE)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: histogram of customers by how many orders they
-    placed (zero included via the left join).
-
-    Scale notes: the heavy side (orders) pre-aggregates to one row per
-    custkey BEFORE the join against customer — at 100 TB this turns a
-    fact-sized join into a dim-sized one; the second groupBy is over a
-    tiny distinct-count domain. Integer-only output.
-    """
-    c = Catalog(spark, sf_dir)
-    per_cust_orders = c.orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-    cu = c.customer.select("c_custkey")
-    per_cust = cu.join(
-        per_cust_orders, cu.c_custkey == per_cust_orders.o_custkey, "left"
-    ).select(F.coalesce(F.col("n_orders"), F.lit(0)).alias("c_count"))
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-# --- Q14: promo revenue share by month --------------------------------------
-
-_Q14_ORACLE = """
-SELECT date_trunc('month', l.l_shipdate) AS ship_month,
+# Q14, widened from one month to a monthly series: the percentage of
+# revenue from PROMO parts per ship month. Scale notes: part projects two
+# columns and is broadcast; the share is conditional aggregation in one
+# pass (no promo/non-promo self-union).
+sql_query("q14_promo_revenue", """
+SELECT /*+ BROADCAST(p) */ date_trunc('month', l.l_shipdate) AS ship_month,
        CAST(round(
            100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
                        THEN CAST(l.l_extendedprice AS DECIMAL(18,6))
@@ -316,118 +140,42 @@ SELECT date_trunc('month', l.l_shipdate) AS ship_month,
            / CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))) AS DOUBLE),
            4) AS DOUBLE) AS promo_share_pct
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
+FROM {lineitem} l
+JOIN {part} p ON l.l_partkey = p.p_partkey
 GROUP BY date_trunc('month', l.l_shipdate)
-"""
+""")
 
-
-@query("q14_promo_revenue", oracle=_Q14_ORACLE)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape, widened from one month to a monthly series:
-    percentage of revenue from PROMO parts per ship month.
-
-    Scale notes: part projects two columns and broadcasts; the share is
-    conditional aggregation in one pass (no promo/non-promo
-    self-union). ``100.0 * promo / total`` is evaluated in double in
-    the same op order on both engines after exact decimal sums.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.select("l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
-    pa = c.part.select("p_partkey", "p_type")
-    vol = FN.revenue_expr()
-    zero = F.lit(0).cast(FN.MONEY)
-    g = (
-        li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
-        .groupBy(F.date_trunc("month", "l_shipdate").alias("ship_month"))
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(zero)).alias(
-                "promo_vol"
-            ),
-            F.sum(vol).alias("all_vol"),
-        )
-    )
-    return g.select(
-        "ship_month",
-        F.round(
-            F.lit(100.0)
-            * F.col("promo_vol").cast("double")
-            / F.col("all_vol").cast("double"),
-            4,
-        )
-        .cast("double")
-        .alias("promo_share_pct"),
-    )
-
-
-# --- Q19: disjunctive conjunct predicate revenue ----------------------------
-
-_Q19_ORACLE = """
-SELECT CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
+# Q19: revenue under a disjunction of (brand, size, quantity) conjunctive
+# range predicates. Scale notes: the last two conjuncts are implied by
+# the disjunction, so they cannot change the result; they are spelled out
+# so both scans get a plain pushed filter (brand IN on part, the quantity
+# range union on lineitem) instead of only the straddling disjunction.
+# The residual disjunction runs after the broadcast join.
+sql_query("q19_disjunctive_revenue", """
+SELECT /*+ BROADCAST(p) */ CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
             AS DOUBLE) AS revenue,
        count(*) AS n_items
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
+FROM {lineitem} l
+JOIN {part} p ON l.l_partkey = p.p_partkey
+WHERE ((p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
        AND l.l_quantity BETWEEN 1 AND 11)
    OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
        AND l.l_quantity BETWEEN 10 AND 20)
    OR (p.p_brand = 'Brand#14' AND p.p_size BETWEEN 1 AND 35
-       AND l.l_quantity BETWEEN 20 AND 30)
-"""
+       AND l.l_quantity BETWEEN 20 AND 30))
+  AND p.p_brand IN ('Brand#12', 'Brand#23', 'Brand#14')
+  AND l.l_quantity BETWEEN 1 AND 30
+""")
 
-
-@query("q19_disjunctive_revenue", oracle=_Q19_ORACLE)
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue under a disjunction of (brand, size,
-    quantity) conjunctive range predicates.
-
-    Scale notes: the part-only conjuncts (brand ∈ {12,23,14}, the size
-    caps) are pre-applied to the broadcast side, and the l_quantity
-    range union l_quantity BETWEEN 1 AND 30 is pre-applied to the scan
-    — Catalyst can push both derived filters even though the full
-    predicate straddles the join. The residual disjunction evaluates
-    post-join in codegen.
-    """
-    c = Catalog(spark, sf_dir)
-    pa = c.part.filter(
-        F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#14")
-    ).select("p_partkey", "p_brand", "p_size")
-    li = c.lineitem.filter(
-        (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 30)
-    ).select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#14")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
-        .filter(cond)
-        .groupBy()
-        .agg(
-            F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-# --- Q1: pricing summary report ---------------------------------------------
-
-_Q1_ORACLE = """
+# Q1 pricing summary: eight aggregates over one filtered pass of the fact
+# table, grouped on a 6-value domain. Scale notes: one parquet scan with
+# the date predicate pushed to the reader, partial (map-side) aggregation
+# and one 6-row exchange. Quantities are integral (summed as BIGINT). The
+# 3-factor charge product uses narrow decimals (12,2)x(4,2)x(4,2) so the
+# exact product fits both engines' 38-digit cap; an (18,6)^3 product would
+# overflow Spark's precision rules and silently lose scale.
+sql_query("q1_pricing_summary", """
 SELECT l_returnflag, l_linestatus,
        CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
        CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE)
@@ -446,355 +194,154 @@ SELECT l_returnflag, l_linestatus,
        round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE)
              / CAST(count(*) AS DOUBLE), 6) AS avg_disc,
        count(*) AS count_order
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate <= TIMESTAMP '2001-09-02'
 GROUP BY l_returnflag, l_linestatus
-"""
+""")
 
-
-@query("q1_pricing_summary", oracle=_Q1_ORACLE)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1: the canonical scan-heavy pricing summary — eight
-    aggregates over one filtered pass of the fact table, grouped on a
-    6-value domain.
-
-    Scale notes: this is the pure-throughput query — a single parquet
-    scan with the date predicate pushed to the reader, partial (map-side)
-    aggregation over a tiny group domain, and one 6-row exchange. The
-    whole pipeline is one WholeStageCodegen span. Exactness: quantities
-    are integral (summed as BIGINT), money factors are exact 2-decimal
-    doubles summed in DECIMAL (order-independent), and the 3-factor
-    charge product uses narrow decimals (12,2)x(4,2)x(4,2) so the exact
-    product fits both engines' 38-digit cap — a (18,6)^3 product would
-    overflow Spark's precision rules and silently lose scale. Averages
-    divide the exact decimal sum by the count in double, the identical
-    two-FP-op sequence on both engines.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.filter(F.col("l_shipdate") <= "2001-09-02")
-    one = F.lit(1)
-    charge = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (one.cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)"))
-        * (one.cast("decimal(4,2)") + F.col("l_tax").cast("decimal(4,2)"))
-    )
-    n = F.count(F.lit(1))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        F.round(F.sum(FN.dec("l_extendedprice")), 2).cast("double").alias("sum_base_price"),
-        F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("sum_disc_price"),
-        F.round(F.sum(charge), 2).cast("double").alias("sum_charge"),
-        F.round(
-            F.sum(F.col("l_quantity").cast("long")).cast("double") / n.cast("double"), 4
-        ).alias("avg_qty"),
-        F.round(
-            F.sum(FN.dec("l_extendedprice")).cast("double") / n.cast("double"), 4
-        ).alias("avg_price"),
-        F.round(
-            F.sum(FN.dec("l_discount")).cast("double") / n.cast("double"), 6
-        ).alias("avg_disc"),
-        n.alias("count_order"),
-    )
-
-
-# --- Q6: forecast revenue change --------------------------------------------
-
-_Q6_ORACLE = """
+# Q6 forecast revenue change: a pure filter and global aggregate. Scale
+# notes: all three predicates (date range, discount band, quantity cap)
+# push to the parquet scan as min/max-prunable filters; no shuffle beyond
+# the final 1-row merge. The discount literals are the same binary
+# doubles on both engines, so the BETWEEN selects identical rows.
+sql_query("q6_forecast_revenue", """
 SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
                       * CAST(l_discount AS DECIMAL(18,6))), 2) AS DOUBLE)
            AS revenue,
        count(*) AS n_lines
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_shipdate <  TIMESTAMP '1998-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
-"""
+""")
 
-
-@query("q6_forecast_revenue", oracle=_Q6_ORACLE)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: revenue that would have been gained by eliminating
-    small discounts — a pure filter + global aggregate.
-
-    Scale notes: all three predicates (date range, discount band,
-    quantity cap) push to the parquet scan as min/max-prunable filters;
-    at 100 TB on date-partitioned data the date range also prunes
-    partitions. Zero shuffle beyond the final 1-row partial-agg merge.
-    The discount literals are the same binary doubles on both engines,
-    so the BETWEEN selects identical rows.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.groupBy().agg(
-        F.round(F.sum(FN.dec("l_extendedprice") * FN.dec("l_discount")), 2)
-        .cast("double")
-        .alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-# --- Q5: local supplier volume ----------------------------------------------
-
-_Q5_ORACLE = """
-SELECT n.n_name,
+# Q5 local supplier volume: revenue from orders whose customer and line
+# supplier sit in the same nation of one region, the 6-table join where
+# s_nationkey = c_nationkey ties two dimension legs together. Scale
+# notes: customer, supplier, nation and region are broadcast and the
+# orders date filter is pushed to its scan, so the fact tables shuffle
+# only for customer-orders⋈lineitem. The same-nation condition is an
+# equi key of the supplier join, not a post-join filter.
+sql_query("q5_local_supplier_volume", """
+SELECT /*+ BROADCAST(c, s, n, r) */ n.n_name,
        CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
             AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o   ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
+FROM {customer} c
+JOIN {orders} o   ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
                 AND s.s_nationkey = c.c_nationkey
-JOIN nation n   ON c.c_nationkey = n.n_nationkey
-JOIN region r   ON n.n_regionkey = r.r_regionkey
+JOIN {nation} n   ON c.c_nationkey = n.n_nationkey
+JOIN {region} r   ON n.n_regionkey = r.r_regionkey
 WHERE r.r_name = 'ASIA'
   AND o.o_orderdate >= TIMESTAMP '1996-01-01'
   AND o.o_orderdate <  TIMESTAMP '1997-01-01'
 GROUP BY n.n_name
-"""
+""")
 
-
-@query("q5_local_supplier_volume", oracle=_Q5_ORACLE)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5: revenue from orders where the customer and the line's
-    supplier sit in the same nation of one region — the classic
-    6-table join with a non-obvious join condition (s_nationkey =
-    c_nationkey ties two dimension legs together).
-
-    Scale notes: region→nation prunes to the ASIA nation keys first
-    (tiny), customer and supplier are broadcast after their nation
-    filters, and the date filter on orders is pushed to its scan — so
-    the only shuffle is lineitem⋈orders. The same-nation condition is
-    applied as a broadcast-side equi predicate, not a post-join filter
-    on the fact.
-    """
-    c = Catalog(spark, sf_dir)
-    asia_nations = (
-        c.nation.join(
-            F.broadcast(c.region.filter(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        ).select("n_nationkey", "n_name")
-    )
-    cu = c.customer.join(
-        F.broadcast(asia_nations),
-        F.col("c_nationkey") == F.col("n_nationkey"),
-    ).select("c_custkey", "c_nationkey", "n_name")
-    su = c.supplier.select("s_suppkey", "s_nationkey")
-    od = c.orders.filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    ).select("o_orderkey", "o_custkey")
-    li = c.lineitem.select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    joined = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .join(
-            F.broadcast(su),
-            (li.l_suppkey == su.s_suppkey)
-            & (su.s_nationkey == cu.c_nationkey),
-        )
-    )
-    return joined.groupBy("n_name").agg(
-        F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue")
-    )
-
-
-# --- Q4: order-priority checking (EXISTS) -----------------------------------
-
-# The corpus has no l_commitdate/l_receiptdate, so "late" is adapted to
-# shipped >75 days after the order date — same EXISTS-with-correlated-
-# predicate shape as the spec query.
-_Q4_ORACLE = """
+# Q4 order-priority checking: orders per priority with at least one late
+# line, the canonical correlated EXISTS. The corpus has no l_commitdate or
+# l_receiptdate, so "late" is adapted to shipped more than 75 days after
+# the order date. Scale notes: EXISTS compiles to a left-semi join keyed
+# on orderkey with the lateness comparison as a join condition, so each
+# order counts at most once without a distinct; the orders date filter is
+# pushed to its scan and shrinks the probe side before the only shuffle.
+sql_query("q4_order_priority", """
 SELECT o.o_orderpriority, count(*) AS order_count
-FROM orders o
+FROM {orders} o
 WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
   AND o.o_orderdate <  TIMESTAMP '1997-01-01'
   AND EXISTS (
-      SELECT 1 FROM lineitem l
+      SELECT 1 FROM {lineitem} l
       WHERE l.l_orderkey = o.o_orderkey
         AND l.l_shipdate > o.o_orderdate + INTERVAL 75 DAY
   )
 GROUP BY o.o_orderpriority
-"""
+""")
 
-
-@query("q4_order_priority", oracle=_Q4_ORACLE)
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: count orders per priority that have at least one
-    late line — the canonical correlated-EXISTS query.
-
-    Scale notes: EXISTS compiles to a left-semi join keyed on orderkey
-    with the lateness comparison as a join-side predicate, so each
-    order contributes at most once without a distinct; the orders date
-    filter is pushed to its scan and shrinks the probe side before the
-    (only) shuffle. No decimal math — integer counts are trivially
-    engine-exact.
-    """
-    c = Catalog(spark, sf_dir)
-    od = c.orders.filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    ).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = c.lineitem.select("l_orderkey", "l_shipdate")
-    late = od.join(
-        li,
-        (od.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > od.o_orderdate + F.expr("INTERVAL 75 DAYS")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
-
-
-# --- Q10: returned-item reporting -------------------------------------------
-
-_Q10_ORACLE = """
-SELECT c.c_custkey, c.c_name,
+# Q10 returned items: the top-20 customers by revenue lost to returned
+# items in one half-year window. Scale notes: the returnflag and date
+# filters push to both fact scans; customer and nation are broadcast;
+# the top-20 is a TakeOrdered with a custkey tiebreak, not a global sort.
+sql_query("q10_returned_items", """
+SELECT /*+ BROADCAST(c, n) */ c.c_custkey, c.c_name,
        CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                       * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
             AS DOUBLE) AS revenue,
        c.c_acctbal, n.n_name
-FROM customer c
-JOIN orders o   ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-JOIN nation n   ON c.c_nationkey = n.n_nationkey
+FROM {customer} c
+JOIN {orders} o   ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+JOIN {nation} n   ON c.c_nationkey = n.n_nationkey
 WHERE l.l_returnflag = 'R'
   AND o.o_orderdate >= TIMESTAMP '1997-01-01'
   AND o.o_orderdate <  TIMESTAMP '1997-07-01'
 GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
 ORDER BY revenue DESC, c.c_custkey ASC
 LIMIT 20
-"""
+""")
 
-
-@query("q10_returned_items", oracle=_Q10_ORACLE)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10: top-20 customers by revenue lost to returned items in
-    one half-year window.
-
-    Scale notes: the returnflag and date filters push to both fact
-    scans; customer⋈nation is dim-sized and broadcast onto the
-    aggregated-by-custkey revenue (aggregate BEFORE the customer join,
-    so the join input is customer-cardinality, not lineitem-
-    cardinality); the final top-20 is a TakeOrdered with a custkey
-    tiebreak, not a global sort.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    od = c.orders.filter(
-        (F.col("o_orderdate") >= "1997-01-01")
-        & (F.col("o_orderdate") < "1997-07-01")
-    ).select("o_orderkey", "o_custkey")
-    rev_by_cust = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(F.round(F.sum(FN.revenue_expr()), 2).cast("double").alias("revenue"))
-    )
-    cu = c.customer.join(
-        F.broadcast(c.nation),
-        F.col("c_nationkey") == F.col("n_nationkey"),
-    ).select("c_custkey", "c_name", "c_acctbal", "n_name")
-    return (
-        rev_by_cust.join(F.broadcast(cu), F.col("o_custkey") == cu.c_custkey)
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-# --- Q18: large-volume customers --------------------------------------------
-
-_Q18_ORACLE = """
+# Q18 large-volume customers: orders whose total quantity exceeds 300,
+# with their customers, the IN-aggregate-subquery shape. Scale notes: the
+# HAVING survivors are few and broadcast into a semi join; Catalyst
+# applies it to both orders and lineitem before their join (planning the
+# HAVING aggregate once for each), so only the big orders reach the
+# re-aggregation. Customer is broadcast too. The top-100 is a
+# TakeOrdered with an orderkey tiebreak. Quantities are integral, so
+# BIGINT sums are exact.
+sql_query("q18_large_volume_customers", """
 WITH big AS (
     SELECT l_orderkey
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_orderkey
     HAVING sum(CAST(l_quantity AS BIGINT)) > 300
 )
-SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
+SELECT /*+ BROADCAST(c) */ c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
        CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-FROM customer c
-JOIN orders o   ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
+FROM {customer} c
+JOIN {orders} o   ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+WHERE o.o_orderkey IN (SELECT /*+ BROADCAST(big) */ l_orderkey FROM big)
 GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
 ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
 LIMIT 100
-"""
+""")
 
-
-@query("q18_large_volume_customers", oracle=_Q18_ORACLE)
-def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18: orders whose total quantity exceeds 300, with their
-    customers — the IN-aggregate-subquery shape.
-
-    Scale notes: the HAVING subquery is computed ONCE as a grouped
-    aggregate that also carries the total_qty the output needs, so the
-    big-order filter and the displayed sum share one shuffle (the spec
-    SQL's IN + re-aggregation collapses to a single groupBy + join
-    here). The surviving-order set is small and broadcast onto orders;
-    customer is broadcast too. Top-100 via TakeOrdered with an
-    orderkey tiebreak. Quantities are integral → BIGINT-exact.
-    """
-    c = Catalog(spark, sf_dir)
-    big = (
-        c.lineitem.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
-    od = c.orders.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-    cu = c.customer.select("c_custkey", "c_name")
-    return (
-        od.join(F.broadcast(big), od.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .select(
-            "c_name", "c_custkey", "o_orderkey", "o_orderdate",
-            "o_totalprice", "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-# --- Q2: minimum-cost supplier (adapted: supplies relation from lineitem) ----
-
-# The corpus has no partsupp table, so the part↔supplier supply
-# relation (and its cost) is derived from observed lineitems: unit
-# cost = min(l_extendedprice / l_quantity) per (part, supplier). The
-# correlated-min-subquery shape of spec Q2 is preserved: find, per
-# qualifying part, the EUROPE supplier with the lowest unit cost.
-_Q2_ORACLE = """
+# Q2 minimum-cost supplier: for each qualifying part, the EUROPE supplier
+# with the lowest unit cost (the correlated-min subquery as a per-part
+# argmin). The corpus has no partsupp table, so the supply relation and
+# its cost come from observed lineitems: unit cost =
+# min(l_extendedprice / l_quantity) per (part, supplier). Scale notes:
+# supplies is a grouped aggregate of the fact table (its only shuffle);
+# the correlated min is one row_number window over the supplies-sized
+# join, not a re-join against a min subquery; the dims are filtered and
+# broadcast. Ties break on s_suppkey. unit_cost ships raw (bit-identical
+# on both engines): rounding it lost exactness at sf0.1, where a value on
+# a .xxxx5 boundary rounds differently under Spark's BigDecimal HALF_UP
+# and DuckDB's scaled-double rounding.
+sql_query("q2_min_cost_supplier", """
 WITH supplies AS (
     SELECT l_partkey, l_suppkey,
            min(l_extendedprice / l_quantity) AS unit_cost
-    FROM lineitem GROUP BY l_partkey, l_suppkey
+    FROM {lineitem} GROUP BY l_partkey, l_suppkey
 ),
 eur AS (
-    SELECT s.s_suppkey, s.s_name, s.s_acctbal, n.n_name
-    FROM supplier s
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
+    SELECT /*+ BROADCAST(n, r) */ s.s_suppkey, s.s_name, s.s_acctbal, n.n_name
+    FROM {supplier} s
+    JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+    JOIN {region} r ON n.n_regionkey = r.r_regionkey
     WHERE r.r_name = 'EUROPE'
 ),
 ranked AS (
-    SELECT p.p_partkey, p.p_name, e.s_name, e.s_acctbal, e.n_name,
+    SELECT /*+ BROADCAST(p, e) */ p.p_partkey, p.p_name, e.s_name, e.s_acctbal, e.n_name,
            sp.unit_cost,
            row_number() OVER (
                PARTITION BY p.p_partkey
                ORDER BY sp.unit_cost ASC, e.s_suppkey ASC
            ) AS rk
-    FROM part p
+    FROM {part} p
     JOIN supplies sp ON p.p_partkey = sp.l_partkey
     JOIN eur e       ON sp.l_suppkey = e.s_suppkey
     WHERE p.p_type = 'LARGE' AND p.p_size <= 15
@@ -804,309 +351,119 @@ SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
 FROM ranked WHERE rk = 1
 ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
 LIMIT 100
-"""
+""")
 
-
-@query("q2_min_cost_supplier", oracle=_Q2_ORACLE)
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: for each qualifying part, the region-local
-    supplier offering the minimum unit cost (correlated-min subquery →
-    per-part argmin).
-
-    Scale notes: the supplies relation is a grouped aggregate of the
-    fact table (its only shuffle); the correlated min is a per-part
-    row_number over the supplies-sized table rather than a re-join
-    against a min subquery (one window instead of a second shuffle +
-    join). Part/supplier/nation/region filters are all pushed and the
-    dim sides broadcast. Determinism: the per-row double division is
-    the identical IEEE op on both engines, min() is order-independent,
-    and ties break on s_suppkey. unit_cost ships RAW (bit-identical on
-    both engines); round(·, 4) was removed after the sf0.1 sweep caught
-    a value sitting exactly on a .xxxx5 boundary that Spark's
-    BigDecimal HALF_UP and DuckDB's scaled-double rounding resolve
-    differently — rounding a bit-identical double can only ADD
-    divergence.
-    """
-    from pyspark.sql import Window
-
-    c = Catalog(spark, sf_dir)
-    supplies = c.lineitem.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
-    )
-    eur = (
-        c.supplier.join(
-            F.broadcast(
-                c.nation.join(
-                    F.broadcast(c.region.filter(F.col("r_name") == "EUROPE")),
-                    F.col("n_regionkey") == F.col("r_regionkey"),
-                ).select("n_nationkey", "n_name")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        ).select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    pa = c.part.filter(
-        (F.col("p_type") == "LARGE") & (F.col("p_size") <= 15)
-    ).select("p_partkey", "p_name")
-    joined = (
-        supplies.join(F.broadcast(pa), supplies.l_partkey == pa.p_partkey)
-        .join(F.broadcast(eur), supplies.l_suppkey == eur.s_suppkey)
-    )
-    w = Window.partitionBy("p_partkey").orderBy(
-        F.asc("unit_cost"), F.asc("s_suppkey")
-    )
-    return (
-        joined.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
-            "unit_cost",
-        )
-        .orderBy(
-            F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"),
-            F.asc("p_partkey"),
-        )
-        .limit(100)
-    )
-
-
-# --- Q9: product-type profit (adapted: cost from p_retailprice) --------------
-
-# No partsupp → supply cost is adapted to the part's retail price per
-# unit: profit = l_extendedprice*(1-l_discount) − p_retailprice*l_quantity,
-# grouped by supplier nation × order year for parts named '%red%' —
-# the same join tree and profit-decomposition shape as spec Q9.
-_Q9_ORACLE = """
-SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
+# Q9 product-type profit on 'red' parts by supplier nation and order
+# year. No partsupp, so supply cost is adapted to the part's retail price
+# per unit: profit = l_extendedprice*(1-l_discount) - p_retailprice*l_quantity.
+# Scale notes: the part-name filter prunes part before its broadcast (the
+# LIKE runs over the dim scan, never the fact); supplier and nation are
+# broadcast; the only fact shuffle is lineitem⋈orders.
+sql_query("q9_product_profit", """
+SELECT /*+ BROADCAST(p, s, n) */ n.n_name AS nation, year(o.o_orderdate) AS o_year,
        CAST(round(sum(
            CAST(l.l_extendedprice AS DECIMAL(18,6))
                * (1 - CAST(l.l_discount AS DECIMAL(18,6)))
            - CAST(p.p_retailprice AS DECIMAL(18,6))
                * CAST(l.l_quantity AS DECIMAL(18,6))
        ), 2) AS DOUBLE) AS profit
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN part p     ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n   ON s.s_nationkey = n.n_nationkey
+FROM {lineitem} l
+JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+JOIN {part} p     ON l.l_partkey = p.p_partkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+JOIN {nation} n   ON s.s_nationkey = n.n_nationkey
 WHERE p.p_name LIKE '%red%'
 GROUP BY n.n_name, year(o.o_orderdate)
-"""
+""")
 
-
-@query("q9_product_profit", oracle=_Q9_ORACLE)
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit on 'red' parts by supplier nation and
-    order year.
-
-    Scale notes: the part-name filter prunes part before its broadcast
-    (at 100 TB the LIKE runs over the dim scan, never the fact);
-    supplier⋈nation is broadcast; the only shuffle is lineitem⋈orders.
-    Profit is a difference of two exact decimal products summed in
-    decimal — order-independent, bit-identical across engines.
-    """
-    c = Catalog(spark, sf_dir)
-    pa = c.part.filter(F.col("p_name").like("%red%")).select(
-        "p_partkey", "p_retailprice"
-    )
-    su = c.supplier.join(
-        F.broadcast(c.nation), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey", F.col("n_name").alias("nation"))
-    od = c.orders.select("o_orderkey", F.year("o_orderdate").alias("o_year"))
-    li = c.lineitem.select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_quantity", "l_extendedprice", "l_discount",
-    )
-    profit = FN.revenue_expr() - FN.dec("p_retailprice") * FN.dec("l_quantity")
-    return (
-        li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
-        .join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(od, li.l_orderkey == od.o_orderkey)
-        .groupBy("nation", "o_year")
-        .agg(F.round(F.sum(profit), 2).cast("double").alias("profit"))
-    )
-
-
-# --- Q16: supplier count by part attributes (adapted) ------------------------
-
-# No partsupp → the part↔supplier relation is the DISTINCT
-# (l_partkey, l_suppkey) pairs observed in lineitem; the spec's
-# complaint-supplier exclusion becomes an acctbal < 0 exclusion.
-_Q16_ORACLE = """
+# Q16: how many distinct suppliers can supply parts of each (brand, type,
+# size) bucket, excluding flagged suppliers. No partsupp, so the
+# part-supplier relation is the distinct (l_partkey, l_suppkey) pairs of
+# lineitem, and the complaint-supplier exclusion becomes acctbal < 0.
+# Scale notes: supplies dedups the fact table on the pair key (one
+# shuffle, map-side partial distinct); the NOT IN is a null-aware
+# left-anti join against the tiny flagged-supplier set, which Spark
+# plans as a broadcast without a hint; the part filter runs before its
+# broadcast.
+sql_query("q16_supplier_part_counts", """
 WITH supplies AS (
-    SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
+    SELECT DISTINCT l_partkey, l_suppkey FROM {lineitem}
 )
-SELECT p.p_brand, p.p_type, p.p_size,
+SELECT /*+ BROADCAST(p) */ p.p_brand, p.p_type, p.p_size,
        count(DISTINCT sp.l_suppkey) AS supplier_cnt
-FROM part p
+FROM {part} p
 JOIN supplies sp ON p.p_partkey = sp.l_partkey
 WHERE p.p_brand <> 'Brand#1'
   AND p.p_type  <> 'PROMO'
   AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
   AND sp.l_suppkey NOT IN (
-      SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+      SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0
   )
 GROUP BY p.p_brand, p.p_type, p.p_size
-"""
+""")
 
-
-@query("q16_supplier_part_counts", oracle=_Q16_ORACLE)
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: how many distinct suppliers can supply parts of
-    each (brand, type, size) bucket, excluding flagged suppliers.
-
-    Scale notes: the supplies relation dedups the fact table on the
-    pair key (one shuffle, map-side partial distinct); the NOT IN
-    becomes a broadcast left-anti join against the (tiny) flagged-
-    supplier set — never a NOT-IN null-trap subquery; the part filter
-    is applied before its broadcast. countDistinct over the already-
-    deduped pairs is exact.
-    """
-    c = Catalog(spark, sf_dir)
-    supplies = c.lineitem.select("l_partkey", "l_suppkey").distinct()
-    flagged = c.supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    pa = c.part.filter(
-        (F.col("p_brand") != "Brand#1")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    return (
-        supplies.join(
-            F.broadcast(flagged),
-            supplies.l_suppkey == flagged.s_suppkey,
-            "left_anti",
-        )
-        .join(F.broadcast(pa), F.col("l_partkey") == pa.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-# --- Q17: small-quantity-order revenue ---------------------------------------
-
-_Q17_ORACLE = """
+# Q17 (container -> brand; the part table has no container column): the
+# average yearly revenue lost if orders below 20% of the part's average
+# quantity were no longer taken, for one brand. Scale notes: the
+# correlated avg-quantity subquery is one per-part aggregate joined back
+# on partkey, never a second lineitem pass per row. The 0.2*avg cut
+# multiplies through the divisor (qty*5*cnt < sum), so the comparison is
+# exact DECIMAL with no division. The brand filter pushes to the part
+# scan and the part side is broadcast.
+sql_query("q17_small_quantity_revenue", """
 WITH pq AS (
     SELECT l_partkey,
            sum(CAST(l_quantity AS DECIMAL(18,6))) AS sq,
            count(*) AS cnt
-    FROM lineitem GROUP BY l_partkey
+    FROM {lineitem} GROUP BY l_partkey
 )
-SELECT CAST(round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6)))
+SELECT /*+ BROADCAST(p) */ CAST(round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6)))
                        AS DOUBLE) / 7.0, 2) AS DOUBLE) AS avg_yearly,
        CAST(count(*) AS BIGINT) AS n_small_lines
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
+FROM {lineitem} l
+JOIN {part} p ON p.p_partkey = l.l_partkey
 JOIN pq    ON pq.l_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#23'
   AND CAST(l.l_quantity AS DECIMAL(18,6)) * 5 * pq.cnt < pq.sq
-"""
+""")
 
-
-@query("q17_small_quantity_revenue", oracle=_Q17_ORACLE)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (container→brand; the testdata part table has no
-    container column): average yearly revenue lost if small-quantity
-    orders (below 20% of the part's average quantity) were no longer
-    taken for one brand.
-
-    Scale notes: the correlated avg-quantity subquery decorrelates to
-    ONE per-part aggregate (groups-sized), joined back on partkey —
-    never a second lineitem pass per row. The 0.2·avg cut multiplies
-    through the divisor (qty·5·cnt < sum) so the comparison runs in
-    exact DECIMAL with no division — order-independent and
-    engine-exact. The brand filter pushes to the part scan; the part
-    side broadcasts.
-    """
-    c = Catalog(spark, sf_dir)
-    pq = c.lineitem.groupBy("l_partkey").agg(
-        F.sum(FN.dec("l_quantity")).alias("sq"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    brand = c.part.filter(F.col("p_brand") == "Brand#23").select("p_partkey")
-    li = c.lineitem.select("l_partkey", "l_quantity", "l_extendedprice")
-    small = (
-        li.join(F.broadcast(brand), li.l_partkey == brand.p_partkey)
-        .join(pq.withColumnRenamed("l_partkey", "pq_key"),
-              F.col("l_partkey") == F.col("pq_key"))
-        .filter(FN.dec("l_quantity") * 5 * F.col("cnt") < F.col("sq"))
-    )
-    return small.groupBy().agg(
-        F.round(
-            F.sum(FN.dec("l_extendedprice")).cast("double") / F.lit(7.0), 2
-        ).alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_small_lines"),
-    )
-
-
-# --- Q20: potential part promotion --------------------------------------------
-
-_Q20_ORACLE = """
-WITH promo AS (SELECT p_partkey FROM part WHERE p_type = 'PROMO'),
+# Q20 (partsupp availability -> shipped quantity): suppliers in two
+# nations who shipped a significant quantity of promo parts in 1997.
+# Scale notes: the promo part keys are broadcast into the lineitem join
+# that feeds one per-supplier aggregate; supplier and nation are
+# broadcast after it. Quantities are integer-valued, so the > 50 cut and
+# the DECIMAL sums are exact.
+sql_query("q20_promo_part_suppliers", """
+WITH promo AS (SELECT p_partkey FROM {part} WHERE p_type = 'PROMO'),
 shipped AS (
-    SELECT l.l_suppkey, sum(CAST(l.l_quantity AS DECIMAL(18,6))) AS q
-    FROM lineitem l JOIN promo ON l.l_partkey = promo.p_partkey
+    SELECT /*+ BROADCAST(promo) */ l.l_suppkey, sum(CAST(l.l_quantity AS DECIMAL(18,6))) AS q
+    FROM {lineitem} l JOIN promo ON l.l_partkey = promo.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
       AND l.l_shipdate <  TIMESTAMP '1998-01-01'
     GROUP BY l.l_suppkey
 )
-SELECT s.s_suppkey, s.s_name, CAST(shipped.q AS DOUBLE) AS promo_qty
+SELECT /*+ BROADCAST(s, n) */ s.s_suppkey, s.s_name, CAST(shipped.q AS DOUBLE) AS promo_qty
 FROM shipped
-JOIN supplier s ON s.s_suppkey = shipped.l_suppkey
-JOIN nation n   ON n.n_nationkey = s.s_nationkey
+JOIN {supplier} s ON s.s_suppkey = shipped.l_suppkey
+JOIN {nation} n   ON n.n_nationkey = s.s_nationkey
 WHERE n.n_name IN ('NATION_3', 'NATION_7') AND shipped.q > 50
-"""
+""")
 
-
-@query("q20_promo_part_suppliers", oracle=_Q20_ORACLE)
-def q20_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape (partsupp availability → shipped quantity; the
-    testdata has no partsupp table): suppliers in two nations who moved
-    a significant quantity of promo-type parts in 1997.
-
-    Scale notes: the nested IN-subqueries of the original decorrelate
-    to a part-side semi join (broadcast: promo partkeys only) feeding
-    ONE per-supplier aggregate; the nation filter applies to the tiny
-    supplier dim after the fact. Quantities are integer-valued, so the
-    >50 threshold and the sums are engine-exact in DECIMAL.
-    """
-    c = Catalog(spark, sf_dir)
-    promo = c.part.filter(F.col("p_type") == "PROMO").select("p_partkey")
-    li = c.lineitem.filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    shipped = (
-        li.join(F.broadcast(promo), li.l_partkey == promo.p_partkey, "left_semi")
-        .groupBy("l_suppkey")
-        .agg(F.sum(FN.dec("l_quantity")).alias("q"))
-        .filter(F.col("q") > 50)
-    )
-    dims = (
-        c.supplier.select("s_suppkey", "s_name", "s_nationkey")
-        .join(
-            F.broadcast(
-                c.nation.filter(
-                    F.col("n_name").isin("NATION_3", "NATION_7")
-                ).select("n_nationkey")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-            "left_semi",
-        )
-        .select("s_suppkey", "s_name")
-    )
-    return shipped.join(
-        F.broadcast(dims), shipped.l_suppkey == dims.s_suppkey
-    ).select("s_suppkey", "s_name", F.col("q").cast("double").alias("promo_qty"))
-
-
-# --- Q21: suppliers who kept orders waiting -----------------------------------
-
-_Q21_ORACLE = """
+# Q21 (receipt-vs-commit lateness -> shipped more than 90 days after the
+# order; lineitem has no commit or receipt date): for finalized
+# multi-supplier orders, count per supplier the orders where that
+# supplier was the only late one. Scale notes: the correlated EXISTS /
+# NOT EXISTS pair is two order-keyed counts (suppliers per order, late
+# suppliers per order) joined back on orderkey: aggregations and equi
+# joins that all shuffle on the same key, no per-row subquery. Supplier
+# is broadcast.
+sql_query("q21_waiting_suppliers", """
 WITH all_os AS (
-    SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
+    SELECT DISTINCT l_orderkey, l_suppkey FROM {lineitem}
 ),
 late AS (
     SELECT DISTINCT l.l_orderkey, l.l_suppkey
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderstatus = 'F'
       AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
 ),
@@ -1123,76 +480,24 @@ cand AS (
     JOIN late_per_order lp ON lp.l_orderkey = late.l_orderkey
     WHERE sp.n_supp >= 2 AND lp.n_late = 1
 )
-SELECT s.s_suppkey, s.s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM cand JOIN supplier s ON s.s_suppkey = cand.l_suppkey
+SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name, CAST(count(*) AS BIGINT) AS numwait
+FROM cand JOIN {supplier} s ON s.s_suppkey = cand.l_suppkey
 GROUP BY s.s_suppkey, s.s_name
-"""
+""")
 
-
-@query("q21_waiting_suppliers", oracle=_Q21_ORACLE)
-def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (receipt-vs-commit lateness → ship-vs-order +90
-    days; the testdata lineitem has no commit/receipt dates): for
-    finalized multi-supplier orders, count per supplier the orders
-    where that supplier was the ONLY late one.
-
-    Scale notes: the original's correlated EXISTS / NOT EXISTS pair
-    decorrelates to two order-keyed counts (distinct suppliers per
-    order; late suppliers per order) joined back on orderkey — three
-    aggregations and two equi-joins, all shuffling on the same key
-    (co-partitionable; bucketed storage makes them exchange-free), no
-    per-row subquery execution. Counts are integers — engine-exact.
-    """
-    c = Catalog(spark, sf_dir)
-    all_os = c.lineitem.select("l_orderkey", "l_suppkey").distinct()
-    fo = c.orders.filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderdate"
-    )
-    late = (
-        c.lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(fo, F.col("l_orderkey") == fo.o_orderkey)
-        .filter(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    supp_per_order = all_os.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp")
-    )
-    late_per_order = late.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_late")
-    )
-    cand = (
-        late.join(
-            supp_per_order.filter(F.col("n_supp") >= 2).select("l_orderkey"),
-            "l_orderkey",
-            "left_semi",
-        )
-        .join(
-            late_per_order.filter(F.col("n_late") == 1).select("l_orderkey"),
-            "l_orderkey",
-            "left_semi",
-        )
-    )
-    return (
-        cand.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(
-            F.broadcast(c.supplier.select("s_suppkey", "s_name")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .select("s_suppkey", "s_name", "numwait")
-    )
-
-
-# --- Q22: global sales opportunity --------------------------------------------
-
-_Q22_ORACLE = """
+# Q22 (phone country code -> nationkey set): per nation, the customers
+# with above-average balance and no recent orders (none since
+# 2000-01-01; every customer has some order, so "no orders for 7 years"
+# becomes "none since 2000"). Scale notes: the scalar average is one
+# one-row aggregate, broadcast into a nested-loop join onto the
+# candidates; the above-average cut multiplies through the divisor
+# (bal*n > s), so it compares exact DECIMALs. The no-orders predicate is
+# a left join on custkey against the distinct recent buyers, kept where
+# it found none; nation is broadcast.
+sql_query("q22_idle_rich_by_nation", """
 WITH sel AS (
     SELECT c_custkey, c_acctbal, c_nationkey
-    FROM customer WHERE c_nationkey IN (1, 5, 9, 13, 17)
+    FROM {customer} WHERE c_nationkey IN (1, 5, 9, 13, 17)
 ),
 bal AS (
     SELECT sum(CAST(c_acctbal AS DECIMAL(18,6))) AS s,
@@ -1202,129 +507,43 @@ bal AS (
 idle AS (
     SELECT sel.c_acctbal, sel.c_nationkey
     FROM sel
-    LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
+    LEFT JOIN (SELECT DISTINCT o_custkey FROM {orders}
                WHERE o_orderdate >= TIMESTAMP '2000-01-01') o
            ON o.o_custkey = sel.c_custkey
     WHERE o.o_custkey IS NULL
 )
-SELECT n.n_name,
+SELECT /*+ BROADCAST(bal, n) */ n.n_name,
        CAST(count(*) AS BIGINT) AS numcust,
        CAST(round(sum(CAST(idle.c_acctbal AS DECIMAL(18,6))), 2) AS DOUBLE)
            AS totacctbal
 FROM idle, bal
-JOIN nation n ON n.n_nationkey = idle.c_nationkey
+JOIN {nation} n ON n.n_nationkey = idle.c_nationkey
 WHERE CAST(idle.c_acctbal AS DECIMAL(18,6)) * bal.n > bal.s
 GROUP BY n.n_name
-"""
+""")
 
-
-@query("q22_idle_rich_by_nation", oracle=_Q22_ORACLE)
-def q22_idle_rich_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (phone country code → nationkey set): per
-    nation, count customers with above-average balance and no RECENT
-    orders (none since 2000-01-01 — the testdata has no fully
-    order-less customers, mirroring the original's "no orders for 7
-    years" intent).
-
-    Scale notes: the scalar avg-balance subquery is ONE one-row
-    aggregate cross-joined (broadcast-nested-loop of a single row)
-    onto the candidates; the above-average cut multiplies through the
-    divisor (bal·n > s) so it compares exact DECIMALs, no float
-    division at the boundary. The no-orders predicate is a left-anti
-    join on custkey — the one fact-sized shuffle in the plan.
-    """
-    c = Catalog(spark, sf_dir)
-    sel = c.customer.filter(
-        F.col("c_nationkey").isin(1, 5, 9, 13, 17)
-    ).select("c_custkey", "c_acctbal", "c_nationkey")
-    bal = sel.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum(FN.dec("c_acctbal")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    idle = sel.join(
-        c.orders.filter(
-            F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
-        ).select("o_custkey"),
-        sel.c_custkey == F.col("o_custkey"),
-        "left_anti",
-    )
-    rich = idle.crossJoin(F.broadcast(bal)).filter(
-        FN.dec("c_acctbal") * F.col("n") > F.col("s")
-    )
-    return (
-        rich.join(
-            F.broadcast(c.nation.select("n_nationkey", "n_name")),
-            rich.c_nationkey == F.col("n_nationkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            FN.dec_sum("c_acctbal", 2, "totacctbal"),
-        )
-    )
-
-
-# ---- Q15: top supplier (revenue view + max) -----------------------------------
-
-# The last lineitem+supplier-expressible member of the 22-query set
-# (Q11 is partsupp-only and the data model has no partsupp table). The
-# classic query builds a quarter's per-supplier revenue view and keeps
-# the supplier(s) AT the maximum — ties all kept, which is exactly the
-# max-then-semi-join shape (never ORDER BY ... LIMIT 1, which drops
-# legitimate ties non-deterministically). Revenue sums ride DECIMAL;
-# the max is a 1-row broadcast joined back on the exact decimal.
-_Q15_ORACLE = """
+# Q15 top supplier: the supplier(s) with the maximum revenue over 1996-Q1.
+# The quarter's per-supplier revenue view keeps every supplier at the
+# maximum: ties all survive, which ORDER BY ... LIMIT 1 would drop
+# non-deterministically. Scale notes: the revenue view is one
+# map-side-combined grouped sum over the date-pruned fact; the maximum is
+# a scalar subquery over the same exact DECIMAL sums (the view is
+# computed for it and for the join), so the equality involves no
+# doubles; supplier is broadcast.
+sql_query("q15_top_supplier", """
 WITH revenue AS (
     SELECT l_suppkey AS supplier_no,
            sum(CAST(l_extendedprice AS DECIMAL(18,6))
                * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS total_revenue
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate < TIMESTAMP '1996-04-01'
     GROUP BY l_suppkey
 )
-SELECT s.s_suppkey, s.s_name,
+SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name,
        CAST(r.total_revenue AS DOUBLE) AS total_revenue
-FROM supplier s
+FROM {supplier} s
 JOIN revenue r ON s.s_suppkey = r.supplier_no
 WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s.s_suppkey
-"""
-
-
-@query("q15_top_supplier", oracle=_Q15_ORACLE)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: the supplier(s) with the maximum revenue over
-    1996-Q1 (reference has no TPC-H suite; this completes the
-    engine's 21-of-22 coverage — Q11 needs the partsupp table the
-    data model doesn't ship).
-
-    Scale notes: the revenue view is one map-side-combined grouped sum
-    over the date-pruned fact (predicate reaches the parquet scan);
-    the max is a 1-row aggregate crossJoin-broadcast back onto the
-    view (exact DECIMAL equality — safe because both sides are the
-    SAME exact decimal sum, no doubles involved); supplier is a
-    broadcast dimension. Ties at the max all survive, matching the
-    oracle's subquery semantics."""
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    ).select("l_suppkey", "l_extendedprice", "l_discount")
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(FN.revenue_expr()).alias("total_revenue")
-    )
-    mx = revenue.agg(F.max("total_revenue").alias("__mx"))
-    top = revenue.crossJoin(F.broadcast(mx)).filter(
-        F.col("total_revenue") == F.col("__mx")
-    )
-    s = c.supplier.select("s_suppkey", "s_name")
-    return (
-        top.join(F.broadcast(s), top.supplier_no == s.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.col("total_revenue").cast("double").alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
+""")

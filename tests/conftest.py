@@ -43,3 +43,28 @@ def sf_oracle_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_scale_dir() -> str:
     return SF_SCALE
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """A one-item list counting the py4j round trips the test's thread
+    makes from here on; set ``[0]`` back to 0 to start a new count."""
+    import threading
+
+    import py4j.clientserver
+
+    send = py4j.clientserver.ClientServerConnection.send_command
+    calls = [0]
+    test_thread = threading.get_ident()
+
+    def counting_send(self, command):
+        # Only the test's thread: py4j releases freed proxies from a
+        # thread of its own, whenever the garbage collector runs.
+        if threading.get_ident() == test_thread:
+            calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting_send
+    )
+    return calls

@@ -121,40 +121,22 @@ def test_missing_table_raises_and_leaves_no_entry(spark, tmp_path):
     assert path not in C._table_cache(spark).entries
 
 
-def test_query_build_starts_no_spark_job(spark, sf_dir, monkeypatch):
+def test_query_build_starts_no_spark_job(spark, sf_dir, py4j_calls):
     """Build each query once to fill the cache, then build it again in a
     job group of its own: no job may land in any of those groups. The
     second build of a ``bi_mix`` query also stays within
     ``MAX_BUILD_CALLS`` py4j round trips (expressions as SQL text, see
     the ``functions`` module)."""
-    import threading
-
-    import py4j.clientserver
-
     sc = spark.sparkContext
     for q in BUILD_CHECKED:
         QUERIES[q](spark, sf_dir)
-    send = py4j.clientserver.ClientServerConnection.send_command
-    calls = [0]
-    build_thread = threading.get_ident()
-
-    def counting_send(self, command):
-        # Only the building thread: py4j releases freed proxies from a
-        # thread of its own, whenever the garbage collector runs.
-        if threading.get_ident() == build_thread:
-            calls[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(
-        py4j.clientserver.ClientServerConnection, "send_command", counting_send
-    )
     round_trips = {}
     try:
         for q in BUILD_CHECKED:
             sc.setJobGroup(f"build-{q}", q)
-            calls[0] = 0
+            py4j_calls[0] = 0
             QUERIES[q](spark, sf_dir)
-            round_trips[q] = calls[0]
+            round_trips[q] = py4j_calls[0]
         # The status tracker learns of jobs from the listener bus, in
         # order: once a later job shows up, any build job would have.
         sc.setJobGroup("build-control", "control")

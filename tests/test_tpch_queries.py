@@ -7,30 +7,15 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
-from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES, tpchq
+from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
 from tests.oracle_utils import run_check
 
-TPCH = [
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q12_late_priority_lines",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q16_supplier_part_counts",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-]
+#: Every TPC-H query of the registry: Q1-Q22 without Q11.
+TPCH = sorted(n for n in QUERIES if re.match(r"q\d+_", n))
 
 
 def plan_of(df) -> str:
@@ -44,8 +29,6 @@ def node_names(plan: str) -> list[str]:
     """Physical-node names from a formatted plan's detail headers —
     formatted output prints every node twice (tree + ``(n) Name``
     detail), so raw substring counts double-count."""
-    import re
-
     return [m.split()[0] for m in re.findall(r"^\(\d+\) (.+)$", plan, re.M)]
 
 

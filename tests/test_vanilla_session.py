@@ -1,7 +1,8 @@
 """The verification driver builds its OWN SparkSession (Spark 4
 defaults: ANSI on, no nanos handling, machine TZ). The engine must work
-there — Catalog pins the required confs at runtime. Runs in a
-subprocess because the in-process JVM already carries test configs."""
+there — Catalog pins the required confs at runtime, before an SQL-text
+query's ``spark.sql`` parses. Runs in a subprocess because the
+in-process JVM already carries test configs."""
 
 from __future__ import annotations
 
@@ -21,8 +22,10 @@ spark = (SparkSession.builder.master("local[4]")
          .appName("vanilla").config("spark.ui.enabled", "false").getOrCreate())
 assert spark.conf.get("spark.sql.ansi.enabled") == "true"  # genuine vanilla
 import __spark_entry__ as E
-assert E.entry(spark).count() > 0
 qs = E.queries()
+# An SQL-text query first: Catalog pins the confs before spark.sql parses.
+assert qs["q3_shipping_priority"](spark, sf_dir).count() > 0
+assert E.entry(spark).count() > 0
 assert qs["zscore_anomaly"](spark, sf_dir).count() > 0
 assert qs["parse_delimited_roundtrip"](spark, sf_dir).count() > 0
 print("VANILLA_OK")
