@@ -2,10 +2,11 @@
 
 Each is a pure DataFrame function generalizing a reference pattern:
 projections/renames (P7), range & SQL-string predicates (P8/P9), null
-validation (P5), equi/semi/anti/cross joins (J1-J3), multi-aggregate
-group-bys (A1), pivot (A6), null profiling (A7), histogram (A8),
-group percentiles (A9), ordered limit / top-k (O1/W4), exact dedup
-(north-star §2.10).
+validation (P5), equi and bounded cross joins (J1-J3), group
+percentiles (A9), ordered limit / top-k (O1/W4), exact dedup
+(north-star §2.10). The group-bys, pivot, null profile, histogram and
+MERGE that one SQL text expresses live as texts in
+``queries/relational.py``.
 
 Scale notes inline per operator; the common rules: project before
 shuffling, broadcast dimension tables explicitly, aggregate with
@@ -109,55 +110,6 @@ def bounded_cross_join(
     return F.broadcast(small).crossJoin(other)
 
 
-def multi_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """Hash group-by with multiple aggregates (A1)."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def pivot_count(
-    df: DataFrame, row_key: Column | str, pivot_col: str, values: Sequence[str]
-) -> DataFrame:
-    """Pivot/crosstab (A6, notebook cell 16): counts per row-key × value.
-
-    ``values`` is explicit — an open pivot triggers a distinct-value
-    job (an extra pass over the data) and risks column drift between
-    runs; at scale always pin the pivot domain.
-    """
-    return df.groupBy(row_key).pivot(pivot_col, list(values)).count().na.fill(0)
-
-
-def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Per-column null counts in one pass (A7, notebook cell 21)."""
-    cols = list(cols or df.columns)
-    return df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}") for c in cols]
-    )
-
-
-def histogram(
-    df: DataFrame, col: str, lo: float, hi: float, nbins: int
-) -> DataFrame:
-    """Fixed-range histogram (A8, notebook cells 6/13).
-
-    Bucket index is a pure expression — ``floor((x-lo)/width)`` clamped
-    to [0, nbins-1] — so it runs inside whole-stage codegen and the
-    whole histogram is one partial-aggregated groupBy (one shuffle of
-    at most ``nbins`` rows per task). Portable to ANSI SQL verbatim.
-    """
-    width = (hi - lo) / nbins
-    bucket = F.least(
-        F.greatest(F.floor((F.col(col) - F.lit(lo)) / F.lit(width)), F.lit(0)),
-        F.lit(nbins - 1),
-    ).cast("int")
-    return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def group_percentiles(
     df: DataFrame,
     keys: Sequence[str],
@@ -184,51 +136,6 @@ def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """Global top-k (W4): orderBy + limit ⇒ Spark plans TakeOrderedAndProject
     (per-partition heap + single merge, no full sort)."""
     return df.orderBy(*order).limit(k)
-
-
-def topk_per_group(
-    df: DataFrame, keys: Sequence[str], order: Sequence[Column], k: int, rank_name: str = "rn"
-) -> DataFrame:
-    """Top-k per group via row_number over a partitioned window."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
-    )
-
-
-def merge_upsert(
-    base: DataFrame,
-    updates: DataFrame,
-    on: str,
-    set_exprs: Mapping[str, Column],
-    status_col: str = "merge_status",
-) -> DataFrame:
-    """SCD-1 MERGE (upsert): full-outer join base and updates on ``on``
-    and combine columns with caller-supplied expressions over the
-    ``b``/``u`` aliases (e.g. ``F.coalesce(F.col("u.x"), F.col("b.x"))``).
-
-    Rows only in ``updates`` are inserts, only in ``base`` unchanged,
-    in both updated — tagged in ``status_col``. This is the batch
-    MERGE INTO a lakehouse table format would execute; expressed as a
-    single full-outer shuffle join on the key, it scales like any
-    equi-join (co-partition/bucket both sides by the key at 100 TB;
-    with a sorted-bucketed base this becomes a merge join with no
-    shuffle of the base at all).
-    """
-    j = base.alias("b").join(
-        updates.alias("u"), on=F.col(f"b.{on}") == F.col(f"u.{on}"), how="full_outer"
-    )
-    status = (
-        F.when(F.col(f"b.{on}").isNull(), F.lit("inserted"))
-        .when(F.col(f"u.{on}").isNull(), F.lit("unchanged"))
-        .otherwise(F.lit("updated"))
-    )
-    return j.select(
-        F.coalesce(F.col(f"b.{on}"), F.col(f"u.{on}")).alias(on),
-        *[c.alias(name) for name, c in set_exprs.items()],
-        status.alias(status_col),
-    )
 
 
 def quality_profile(
@@ -479,7 +386,7 @@ def unpivot_long(
     """Wide → long reshape (melt): one output row per (id row × value
     column). ``DataFrame.unpivot`` expands in-place per input row — an
     Expand node, no shuffle, no join — so it costs one narrow pass at
-    any scale. The inverse of :func:`pivot_count` (SURVEY §2.4 A6).
+    any scale. The inverse of a pivot (SURVEY §2.4 A6).
     """
     return df.unpivot(list(ids), list(values), var_name, value_name)
 
@@ -492,8 +399,8 @@ def full_outer_reconcile(
 ) -> DataFrame:
     """Full-outer reconciliation of two keyed datasets: every key from
     either side, with a ``presence`` tag (``both``/``left_only``/
-    ``right_only``) — the audit-join complement of MERGE
-    (:func:`merge_upsert`). The join key is emitted once, coalesced.
+    ``right_only``) — the audit-join complement of MERGE (the
+    ``merge_upsert_users`` query). The join key is emitted once, coalesced.
 
     One shuffle on the key (or broadcast if one side is small — AQE
     decides from runtime sizes); presence derives from null-side
@@ -555,7 +462,7 @@ def equi_depth_histogram(
 ) -> DataFrame:
     """Equi-depth (equi-height) histogram: ``nbuckets`` buckets of
     near-equal row count with per-bucket bounds — the quantile-based
-    complement of the fixed-width :func:`histogram` (A8) and what an
+    complement of the fixed-width histogram (A8) and what an
     optimizer's column statistics actually store. Bucket sizes differ
     by at most one row (ntile semantics).
 

@@ -397,7 +397,7 @@ def scd2_history(
     """SCD-2 history build: compress a per-key event stream into
     validity intervals — one row per (key, attribute-state) run, with
     ``effective_from`` / ``effective_to`` / ``version`` / ``is_current``.
-    The type-2 twin of :func:`relational.merge_upsert` (SCD-1): instead
+    The type-2 twin of the ``merge_upsert_users`` SCD-1 MERGE: instead
     of overwriting, every attribute change opens a new interval and
     closes the previous one.
 

@@ -3,6 +3,12 @@
 Each generalizes a reference operator to the TPC-H-ish tables with a
 DuckDB oracle. Aggregate columns are rounded where floating-point
 accumulation order could differ between engines.
+
+Most queries are one SQL text, registered with ``sql_query``: Spark runs
+it through ``spark.sql`` over the ``Catalog`` tables and DuckDB runs it
+as the oracle. A builder stays where it carries a scale technique the
+text cannot express (a bounded cross join, salting, a TakeOrdered in
+place of a global window) or where the text uses DuckDB-only syntax.
 """
 
 from __future__ import annotations
@@ -13,16 +19,19 @@ from pyspark.sql import functions as F
 from climate_anomaly_bigdata_pipeline_spark import functions as FN
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 from climate_anomaly_bigdata_pipeline_spark.operators import relational as R
-from climate_anomaly_bigdata_pipeline_spark.queries import query
+from climate_anomaly_bigdata_pipeline_spark.queries import query, sql_query
 
 # --- A1: hash group-by, multi-aggregate (the reference's yearly KPIs,
 #     jobs/03_silver_to_gold.py:33-43, on lineitem) -------------------------
 
-# l_quantity is integer-valued, so Σx and Σx² are exact in double
-# (< 2^53): mean/stddev derived from them with a fixed op order are
-# identical across engines and parallelism — unlike streaming
-# avg/stddev_samp, which accumulate in shuffle order.
-_GROUPBY_KPIS_ORACLE = """
+# Multi-agg KPI rollup per (returnflag, linestatus): avg/max/min/
+# sample-stddev (jobs/03_silver_to_gold.py:33-38) + revenue, counts, and
+# the scalar station-count analog as count distinct (A2). l_quantity is
+# integer-valued, so Σx and Σx² are exact in double (< 2^53): mean/stddev
+# derived from them with a fixed op order are identical across engines
+# and parallelism — unlike streaming avg/stddev_samp, which accumulate in
+# shuffle order. Money sums in exact decimal.
+sql_query("groupby_kpis", """
 WITH g AS (
     SELECT
         l_returnflag, l_linestatus,
@@ -36,7 +45,7 @@ WITH g AS (
                                        AS revenue,
         count(*)                       AS n_rows,
         count(DISTINCT l_suppkey)      AS n_suppliers
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag, l_linestatus
 )
 SELECT
@@ -48,164 +57,69 @@ SELECT
     END AS std_qty,
     revenue, n_rows, n_suppliers
 FROM g
-"""
-
-
-@query("groupby_kpis", oracle=_GROUPBY_KPIS_ORACLE)
-def groupby_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-agg KPI rollup per (returnflag, linestatus): avg/max/min/
-    sample-stddev (jobs/03_silver_to_gold.py:33-38) + revenue, counts,
-    and the scalar station-count analog as count distinct (A2).
-    Moments from exact sums; money in exact decimal."""
-    li = Catalog(spark, sf_dir).lineitem
-    g = R.multi_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.expr("sum(l_quantity) AS s1"),
-            F.expr("sum(l_quantity * l_quantity) AS s2"),
-            F.expr("CAST(count(l_quantity) AS DOUBLE) AS n"),
-            F.expr("round(max(l_quantity), 4) AS max_qty"),
-            F.expr("round(min(l_quantity), 4) AS min_qty"),
-            F.expr(f"CAST(round(sum({FN.revenue_sql()}), 2) AS DOUBLE) AS revenue"),
-            F.expr("count(1) AS n_rows"),
-            F.expr("count(DISTINCT l_suppkey) AS n_suppliers"),
-        ],
-    )
-    std = FN.sample_std_sql("s1", "s2", "n")
-    return g.selectExpr(
-        "l_returnflag",
-        "l_linestatus",
-        "round(s1 / n, 4) AS avg_qty",
-        "max_qty",
-        "min_qty",
-        f"CASE WHEN n < 2 THEN NULL ELSE round({std}, 4) END AS std_qty",
-        "revenue",
-        "n_rows",
-        "n_suppliers",
-    )
+""")
 
 
 # --- J2: multi-way equi join (notebook cell 18 generalized) ----------------
 
-_JOIN_REVENUE_ORACLE = """
-SELECT
+# lineitem⋈orders⋈customer⋈nation revenue rollup. Join strategy for
+# 100 TB: nation (25 rows) and customer (bounded dim) are broadcast, so
+# the only shuffle of the fact table is the lineitem⋈orders equi join
+# plus the final partial-aggregated group-by.
+sql_query("join_revenue_by_nation_year", """
+SELECT /*+ BROADCAST(c, n) */
     n.n_name                                   AS nation,
     year(o.o_orderdate)                        AS order_year,
     CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
                    * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2) AS DOUBLE) AS revenue,
     count(*)                                   AS n_items
-FROM lineitem l
-JOIN orders o    ON l.l_orderkey = o.o_orderkey
-JOIN customer c  ON o.o_custkey = c.c_custkey
-JOIN nation n    ON c.c_nationkey = n.n_nationkey
+FROM {lineitem} l
+JOIN {orders} o    ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c  ON o.o_custkey = c.c_custkey
+JOIN {nation} n    ON c.c_nationkey = n.n_nationkey
 GROUP BY n.n_name, year(o.o_orderdate)
-"""
-
-
-@query("join_revenue_by_nation_year", oracle=_JOIN_REVENUE_ORACLE)
-def join_revenue_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem⋈orders⋈customer⋈nation revenue rollup.
-
-    Join strategy for 100 TB: nation (25 rows) and customer (bounded
-    dim) are broadcast so the only shuffle of the fact table is the
-    lineitem⋈orders equi join + the final partial-aggregated groupBy.
-    """
-    c = Catalog(spark, sf_dir)
-    li = c.lineitem.selectExpr("l_orderkey", "l_extendedprice", "l_discount")
-    od = c.orders.selectExpr("o_orderkey", "o_custkey", "o_orderdate")
-    cu = c.customer.selectExpr("c_custkey", "c_nationkey")
-    na = c.nation.selectExpr("n_nationkey", "n_name")
-    joined = (
-        li.join(od, F.expr("l_orderkey = o_orderkey"))
-        .join(F.broadcast(cu), F.expr("o_custkey = c_custkey"))
-        .join(F.broadcast(na), F.expr("c_nationkey = n_nationkey"))
-    )
-    return joined.groupBy(
-        F.expr("n_name AS nation"), F.expr("year(o_orderdate) AS order_year")
-    ).agg(
-        F.expr(f"CAST(round(sum({FN.revenue_sql()}), 2) AS DOUBLE) AS revenue"),
-        F.expr("count(1) AS n_items"),
-    )
+""")
 
 
 # --- J3: left outer join (notebook cell 19 generalized) --------------------
 
-_LEFT_JOIN_ORACLE = """
+# Customer left-join open orders; customers with none keep a zero row
+# (count over the null-extended right side).
+sql_query("left_join_order_counts", """
 SELECT
     c.c_custkey,
     c.c_name,
     count(o.o_orderkey)                          AS n_open_orders,
     CAST(round(coalesce(sum(CAST(o.o_totalprice AS DECIMAL(18,6))), 0), 2) AS DOUBLE) AS open_total
-FROM customer c
-LEFT JOIN (SELECT * FROM orders WHERE o_orderstatus = 'O') o
+FROM {customer} c
+LEFT JOIN (SELECT * FROM {orders} WHERE o_orderstatus = 'O') o
        ON c.c_custkey = o.o_custkey
 GROUP BY c.c_custkey, c.c_name
-"""
-
-
-@query("left_join_order_counts", oracle=_LEFT_JOIN_ORACLE)
-def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer left-join open orders; customers with none keep a zero
-    row (count over the null-extended right side)."""
-    c = Catalog(spark, sf_dir)
-    open_orders = c.orders.filter(F.col("o_orderstatus") == "O").select(
-        "o_custkey", "o_orderkey", "o_totalprice"
-    )
-    cu = c.customer.select("c_custkey", "c_name")
-    return (
-        R.equi_join(cu, open_orders, on=cu.c_custkey == open_orders.o_custkey, how="left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_open_orders"),
-            F.round(F.coalesce(F.sum(FN.dec("o_totalprice")), F.lit(0.0)), 2)
-            .cast("double")
-            .alias("open_total"),
-        )
-    )
+""")
 
 
 # --- Semi / anti joins (engine additions per SURVEY §2.3) ------------------
 
-_SEMI_ORACLE = """
+# Left-semi join: customers with at least one >450k order. The EXISTS
+# plans as a left-semi join; the price filter reaches the orders scan.
+sql_query("semi_join_big_spenders", """
 SELECT c_custkey, c_name, c_acctbal
-FROM customer c
+FROM {customer} c
 WHERE EXISTS (
-    SELECT 1 FROM orders o
+    SELECT 1 FROM {orders} o
     WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000
 )
-"""
+""")
 
-
-@query("semi_join_big_spenders", oracle=_SEMI_ORACLE)
-def semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join: customers with at least one >450k order. The
-    right side is projected to the join key only before the semi join."""
-    c = Catalog(spark, sf_dir)
-    big = c.orders.filter(F.col("o_totalprice") > 450000).select("o_custkey")
-    return c.customer.select("c_custkey", "c_name", "c_acctbal").join(
-        big, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
-    )
-
-
-_ANTI_ORACLE = """
+# Left-anti join: customers with no open ('O') orders.
+sql_query("anti_join_inactive_customers", """
 SELECT c_custkey, c_name
-FROM customer c
+FROM {customer} c
 WHERE NOT EXISTS (
-    SELECT 1 FROM orders o
+    SELECT 1 FROM {orders} o
     WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O'
 )
-"""
-
-
-@query("anti_join_inactive_customers", oracle=_ANTI_ORACLE)
-def anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join: customers with no open ('O') orders."""
-    c = Catalog(spark, sf_dir)
-    open_orders = c.orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    return c.customer.select("c_custkey", "c_name").join(
-        open_orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-    )
+""")
 
 
 # --- J1 + O1: bounded, ordered cross join ----------------------------------
@@ -233,9 +147,11 @@ def cross_join_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- A6: pivot / crosstab ---------------------------------------------------
 
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-_PIVOT_ORACLE = """
+# Events-per-day × event-type crosstab (notebook cell 16). The pivot
+# domain is pinned to one filtered count per type, so there is no
+# distinct-value pre-pass at scale, and a day with no event of a type
+# counts 0.
+sql_query("pivot_events_daily", """
 SELECT
     CAST(ts AS DATE) AS event_date,
     count(*) FILTER (WHERE event_type = 'click')    AS click,
@@ -243,24 +159,16 @@ SELECT
     count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
     count(*) FILTER (WHERE event_type = 'signup')   AS signup,
     count(*) FILTER (WHERE event_type = 'view')     AS view
-FROM events
+FROM {events}
 GROUP BY CAST(ts AS DATE)
-"""
-
-
-@query("pivot_events_daily", oracle=_PIVOT_ORACLE)
-def pivot_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events-per-day × event-type crosstab (notebook cell 16). The
-    pivot domain is pinned (no distinct-value pre-pass at scale)."""
-    ev = Catalog(spark, sf_dir).events
-    return R.pivot_count(
-        ev, F.to_date("ts").alias("event_date"), "event_type", _EVENT_TYPES
-    )
+""")
 
 
 # --- A7: null profile --------------------------------------------------------
 
-_NULL_PROFILE_ORACLE = """
+# One-pass per-column null counts (notebook cell 21) over a
+# null-producing left join: one aggregate, not one job per column.
+sql_query("null_profile", """
 SELECT
     CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         AS null_c_custkey,
@@ -268,44 +176,27 @@ SELECT
         AS null_o_orderkey,
     CAST(sum(CASE WHEN o.o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         AS null_o_totalprice
-FROM customer c
-LEFT JOIN (SELECT * FROM orders WHERE o_orderstatus = 'O') o
+FROM {customer} c
+LEFT JOIN (SELECT * FROM {orders} WHERE o_orderstatus = 'O') o
        ON c.c_custkey = o.o_custkey
-"""
-
-
-@query("null_profile", oracle=_NULL_PROFILE_ORACLE)
-def null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass per-column null counts (notebook cell 21) over a
-    null-producing left join."""
-    c = Catalog(spark, sf_dir)
-    open_orders = c.orders.filter(F.col("o_orderstatus") == "O").select(
-        "o_custkey", "o_orderkey", "o_totalprice"
-    )
-    joined = c.customer.select("c_custkey").join(
-        open_orders, F.col("c_custkey") == F.col("o_custkey"), "left"
-    )
-    return R.null_profile(joined, ["c_custkey", "o_orderkey", "o_totalprice"])
+""")
 
 
 # --- A8: histogram -----------------------------------------------------------
 
-_HISTOGRAM_ORACLE = """
+# 25-bin fixed-range histogram over events.value (notebook cells 6/13):
+# the bucket is a pure expression, floor((x - lo) / width) clamped to
+# [0, 24], so it runs inside whole-stage codegen and the histogram is
+# one partial-aggregated group-by (at most 25 rows per task shuffle).
+# NULL values are skipped.
+sql_query("histogram_event_values", """
 SELECT
     CAST(least(greatest(floor((value - 0.0) / 20.0), 0), 24) AS INT) AS bucket,
     count(*) AS n
-FROM events
+FROM {events}
 WHERE value IS NOT NULL
 GROUP BY 1
-"""
-
-
-@query("histogram_event_values", oracle=_HISTOGRAM_ORACLE)
-def histogram_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """25-bin fixed-range histogram over events.value (notebook cells
-    6/13): pure-expression bucketing, one partial-aggregated shuffle."""
-    ev = Catalog(spark, sf_dir).events
-    return R.histogram(ev, "value", lo=0.0, hi=500.0, nbins=25)
+""")
 
 
 # --- A9: per-group exact percentiles ----------------------------------------
@@ -331,26 +222,19 @@ def percentiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- W4 + O-ops: top-k, per-group top-k --------------------------------------
 
-_TOPK_ORACLE = """
+# Global top-10 orders by price (notebook cell 15 top-extremes). ORDER BY
+# + LIMIT plans as TakeOrderedAndProject: per-partition heaps, no full
+# sort, no single-node shuffle of the whole table.
+sql_query("topk_orders", """
 SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders
+FROM {orders}
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 10
-"""
+""")
 
-
-@query("topk_orders", oracle=_TOPK_ORACLE)
-def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-10 orders by price (notebook cell 15 top-extremes).
-    orderBy+limit plans as TakeOrderedAndProject — per-partition heaps,
-    no full sort, no single-node shuffle of the whole table."""
-    od = Catalog(spark, sf_dir).orders.select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    return R.topk(od, [F.col("o_totalprice").desc(), F.col("o_orderkey")], 10)
-
-
-_TOPK_PER_GROUP_ORACLE = """
+# Top-3 customers by balance per nation: a row_number window with a
+# deterministic custkey tiebreak (one shuffle by nation key).
+sql_query("topk_customers_per_nation", """
 SELECT c_nationkey, c_custkey, c_acctbal, rn
 FROM (
     SELECT c_nationkey, c_custkey, c_acctbal,
@@ -358,77 +242,43 @@ FROM (
                PARTITION BY c_nationkey
                ORDER BY c_acctbal DESC, c_custkey
            ) AS rn
-    FROM customer
+    FROM {customer}
 )
 WHERE rn <= 3
-"""
-
-
-@query("topk_customers_per_nation", oracle=_TOPK_PER_GROUP_ORACLE)
-def topk_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers by balance per nation: row_number window with a
-    deterministic tiebreak (one shuffle by nation key)."""
-    cu = Catalog(spark, sf_dir).customer.select(
-        "c_nationkey", "c_custkey", "c_acctbal"
-    )
-    return R.topk_per_group(
-        cu,
-        ["c_nationkey"],
-        [F.col("c_acctbal").desc(), F.col("c_custkey")],
-        k=3,
-    )
+""")
 
 
 # --- Rollup (engine addition per SURVEY §2.4) --------------------------------
 
-_ROLLUP_ORACLE = """
+# Hierarchical totals via ROLLUP: (flag, status), (flag), ().
+sql_query("rollup_lineitem", """
 SELECT
     l_returnflag, l_linestatus,
     round(sum(l_quantity), 2) AS sum_qty,
     count(*)                  AS n_rows
-FROM lineitem
+FROM {lineitem}
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-@query("rollup_lineitem", oracle=_ROLLUP_ORACLE)
-def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals via ROLLUP: (flag, status), (flag), ()."""
-    li = Catalog(spark, sf_dir).lineitem
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
+""")
 
 
 # --- Set ops (engine addition per SURVEY §2.6) -------------------------------
 
-_EXCEPT_ORACLE = """
-SELECT c_custkey FROM customer WHERE c_acctbal > 5000
+# EXCEPT (distinct) set difference: high-balance customers minus those
+# with finished orders. EXCEPT is EXCEPT DISTINCT on both engines, which
+# is correct regardless of duplicate rows on either side.
+sql_query("except_high_balance_no_f", """
+SELECT c_custkey FROM {customer} WHERE c_acctbal > 5000
 EXCEPT
-SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'F'
-"""
-
-
-@query("except_high_balance_no_f", oracle=_EXCEPT_ORACLE)
-def except_high_balance_no_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct) set difference: high-balance customers minus
-    those with finished orders. ``subtract`` is Spark's EXCEPT DISTINCT
-    — correct regardless of duplicate rows on either side (an
-    exceptAll+distinct composition would resurrect left values that
-    also appear on the right whenever the left key is non-unique)."""
-    c = Catalog(spark, sf_dir)
-    left = c.customer.filter(F.col("c_acctbal") > 5000).select("c_custkey")
-    right = (
-        c.orders.filter(F.col("o_orderstatus") == "F")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return left.subtract(right)
+SELECT o_custkey AS c_custkey FROM {orders} WHERE o_orderstatus = 'F'
+""")
 
 
 # --- Exact dedup (north-star §2.10) ------------------------------------------
 
-_DEDUP_ORACLE = """
+# Deterministic keep-first dedup: earliest event per (user, type),
+# event_id tiebreak. The text casts ts to microseconds so both engines
+# order on identical precision.
+sql_query("dedup_first_event", """
 SELECT event_id, user_id, event_type, value
 FROM (
     SELECT event_id, user_id, event_type, value,
@@ -436,21 +286,10 @@ FROM (
                PARTITION BY user_id, event_type
                ORDER BY CAST(ts AS TIMESTAMP), event_id
            ) AS rn
-    FROM events
+    FROM {events}
 )
 WHERE rn = 1
-"""
-
-
-@query("dedup_first_event", oracle=_DEDUP_ORACLE)
-def dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic keep-first dedup: earliest event per (user, type),
-    event_id tiebreak. The oracle casts ts to microseconds so both
-    engines order on identical precision."""
-    ev = Catalog(spark, sf_dir).events
-    return R.dedup_exact(
-        ev, ["user_id", "event_type"], [F.col("ts"), F.col("event_id")]
-    ).select("event_id", "user_id", "event_type", "value")
+""")
 
 
 # --- JSON extraction (north-star text ops; events.props) ---------------------
@@ -478,17 +317,22 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MERGE/upsert (SCD-1) over a keyed profile table ------------------------
 
-_MERGE_CUTOFF = "2024-01-16"
-
-_MERGE_ORACLE = f"""
+# Batch MERGE INTO (SCD-1 upsert): a first-half-of-month user profile
+# table upserted with second-half activity. Counts add, last-seen takes
+# the newer timestamp, and each row is tagged inserted/updated/unchanged.
+# One full-outer shuffle join on the key, the lakehouse MERGE execution
+# shape: co-partition or bucket both sides by the key at 100 TB; with a
+# sorted-bucketed base it becomes a merge join with no shuffle of the
+# base at all.
+sql_query("merge_upsert_users", """
 WITH base AS (
     SELECT user_id, count(*) AS n_events, max(ts) AS last_seen
-    FROM events WHERE ts < TIMESTAMP '{_MERGE_CUTOFF}'
+    FROM {events} WHERE ts < TIMESTAMP '2024-01-16'
     GROUP BY user_id
 ),
 upd AS (
     SELECT user_id, count(*) AS n_events, max(ts) AS last_seen
-    FROM events WHERE ts >= TIMESTAMP '{_MERGE_CUTOFF}'
+    FROM {events} WHERE ts >= TIMESTAMP '2024-01-16'
     GROUP BY user_id
 )
 SELECT COALESCE(b.user_id, u.user_id) AS user_id,
@@ -501,37 +345,7 @@ SELECT COALESCE(b.user_id, u.user_id) AS user_id,
             WHEN u.user_id IS NULL THEN 'unchanged'
             ELSE 'updated' END AS merge_status
 FROM base b FULL OUTER JOIN upd u ON b.user_id = u.user_id
-"""
-
-
-@query("merge_upsert_users", oracle=_MERGE_ORACLE)
-def merge_upsert_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch MERGE INTO (SCD-1 upsert): a first-half-of-month user
-    profile table upserted with second-half activity — counts add,
-    last-seen takes the newer timestamp, and each row is tagged
-    inserted/updated/unchanged. One full-outer shuffle join on the
-    key — the lakehouse MERGE execution shape."""
-    ev = Catalog(spark, sf_dir).events
-    cutoff = F.lit(_MERGE_CUTOFF).cast("timestamp")
-    prof = lambda d: d.groupBy("user_id").agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n_events"), F.max("ts").alias("last_seen")
-    )
-    base = prof(ev.filter(F.col("ts") < cutoff))
-    upd = prof(ev.filter(F.col("ts") >= cutoff))
-    b_ls, u_ls = F.col("b.last_seen"), F.col("u.last_seen")
-    return R.merge_upsert(
-        base,
-        upd,
-        on="user_id",
-        set_exprs={
-            "n_events": F.coalesce(F.col("b.n_events"), F.lit(0))
-            + F.coalesce(F.col("u.n_events"), F.lit(0)),
-            "last_seen": F.when(u_ls.isNull(), b_ls)
-            .when(b_ls.isNull(), u_ls)
-            .when(u_ls > b_ls, u_ls)
-            .otherwise(b_ls),
-        },
-    )
+""")
 
 
 # --- Deequ-style data-quality check suite -----------------------------------
@@ -604,14 +418,20 @@ def data_quality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ntile decile profile (per bounded group) --------------------------------
 
-_NTILE_ORACLE = """
+# Decile profile of order value within each priority class: ntile(10)
+# with a total order (price, key), so bucket boundaries are
+# deterministic. ntile needs a per-partition total sort, bounded here by
+# the 5 priority classes; for an UNBOUNDED key use percentile-boundary
+# bucketing (see group_percentiles) instead, since a global ntile is the
+# canonical single-task trap.
+sql_query("ntile_price_deciles", """
 WITH t AS (
     SELECT o_orderpriority, o_totalprice,
            ntile(10) OVER (
                PARTITION BY o_orderpriority
                ORDER BY o_totalprice, o_orderkey
            ) AS decile
-    FROM orders
+    FROM {orders}
 )
 SELECT o_orderpriority, CAST(decile AS INTEGER) AS decile,
        count(*) AS n,
@@ -620,30 +440,7 @@ SELECT o_orderpriority, CAST(decile AS INTEGER) AS decile,
        CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS total
 FROM t
 GROUP BY o_orderpriority, decile
-"""
-
-
-@query("ntile_price_deciles", oracle=_NTILE_ORACLE)
-def ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile profile of order value within each priority class:
-    ntile(10) with a total order (price, key) so bucket boundaries are
-    deterministic. ntile needs a per-partition total sort — bounded
-    here by the 5 priority classes; for an UNBOUNDED key, use
-    percentile-boundary bucketing (see group_percentiles/histogram)
-    instead — a global ntile is the canonical single-task trap."""
-    from pyspark.sql import Window
-
-    od = Catalog(spark, sf_dir).orders
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    t = od.withColumn("decile", F.ntile(10).over(w))
-    return t.groupBy("o_orderpriority", "decile").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("o_totalprice"), 2).alias("lo"),
-        F.round(F.max("o_totalprice"), 2).alias("hi"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)
-        .cast("double")
-        .alias("total"),
-    )
+""")
 
 
 # --- salted join (skew mitigation), checked against the plain-join oracle ----

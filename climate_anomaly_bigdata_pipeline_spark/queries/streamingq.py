@@ -40,10 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from climate_anomaly_bigdata_pipeline_spark import functions as FN
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
-from climate_anomaly_bigdata_pipeline_spark.queries import query
-from climate_anomaly_bigdata_pipeline_spark.queries.relational import (
-    _DEDUP_ORACLE,
-)
+from climate_anomaly_bigdata_pipeline_spark.queries import ORACLE, query
 from climate_anomaly_bigdata_pipeline_spark.queries.timeseries import (
     _SLIDING_ORACLE,
     _TUMBLING_ORACLE,
@@ -97,7 +94,7 @@ def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
 # store + TTL on retired keys replaces the complete-mode drain.
 
 
-@query("streaming_dedup_first_event", oracle=_DEDUP_ORACLE)
+@query("streaming_dedup_first_event", oracle=ORACLE["dedup_first_event"])
 def streaming_dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first exact dedup as a CONTINUOUS query: earliest event
     per (user, type), event_id tiebreak — same contract as the batch

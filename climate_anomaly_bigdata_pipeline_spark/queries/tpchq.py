@@ -112,14 +112,17 @@ GROUP BY l.l_returnflag
 """)
 
 # Q13 customer distribution: a histogram of customers by how many orders
-# they placed, zero included through the left join. Scale notes: the
+# they placed, zero included through the left join. Scale notes: orders
+# collapse to one row per custkey before the customer join (custkey is
+# customer's key), so the join is customer-sized at any orders volume; the
 # second aggregate runs over a tiny distinct-count domain.
 sql_query("q13_customer_distribution", """
 WITH per_cust AS (
-    SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+    SELECT c.c_custkey, coalesce(o.n_orders, 0) AS c_count
     FROM {customer} c
-    LEFT JOIN {orders} o ON c.c_custkey = o.o_custkey
-    GROUP BY c.c_custkey
+    LEFT JOIN (SELECT o_custkey, count(o_orderkey) AS n_orders
+               FROM {orders} GROUP BY o_custkey) o
+           ON c.c_custkey = o.o_custkey
 )
 SELECT c_count, count(*) AS custdist
 FROM per_cust
@@ -263,48 +266,52 @@ GROUP BY o.o_orderpriority
 
 # Q10 returned items: the top-20 customers by revenue lost to returned
 # items in one half-year window. Scale notes: the returnflag and date
-# filters push to both fact scans; customer and nation are broadcast;
-# the top-20 is a TakeOrdered with a custkey tiebreak, not a global sort.
+# filters push to both fact scans; revenue is summed per custkey before
+# the customer join (custkey is customer's key), so customer and nation
+# are broadcast onto a customer-sized aggregate; the top-20 is a
+# TakeOrdered with a custkey tiebreak, not a global sort.
 sql_query("q10_returned_items", """
+WITH lost AS (
+    SELECT o.o_custkey,
+           sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
+               * (1 - CAST(l.l_discount AS DECIMAL(18,6)))) AS lost_revenue
+    FROM {orders} o
+    JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+    WHERE l.l_returnflag = 'R'
+      AND o.o_orderdate >= TIMESTAMP '1997-01-01'
+      AND o.o_orderdate <  TIMESTAMP '1997-07-01'
+    GROUP BY o.o_custkey
+)
 SELECT /*+ BROADCAST(c, n) */ c.c_custkey, c.c_name,
-       CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))
-                      * (1 - CAST(l.l_discount AS DECIMAL(18,6)))), 2)
-            AS DOUBLE) AS revenue,
+       CAST(round(lost.lost_revenue, 2) AS DOUBLE) AS revenue,
        c.c_acctbal, n.n_name
-FROM {customer} c
-JOIN {orders} o   ON c.c_custkey = o.o_custkey
-JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+FROM lost
+JOIN {customer} c ON c.c_custkey = lost.o_custkey
 JOIN {nation} n   ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o.o_orderdate <  TIMESTAMP '1997-07-01'
-GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
 ORDER BY revenue DESC, c.c_custkey ASC
 LIMIT 20
 """)
 
 # Q18 large-volume customers: orders whose total quantity exceeds 300,
-# with their customers, the IN-aggregate-subquery shape. Scale notes: the
-# HAVING survivors are few and broadcast into a semi join; Catalyst
-# applies it to both orders and lineitem before their join (planning the
-# HAVING aggregate once for each), so only the big orders reach the
-# re-aggregation. Customer is broadcast too. The top-100 is a
-# TakeOrdered with an orderkey tiebreak. Quantities are integral, so
-# BIGINT sums are exact.
+# with their customers. Scale notes: lineitem is scanned and aggregated
+# once; the per-order sums that pass the HAVING are few and are broadcast
+# into the first join of orders, carrying the displayed total with them
+# (orderkey is orders' key), so only big orders reach the customer join
+# and no line is summed a second time. Customer is broadcast too. The
+# top-100 is a TakeOrdered with an orderkey tiebreak. Quantities are
+# integral, so BIGINT sums are exact.
 sql_query("q18_large_volume_customers", """
 WITH big AS (
-    SELECT l_orderkey
+    SELECT l_orderkey, sum(CAST(l_quantity AS BIGINT)) AS total_qty
     FROM {lineitem}
     GROUP BY l_orderkey
     HAVING sum(CAST(l_quantity AS BIGINT)) > 300
 )
-SELECT /*+ BROADCAST(c) */ c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
-       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-FROM {customer} c
-JOIN {orders} o   ON c.c_custkey = o.o_custkey
-JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
-WHERE o.o_orderkey IN (SELECT /*+ BROADCAST(big) */ l_orderkey FROM big)
-GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
+SELECT /*+ BROADCAST(c, big) */ c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
+       CAST(big.total_qty AS BIGINT) AS total_qty
+FROM {orders} o
+JOIN big          ON o.o_orderkey = big.l_orderkey
+JOIN {customer} c ON c.c_custkey = o.o_custkey
 ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
 LIMIT 100
 """)

@@ -82,10 +82,6 @@ def test_cross_join_broadcasts_small_side(spark, sf_dir):
         "winnow_fingerprints",
         "tfidf_top_terms",
         "rolling_7d_customer_revenue",
-        "merge_upsert_users",
-        "data_quality_orders",
-        "ntile_price_deciles",
-        "salted_join_revenue",
         "levenshtein_neardup",
         "stratified_sample_events",
     ],

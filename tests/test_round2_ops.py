@@ -1,5 +1,5 @@
 """Unit tests for the round-2 operator additions: batch KNN joins,
-winnowing fingerprints, TF-IDF, MERGE upsert, data-quality checks,
+winnowing fingerprints, TF-IDF, data-quality checks,
 stratified sampling, blocked edit-distance pairs, and the trailing
 RANGE-frame window. Oracle parity for each registry query is checked
 separately (test_plans.py / driver); these pin operator semantics on
@@ -108,29 +108,6 @@ def test_tfidf_rare_term_outranks_common(spark):
     # 'rareword' (df=1) beats 'common' (df=3) despite tf 1 vs 3
     assert doc1[0].term == "rareword"
     assert all(r.rank <= 2 for r in out)
-
-
-# ---- MERGE upsert -----------------------------------------------------------
-
-
-def test_merge_upsert_statuses(spark):
-    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    upd = spark.createDataFrame([(2, 5), (3, 7)], "k long, v long")
-    out = {
-        r.k: r
-        for r in R.merge_upsert(
-            base,
-            upd,
-            on="k",
-            set_exprs={
-                "v": F.coalesce(F.col("b.v"), F.lit(0))
-                + F.coalesce(F.col("u.v"), F.lit(0))
-            },
-        ).collect()
-    }
-    assert out[1].merge_status == "unchanged" and out[1].v == 10
-    assert out[2].merge_status == "updated" and out[2].v == 25
-    assert out[3].merge_status == "inserted" and out[3].v == 7
 
 
 # ---- data-quality profile ---------------------------------------------------

@@ -42,6 +42,21 @@ ROUND_TRIP_CEILINGS = {
     "q20_promo_part_suppliers": 49,
     "q21_waiting_suppliers": 39,
     "q22_idle_rich_by_nation": 39,
+    "anti_join_inactive_customers": 29,
+    "dedup_first_event": 19,
+    "except_high_balance_no_f": 29,
+    "groupby_kpis": 19,
+    "histogram_event_values": 19,
+    "join_revenue_by_nation_year": 49,
+    "left_join_order_counts": 29,
+    "merge_upsert_users": 19,
+    "ntile_price_deciles": 19,
+    "null_profile": 29,
+    "pivot_events_daily": 19,
+    "rollup_lineitem": 19,
+    "semi_join_big_spenders": 29,
+    "topk_customers_per_nation": 19,
+    "topk_orders": 19,
 }
 
 

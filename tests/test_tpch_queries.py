@@ -1,12 +1,14 @@
 """TPC-H query shapes (queries/tpchq.py): oracle parity at the smoke
 scale plus plan gates asserting the scale-critical physical shapes —
-broadcast dims, TakeOrdered top-k, pre-aggregation before the Q13
-left join, and pushed-down scan filters for Q3/Q19."""
+broadcast dims, TakeOrdered top-k, pre-aggregation below the Q10 and
+Q13 customer joins, one lineitem scan for Q18, and pushed-down scan
+filters for Q3/Q19."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import itertools
 import re
 
 import pytest
@@ -32,6 +34,33 @@ def node_names(plan: str) -> list[str]:
     return [m.split()[0] for m in re.findall(r"^\(\d+\) (.+)$", plan, re.M)]
 
 
+def plan_nodes(plan: str) -> list[tuple[int, str, str]]:
+    """``(depth, name, details)`` for each operator of a formatted
+    plan's main tree, in tree order: a node's subtree is the run of
+    deeper nodes that follows it."""
+    details = dict(re.findall(r"^\((\d+)\) .*?\n(.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S))
+    tree = plan.split("== Physical Plan ==\n", 1)[1].split("\n\n", 1)[0]
+    nodes = []
+    for line in tree.splitlines():
+        prefix, name, node_id = re.match(r"([ :+|-]*)(\w+).*\((\d+)\)$", line).groups()
+        nodes.append((len(prefix), name, details[node_id]))
+    return nodes
+
+
+def subtree(nodes: list[tuple[int, str, str]], i: int) -> list[tuple[int, str, str]]:
+    return list(itertools.takewhile(lambda n: n[0] > nodes[i][0], nodes[i + 1:]))
+
+
+def aggregated_below_join_of(plan: str, table: str, key: str) -> bool:
+    """Whether a HashAggregate grouped on ``key`` sits below the join
+    nearest above ``table``'s scan."""
+    nodes = plan_nodes(plan)
+    join = [i for i, (_, name, _) in enumerate(nodes) if name.endswith("Join")
+            and any(n == "Scan" and f"/{table}.parquet" in d for _, n, d in subtree(nodes, i))][-1]
+    return any(name == "HashAggregate" and re.search(rf"^Keys \[1\]: \[{key}#", d, re.M)
+               for _, name, d in subtree(nodes, join))
+
+
 @pytest.mark.parametrize("name", TPCH)
 def test_oracle_parity(spark, sf_dir, name):
     ok, msg = run_check(spark, name, sf_dir)
@@ -52,16 +81,7 @@ def test_q13_preaggregates_before_join(spark, sf_dir):
     joining customer — the shape that keeps the join dim-sized at
     100 TB."""
     plan = plan_of(QUERIES["q13_customer_distribution"](spark, sf_dir))
-    join_pos = plan.find("SortMergeJoin")
-    if join_pos < 0:
-        join_pos = plan.find("BroadcastHashJoin")
-    agg_pos = plan.find("HashAggregate")
-    assert agg_pos >= 0 and join_pos >= 0
-    # formatted plans list operators leaves-first: the pre-join
-    # aggregate of orders appears before the join operator's id in the
-    # numbered tree. Weaker but robust: count aggregates — there must
-    # be at least the per-custkey pair + the final distribution pair.
-    assert plan.count("HashAggregate") >= 4
+    assert aggregated_below_join_of(plan, "customer", "o_custkey"), plan
 
 
 def test_q19_pushes_brand_and_quantity_to_scans(spark, sf_dir):
@@ -105,6 +125,7 @@ def test_q10_aggregates_before_customer_join_and_takeordered(spark, sf_dir):
     """Revenue is grouped to custkey cardinality BEFORE the customer
     dim join (broadcast), and the top-20 is a TakeOrdered."""
     plan = plan_of(QUERIES["q10_returned_items"](spark, sf_dir))
+    assert aggregated_below_join_of(plan, "customer", "o_custkey"), plan
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     assert "PushedFilters: [IsNotNull(l_returnflag), EqualTo(l_returnflag,R)" in plan
@@ -124,6 +145,15 @@ def test_q18_big_orders_broadcast_takeordered(spark, sf_dir):
     plan = plan_of(QUERIES["q18_large_volume_customers"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert plan.count("BroadcastHashJoin") >= 2
+
+
+def test_q18_scans_and_aggregates_lineitem_once(spark, sf_dir):
+    """The HAVING aggregate carries the displayed total, so lineitem is
+    read and grouped once, not once for the IN filter and again for the
+    sum."""
+    plan = plan_of(QUERIES["q18_large_volume_customers"](spark, sf_dir))
+    scanned = re.findall(r"^Location: \w+ \[.*/(\w+)\.parquet\]$", plan, re.M)
+    assert scanned.count("lineitem") == 1, plan
 
 
 def test_q2_argmin_is_single_window_no_extra_shuffle(spark, sf_dir):
