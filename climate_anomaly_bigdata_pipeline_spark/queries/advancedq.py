@@ -1,15 +1,22 @@
 """Round-4 advanced analytics: TPC-H-style correlated-subquery join
-shapes (Q15/Q17/Q21 analogues on the synthetic star schema), triangle
-counting on the co-purchase graph, cumulative distinct users, per-user
-modal behavior, and a Welch two-sample t-test.
+shapes (Q11/Q15/Q17/Q20/Q21/Q22 analogues on the synthetic star
+schema), graph queries on the part co-purchase graph, cumulative
+distinct users, per-user modal behavior, and a Welch two-sample t-test.
 
 The reference's analytics stop at single-join rollups
 (``jobs/03_silver_to_gold.py:26-156``); these queries add the
 decorrelated-subquery and graph shapes a warehouse user reaches for
-next, each expressed so Catalyst picks the scalable physical plan
-(broadcast the per-group aggregate, semi/anti joins instead of
-row-at-a-time EXISTS, degree-ordered orientation instead of an
-unbounded wedge join).
+next.
+
+The non-graph queries are one SQL text each, registered with
+``sql_query``: Spark runs it through ``spark.sql`` over the ``Catalog``
+tables and DuckDB runs it as the oracle; a join the plan should
+broadcast carries a ``/*+ BROADCAST(alias) */`` hint. A builder stays
+where it carries a technique its text cannot express — degree-ordered
+triangle orientation, the capped collect-set pair explode, degree
+attachment before the wedge join, the iterative operators — or where
+its text uses DuckDB-only syntax (a recursive ``UNION``, ``len``,
+``list_reduce``).
 """
 
 from __future__ import annotations
@@ -17,10 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from climate_anomaly_bigdata_pipeline_spark import functions as FN
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 from climate_anomaly_bigdata_pipeline_spark.operators import graph as G
-from climate_anomaly_bigdata_pipeline_spark.queries import query
+from climate_anomaly_bigdata_pipeline_spark.queries import query, sql_query
 
 # ---- triangle counting on the part co-purchase graph ------------------------
 
@@ -175,175 +181,98 @@ def item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- TPC-H Q17 analogue: small-quantity part revenue by brand ---------------
 
-# The 0.2·avg(qty) threshold is decorrelated into a per-part aggregate
-# join; the inequality is cross-multiplied (5·qty·cnt < Σqty) so every
-# operand is an integer-valued double — exact, no float-division edge.
-_SMALL_QTY_ORACLE = """
+# TPC-H Q17 shape: revenue from lineitems whose quantity is below 20% of
+# the part's average, rolled up by brand. The correlated scalar subquery
+# becomes one per-part aggregate joined back on partkey (both sides
+# shuffle on l_partkey once; the part dim is broadcast), the canonical
+# decorrelation at any scale. The 0.2·avg(qty) threshold is
+# cross-multiplied (5·qty·cnt < Σqty) so every operand is an
+# integer-valued double — exact, no float-division edge.
+sql_query("small_qty_brand_revenue", """
 WITH per_part AS (
     SELECT l_partkey, sum(l_quantity) AS sum_qty, count(*) AS cnt_qty
-    FROM lineitem GROUP BY l_partkey
+    FROM {lineitem} GROUP BY l_partkey
 )
-SELECT p.p_brand,
+SELECT /*+ BROADCAST(p) */ p.p_brand,
        CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0
            AS avg_yearly,
        CAST(count(*) AS BIGINT) AS n_rows
-FROM lineitem l
+FROM {lineitem} l
 JOIN per_part pp ON pp.l_partkey = l.l_partkey
-JOIN part p ON p.p_partkey = l.l_partkey
+JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE l.l_quantity * pp.cnt_qty * 5 < pp.sum_qty
 GROUP BY p.p_brand
-"""
-
-
-@query("small_qty_brand_revenue", oracle=_SMALL_QTY_ORACLE)
-def small_qty_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: revenue from lineitems whose quantity is below
-    20% of the part's average, rolled up by brand. The correlated
-    scalar subquery becomes one per-part aggregate joined back on
-    partkey (both sides shuffle on l_partkey once; the part dim is
-    broadcast), the canonical decorrelation at any scale."""
-    cat = Catalog(spark, sf_dir)
-    li = cat.lineitem
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum("l_quantity").alias("sum_qty"),
-        F.count(F.lit(1)).alias("cnt_qty"),
-    )
-    return (
-        li.join(per_part, "l_partkey")
-        .where(F.col("l_quantity") * F.col("cnt_qty") * 5 < F.col("sum_qty"))
-        .join(
-            F.broadcast(cat.part.select("p_partkey", "p_brand")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy("p_brand")
-        .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).cast(
-                    "double"
-                )
-                / 7.0
-            ).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
+""")
 
 
 # ---- TPC-H Q21 analogue: sole-supplier finished orders ----------------------
 
-_SOLE_SUPPLIER_ORACLE = """
+# TPC-H Q21 shape: per supplier, finished orders where it was the ONLY
+# supplier. The NOT EXISTS correlated subquery plans as a left-anti
+# self-join of candidates against other-supplier lineitems of the same
+# order — both sides keyed on l_orderkey, one shuffle, no per-row
+# subquery execution. The finished orders and the supplier dim are
+# broadcast.
+sql_query("sole_supplier_orders", """
 WITH cand AS (
-    SELECT DISTINCT l.l_orderkey, l.l_suppkey
-    FROM lineitem l
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
+    SELECT /*+ BROADCAST(o) */ DISTINCT l.l_orderkey, l.l_suppkey
+    FROM {lineitem} l
+    JOIN {orders} o ON o.o_orderkey = l.l_orderkey
     WHERE o.o_orderstatus = 'F'
 ),
 sole AS (
     SELECT c.l_orderkey, c.l_suppkey
     FROM cand c
     WHERE NOT EXISTS (
-        SELECT 1 FROM lineitem l2
+        SELECT 1 FROM {lineitem} l2
         WHERE l2.l_orderkey = c.l_orderkey
           AND l2.l_suppkey <> c.l_suppkey
     )
 )
-SELECT s.s_suppkey, s.s_name, CAST(count(*) AS BIGINT) AS n_sole_orders
+SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name, CAST(count(*) AS BIGINT) AS n_sole_orders
 FROM sole
-JOIN supplier s ON s.s_suppkey = sole.l_suppkey
+JOIN {supplier} s ON s.s_suppkey = sole.l_suppkey
 GROUP BY s.s_suppkey, s.s_name
-"""
-
-
-@query("sole_supplier_orders", oracle=_SOLE_SUPPLIER_ORACLE)
-def sole_supplier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape: per supplier, finished orders where it was the
-    ONLY supplier. The NOT EXISTS correlated subquery becomes a
-    left-anti self-join of candidates against other-supplier
-    lineitems of the same order — both sides keyed on l_orderkey, one
-    shuffle, no per-row subquery execution."""
-    cat = Catalog(spark, sf_dir)
-    li = cat.lineitem
-    fin = F.broadcast(
-        cat.orders.where(F.col("o_orderstatus") == "F").select("o_orderkey")
-    )
-    cand = (
-        li.join(fin, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    others = li.select(
-        F.col("l_orderkey").alias("o_key"), F.col("l_suppkey").alias("o_supp")
-    )
-    sole = cand.join(
-        others,
-        (F.col("l_orderkey") == F.col("o_key"))
-        & (F.col("l_suppkey") != F.col("o_supp")),
-        "left_anti",
-    )
-    return (
-        sole.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_sole_orders"))
-        .join(
-            F.broadcast(cat.supplier.select("s_suppkey", "s_name")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .select("s_suppkey", "s_name", "n_sole_orders")
-    )
+""")
 
 
 # ---- TPC-H Q15 analogue: top suppliers by quarterly revenue -----------------
 
-_TOP_SUPPLIER_ORACLE = """
+# TPC-H Q15 shape: supplier(s) achieving the maximum revenue over 1996Q1
+# shipments. The max-of-aggregate is an empty-partition window max over
+# the (tiny) per-supplier revenue table — one extra pass over
+# |suppliers| rows, not a second lineitem scan as a scalar subquery over
+# the same CTE would plan. Revenue in exact decimal so the argmax is
+# order-independent; the supplier dim is broadcast.
+sql_query("top_revenue_suppliers", """
 WITH rev AS (
     SELECT l_suppkey,
            sum(CAST(l_extendedprice AS DECIMAL(18,6))
                * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS r
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate < TIMESTAMP '1996-04-01'
     GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name,
-       CAST(round(rev.r, 2) AS DOUBLE) AS total_revenue
-FROM rev
-JOIN supplier s ON s.s_suppkey = rev.l_suppkey
-WHERE rev.r = (SELECT max(r) FROM rev)
-"""
-
-
-@query("top_revenue_suppliers", oracle=_TOP_SUPPLIER_ORACLE)
-def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) achieving the maximum revenue over
-    1996Q1 shipments. The scalar max-of-aggregate subquery is an
-    empty-partition window max over the (tiny) per-supplier revenue
-    table — one extra pass over |suppliers| rows, not over lineitem.
-    Revenue in exact decimal so the argmax is order-independent."""
-    cat = Catalog(spark, sf_dir)
-    rev = (
-        cat.lineitem.where(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(F.sum(FN.revenue_expr().cast("decimal(18,6)")).alias("r"))
-    )
-    top = rev.withColumn("mr", F.max("r").over(Window.partitionBy())).where(
-        F.col("r") == F.col("mr")
-    )
-    return top.join(
-        F.broadcast(cat.supplier.select("s_suppkey", "s_name")),
-        F.col("l_suppkey") == F.col("s_suppkey"),
-    ).select(
-        "s_suppkey",
-        "s_name",
-        F.round(F.col("r"), 2).cast("double").alias("total_revenue"),
-    )
+),
+ranked AS (SELECT l_suppkey, r, max(r) OVER () AS max_r FROM rev)
+SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name,
+       CAST(round(ranked.r, 2) AS DOUBLE) AS total_revenue
+FROM ranked
+JOIN {supplier} s ON s.s_suppkey = ranked.l_suppkey
+WHERE ranked.r = ranked.max_r
+""")
 
 
 # ---- cumulative distinct users per day --------------------------------------
 
-_CUM_USERS_ORACLE = """
+# Running count of distinct users ever seen, by day. The naive form
+# (COUNT(DISTINCT) over an expanding window) rescans history per day;
+# reducing each user to a first-seen event makes it one aggregation + a
+# cumsum over |days| rows — the only shape whose cost doesn't grow with
+# history length at 100 TB.
+sql_query("cumulative_distinct_users", """
 WITH first_seen AS (
-    SELECT user_id, min(ts) AS first_ts FROM events GROUP BY user_id
+    SELECT user_id, min(ts) AS first_ts FROM {events} GROUP BY user_id
 ),
 per_day AS (
     SELECT date_trunc('day', first_ts) AS day,
@@ -355,69 +284,44 @@ SELECT day, new_users,
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
            AS cum_users
 FROM per_day
-"""
-
-
-@query("cumulative_distinct_users", oracle=_CUM_USERS_ORACLE)
-def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running count of distinct users ever seen, by day. The naive
-    form (COUNT(DISTINCT) over an expanding window) rescans history
-    per day; reducing each user to a first-seen event makes it one
-    aggregation + a cumsum over |days| rows — the only shape whose
-    cost doesn't grow with history length at 100 TB."""
-    ev = Catalog(spark, sf_dir).events
-    first = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
-    per_day = first.groupBy(
-        F.date_trunc("day", "first_ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("new_users"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return per_day.select(
-        "day", "new_users", F.sum("new_users").over(w).alias("cum_users")
-    )
+""")
 
 
 # ---- per-user modal event type ----------------------------------------------
 
-_MODAL_ORACLE = """
+# Deterministic grouped mode: each user's most frequent event type, ties
+# broken lexicographically (a plain MODE() aggregate is
+# tie-nondeterministic across engines). Count-then-rank keeps it two
+# keyed shuffles with map-side partial aggregation.
+sql_query("modal_event_type_per_user", """
 WITH counts AS (
     SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_events,
            row_number() OVER (PARTITION BY user_id
                               ORDER BY count(*) DESC, event_type) AS rn
-    FROM events GROUP BY user_id, event_type
+    FROM {events} GROUP BY user_id, event_type
 )
 SELECT user_id, event_type AS modal_type, n_events
 FROM counts WHERE rn = 1
-"""
-
-
-@query("modal_event_type_per_user", oracle=_MODAL_ORACLE)
-def modal_event_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic grouped mode: each user's most frequent event
-    type, ties broken lexicographically (a plain MODE() aggregate is
-    tie-nondeterministic across engines). Count-then-rank keeps it
-    two keyed shuffles with map-side partial aggregation."""
-    ev = Catalog(spark, sf_dir).events
-    counts = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("n_events").desc(), F.col("event_type")
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("modal_type"), "n_events")
-    )
+""")
 
 
 # ---- changepoint score: rolling mean shift per event type -------------------
 
-_MEAN_SHIFT_ORACLE = """
+# Changepoint scoring: for each (event_type, day), the difference between
+# the trailing-3-day and leading-3-day means of the daily value series —
+# a windowed mean-shift statistic (the non-recursive cousin of CUSUM, so
+# it stays inside ANSI window frames and whole-stage codegen instead of a
+# stateful UDF). Pre-aggregating to days first bounds every window at 7
+# rows per series regardless of raw event volume. The daily mean divides
+# an exact DECIMAL sum (the rolling_daily_mean recipe): a plain double
+# avg is accumulation-order-dependent and can drift an ulp between
+# engines and parallelism levels.
+sql_query("mean_shift_scores", """
 WITH daily AS (
     SELECT event_type, date_trunc('day', ts) AS day,
            CAST(sum(CAST(value AS DECIMAL(19,4))) AS DOUBLE) / count(value)
                AS m
-    FROM events GROUP BY 1, 2
+    FROM {events} GROUP BY 1, 2
 ),
 sh AS (
     SELECT event_type, day,
@@ -433,49 +337,7 @@ sh AS (
 )
 SELECT event_type, day, m_after - m_before AS shift
 FROM sh WHERE n_after = 3 AND n_before = 3
-"""
-
-
-@query("mean_shift_scores", oracle=_MEAN_SHIFT_ORACLE)
-def mean_shift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Changepoint scoring: for each (event_type, day), the difference
-    between the trailing-3-day and leading-3-day means of the daily
-    value series — a windowed mean-shift statistic (the
-    non-recursive cousin of CUSUM, so it stays inside ANSI window
-    frames and whole-stage codegen instead of a stateful UDF).
-    Pre-aggregating to days first bounds every window at 7 rows per
-    series regardless of raw event volume."""
-    ev = Catalog(spark, sf_dir).events
-    # Daily mean from an exact DECIMAL sum (the rolling_daily_mean
-    # recipe): a plain double avg is accumulation-order-dependent and
-    # can drift an ulp between engines/parallelism levels.
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(19,4)")).cast("double")
-            / F.count("value")
-        ).alias("m")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    after = w.rowsBetween(1, 3)
-    before = w.rowsBetween(-3, -1)
-    return (
-        daily.select(
-            "event_type",
-            "day",
-            F.avg("m").over(after).alias("m_after"),
-            F.count(F.lit(1)).over(after).alias("n_after"),
-            F.avg("m").over(before).alias("m_before"),
-            F.count(F.lit(1)).over(before).alias("n_before"),
-        )
-        .where((F.col("n_after") == 3) & (F.col("n_before") == 3))
-        .select(
-            "event_type",
-            "day",
-            (F.col("m_after") - F.col("m_before")).alias("shift"),
-        )
-    )
+""")
 
 
 # ---- per-dimension embedding standardization --------------------------------
@@ -529,209 +391,104 @@ def embedding_dim_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Welch two-sample t-test: purchase vs click values ----------------------
 
-_TTEST_ORACLE = """
+# Welch's unequal-variance t-test between purchase and click event
+# values, with the Welch–Satterthwaite degrees of freedom — the A/B-test
+# primitive. One global aggregation produces both arms through FILTER
+# clauses, so the events table is read once, and the scalar algebra runs
+# on its one row, never a driver-side collect. The row is dropped unless
+# each arm has at least two valued rows (no result for a missing arm,
+# and n > 1 guards the n - 1 variance divisions). Moments come from exact
+# DECIMAL sums (order-independent — the repo's engine-parity recipe)
+# with the scalar algebra in double; plain avg/var_samp merge partials
+# in shuffle-fetch order and can drift an ulp between engines.
+sql_query("welch_ttest_purchase_click", """
 WITH g0 AS (
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(value AS DECIMAL(19,4))) AS DOUBLE) AS s1,
-           CAST(sum(CAST(value * value AS DECIMAL(25,4))) AS DOUBLE) AS s2
-    FROM events
+    SELECT CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS np,
+           CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS nc,
+           CAST(sum(CAST(value AS DECIMAL(19,4)))
+                FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS s1p,
+           CAST(sum(CAST(value AS DECIMAL(19,4)))
+                FILTER (WHERE event_type = 'click') AS DOUBLE) AS s1c,
+           CAST(sum(CAST(value * value AS DECIMAL(25,4)))
+                FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS s2p,
+           CAST(sum(CAST(value * value AS DECIMAL(25,4)))
+                FILTER (WHERE event_type = 'click') AS DOUBLE) AS s2c
+    FROM {events}
     WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL
-    GROUP BY event_type
 ),
 g AS (
-    SELECT event_type, n, s1 / n AS m,
-           (s2 - s1 * s1 / n) / (n - 1) AS v
+    SELECT np, nc, s1p / np AS mp, s1c / nc AS mc,
+           (s2p - s1p * s1p / np) / (np - 1) AS vp,
+           (s2c - s1c * s1c / nc) / (nc - 1) AS vc
     FROM g0
-),
-p AS (SELECT n, m, v FROM g WHERE event_type = 'purchase' AND n > 1),
-c AS (SELECT n, m, v FROM g WHERE event_type = 'click' AND n > 1)
-SELECT p.n AS n_purchase, c.n AS n_click,
-       p.m - c.m AS mean_diff,
-       (p.m - c.m) / sqrt(p.v / p.n + c.v / c.n) AS t_stat,
-       power(p.v / p.n + c.v / c.n, 2)
-           / (power(p.v / p.n, 2) / (p.n - 1)
-              + power(c.v / c.n, 2) / (c.n - 1)) AS dof
-FROM p, c
-"""
+    WHERE np > 1 AND nc > 1
+)
+SELECT np AS n_purchase, nc AS n_click,
+       mp - mc AS mean_diff,
+       (mp - mc) / sqrt(vp / np + vc / nc) AS t_stat,
+       power(vp / np + vc / nc, 2)
+           / (power(vp / np, 2) / (np - 1)
+              + power(vc / nc, 2) / (nc - 1)) AS dof
+FROM g
+""")
 
-
-@query("welch_ttest_purchase_click", oracle=_TTEST_ORACLE)
-def welch_ttest_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test between purchase and click
-    event values, with the Welch–Satterthwaite degrees of freedom —
-    the A/B-test primitive. One grouped aggregation produces both
-    arms; the scalar algebra runs on the 2-row result via a pivot
-    (conditional aggregation), never a driver-side collect."""
-    ev = Catalog(spark, sf_dir).events
-    # Moments from exact DECIMAL sums (order-independent — the repo's
-    # engine-parity recipe) with the scalar algebra in double; plain
-    # avg/var_samp merge partials in shuffle-fetch order and can drift
-    # an ulp between engines.
-    val = F.col("value")
-    is_p = F.col("event_type") == "purchase"
-    is_c = F.col("event_type") == "click"
-
-    def _sum(cond, col, scale):
-        return F.sum(F.when(cond, col).cast(scale)).cast("double")
-
-    g = (
-        ev.where(
-            F.col("event_type").isin("purchase", "click")
-            & F.col("value").isNotNull()
-        )
-        .groupBy()
-        .agg(
-            F.count(F.when(is_p, 1)).alias("np"),
-            F.count(F.when(is_c, 1)).alias("nc"),
-            _sum(is_p, val, "decimal(19,4)").alias("s1p"),
-            _sum(is_c, val, "decimal(19,4)").alias("s1c"),
-            _sum(is_p, val * val, "decimal(25,4)").alias("s2p"),
-            _sum(is_c, val * val, "decimal(25,4)").alias("s2c"),
-        )
-        .select(
-            "np",
-            "nc",
-            (F.col("s1p") / F.col("np")).alias("mp"),
-            (F.col("s1c") / F.col("nc")).alias("mc"),
-            (
-                (F.col("s2p") - F.col("s1p") * F.col("s1p") / F.col("np"))
-                / (F.col("np") - 1)
-            ).alias("vp"),
-            (
-                (F.col("s2c") - F.col("s1c") * F.col("s1c") / F.col("nc"))
-                / (F.col("nc") - 1)
-            ).alias("vc"),
-        )
-    )
-    # Match the oracle's empty-arm shape: its p CROSS JOIN c emits
-    # zero rows when either arm is missing, whereas a global groupBy()
-    # always emits one row — filter it out (n > 1 also guards the
-    # n - 1 variance divisions).
-    g = g.where((F.col("np") > 1) & (F.col("nc") > 1))
-    se2 = F.col("vp") / F.col("np") + F.col("vc") / F.col("nc")
-    return g.select(
-        F.col("np").alias("n_purchase"),
-        F.col("nc").alias("n_click"),
-        (F.col("mp") - F.col("mc")).alias("mean_diff"),
-        ((F.col("mp") - F.col("mc")) / F.sqrt(se2)).alias("t_stat"),
-        (
-            F.pow(se2, F.lit(2))
-            / (
-                F.pow(F.col("vp") / F.col("np"), F.lit(2)) / (F.col("np") - 1)
-                + F.pow(F.col("vc") / F.col("nc"), F.lit(2)) / (F.col("nc") - 1)
-            )
-        ).alias("dof"),
-    )
 
 # ---- k-anonymity audit over quasi-identifiers -------------------------------
 
-_KANON_ORACLE = """
+# k-anonymity audit of the (nation, market-segment) quasi-identifier:
+# equivalence-class sizes with a below-k=5 flag — the privacy gate a
+# training corpus runs before release. One keyed aggregation with
+# map-side partials; the nation dim is broadcast.
+sql_query("k_anonymity_audit", """
 WITH g AS (
-    SELECT n.n_name, c.c_mktsegment, CAST(count(*) AS BIGINT) AS group_size
-    FROM customer c
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    SELECT /*+ BROADCAST(n) */ n.n_name, c.c_mktsegment, CAST(count(*) AS BIGINT) AS group_size
+    FROM {customer} c
+    JOIN {nation} n ON n.n_nationkey = c.c_nationkey
     GROUP BY n.n_name, c.c_mktsegment
 )
 SELECT n_name, c_mktsegment, group_size, group_size < 5 AS below_k
 FROM g
-"""
-
-
-@query("k_anonymity_audit", oracle=_KANON_ORACLE)
-def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit of the (nation, market-segment)
-    quasi-identifier: equivalence-class sizes with a below-k=5 flag —
-    the privacy gate a training corpus runs before release. One
-    keyed aggregation with map-side partials; the nation dim is
-    broadcast."""
-    cat = Catalog(spark, sf_dir)
-    return (
-        cat.customer.join(
-            F.broadcast(cat.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("group_size"))
-        .select(
-            "n_name",
-            "c_mktsegment",
-            "group_size",
-            (F.col("group_size") < 5).alias("below_k"),
-        )
-    )
+""")
 
 
 # ---- referential-integrity audit across the star schema ---------------------
 
-_RI_ORACLE = """
+# Orphaned-foreign-key counts for every edge of the star schema — the
+# cross-table extension of the single-table quality profile (SURVEY
+# §2.2 P5/P6). Each NOT EXISTS plans as one left-anti join keyed on the
+# FK; the parent sides are broadcast so the fact table is scanned, never
+# shuffled.
+sql_query("referential_integrity_audit", """
 SELECT 'lineitem->orders' AS fk, CAST(count(*) AS BIGINT) AS n_orphans
-FROM lineitem l WHERE NOT EXISTS
-    (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
+FROM {lineitem} l WHERE NOT EXISTS
+    (SELECT /*+ BROADCAST(o) */ 1 FROM {orders} o WHERE o.o_orderkey = l.l_orderkey)
 UNION ALL
 SELECT 'orders->customer', CAST(count(*) AS BIGINT)
-FROM orders o WHERE NOT EXISTS
-    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+FROM {orders} o WHERE NOT EXISTS
+    (SELECT /*+ BROADCAST(c) */ 1 FROM {customer} c WHERE c.c_custkey = o.o_custkey)
 UNION ALL
 SELECT 'lineitem->part', CAST(count(*) AS BIGINT)
-FROM lineitem l WHERE NOT EXISTS
-    (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey)
+FROM {lineitem} l WHERE NOT EXISTS
+    (SELECT /*+ BROADCAST(p) */ 1 FROM {part} p WHERE p.p_partkey = l.l_partkey)
 UNION ALL
 SELECT 'lineitem->supplier', CAST(count(*) AS BIGINT)
-FROM lineitem l WHERE NOT EXISTS
-    (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey)
-"""
-
-
-@query("referential_integrity_audit", oracle=_RI_ORACLE)
-def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orphaned-foreign-key counts for every edge of the star schema —
-    the cross-table extension of the single-table quality profile
-    (SURVEY §2.2 P5/P6). Each relationship is one left-anti join
-    keyed on the FK; dimension sides are broadcast so the fact table
-    is scanned, never shuffled."""
-    cat = Catalog(spark, sf_dir)
-    li = cat.lineitem
-
-    def orphans(child: DataFrame, key_col: str, parent: DataFrame,
-                pkey: str, label: str) -> DataFrame:
-        return (
-            child.select(F.col(key_col))
-            .join(
-                F.broadcast(parent.select(F.col(pkey).alias(key_col))),
-                key_col,
-                "left_anti",
-            )
-            .agg(F.count(F.lit(1)).alias("n_orphans"))
-            .select(F.lit(label).alias("fk"), "n_orphans")
-        )
-
-    return (
-        orphans(li, "l_orderkey", cat.orders, "o_orderkey", "lineitem->orders")
-        .union(
-            orphans(
-                cat.orders, "o_custkey", cat.customer, "c_custkey",
-                "orders->customer",
-            )
-        )
-        .union(orphans(li, "l_partkey", cat.part, "p_partkey", "lineitem->part"))
-        .union(
-            orphans(
-                li, "l_suppkey", cat.supplier, "s_suppkey",
-                "lineitem->supplier",
-            )
-        )
-    )
+FROM {lineitem} l WHERE NOT EXISTS
+    (SELECT /*+ BROADCAST(s) */ 1 FROM {supplier} s WHERE s.s_suppkey = l.l_suppkey)
+""")
 
 
 # ---- top event-type trigrams per volume -------------------------------------
 
-_TRIGRAM_ORACLE = """
+# Behavioral 3-step path mining: counts of consecutive event-type
+# trigrams per user stream (the 3-gram extension of the transition
+# matrix). lead() over the per-user time order keeps it one shuffle; the
+# event_id tiebreak makes duplicate timestamps deterministic.
+sql_query("top_event_trigrams", """
 WITH seq AS (
     SELECT user_id, event_type,
            lead(event_type, 1) OVER w AS t2,
            lead(event_type, 2) OVER w AS t3
-    FROM events
+    FROM {events}
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ),
 tri AS (
@@ -740,93 +497,51 @@ tri AS (
 )
 SELECT trigram, CAST(count(*) AS BIGINT) AS n
 FROM tri GROUP BY trigram
-"""
-
-
-@query("top_event_trigrams", oracle=_TRIGRAM_ORACLE)
-def top_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral 3-step path mining: counts of consecutive
-    event-type trigrams per user stream (the 3-gram extension of the
-    transition matrix). lead() over the per-user time order keeps it
-    one shuffle; the event_id tiebreak makes duplicate timestamps
-    deterministic."""
-    ev = Catalog(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type",
-        F.lead("event_type", 1).over(w).alias("t2"),
-        F.lead("event_type", 2).over(w).alias("t3"),
-    )
-    return (
-        seq.where(F.col("t2").isNotNull() & F.col("t3").isNotNull())
-        .select(
-            F.concat_ws(">", "event_type", "t2", "t3").alias("trigram")
-        )
-        .groupBy("trigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+""")
 
 
 # ---- TPC-H Q11 analogue: significant parts by inventory value ---------------
 
-_SIGNIFICANT_PARTS_ORACLE = """
+# TPC-H Q11 shape: parts whose shipped value exceeds 1.5× the MEAN
+# per-part value — the having-scalar-subquery pattern with a
+# corpus-relative cut (a fixed 0.0005-of-total fraction went empty at
+# sf0.1, because the part count grows with the corpus while each part's
+# share shrinks). The global total and part count are window aggregates
+# over the already-aggregated per-part table (groups-sized), never a
+# second lineitem pass. The cut compares scale-2 decimals converted to
+# double (exact: cents < 2^53) with one division and one ×1.5 —
+# correctly-rounded IEEE identically in both engines; a DECIMAL product
+# would overflow precision 38 and round differently per engine, and the
+# raw scale-6 total needs more than 53 mantissa bits.
+sql_query("significant_parts_by_value", """
 WITH pv AS (
     SELECT l_partkey,
            sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS val
-    FROM lineitem GROUP BY l_partkey
+    FROM {lineitem} GROUP BY l_partkey
 ),
-tot AS (SELECT sum(val) AS t, count(*) AS np FROM pv)
+tot AS (
+    SELECT l_partkey, val, sum(val) OVER () AS t, count(*) OVER () AS np
+    FROM pv
+)
 SELECT l_partkey AS p_partkey,
        CAST(round(val, 2) AS DOUBLE) AS part_value
-FROM pv, tot
+FROM tot
 WHERE CAST(round(val, 2) AS DOUBLE)
       > 1.5 * (CAST(round(t, 2) AS DOUBLE) / CAST(np AS DOUBLE))
-"""
-
-
-@query("significant_parts_by_value", oracle=_SIGNIFICANT_PARTS_ORACLE)
-def significant_parts_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: parts whose shipped value exceeds 1.5× the MEAN
-    per-part value — the having-scalar-subquery pattern with a
-    corpus-relative cut (round 11; a fixed 0.0005-of-total fraction
-    went empty at sf0.1 because the part count grows with the corpus
-    while each part's share shrinks, so the sweep row certified only
-    agreement-on-empty). The global total and part count are a window
-    aggregate over the already-aggregated per-part table
-    (groups-sized), never a second lineitem pass; the threshold
-    compares exact-cents doubles with one division and one ×1.5 —
-    correctly-rounded IEEE identically in both engines."""
-    li = Catalog(spark, sf_dir).lineitem
-    pv = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).alias("val")
-    )
-    tot = Window.partitionBy()
-    # The cut compares scale-2 decimals converted to double (exact:
-    # cents < 2^53) — a DECIMAL product would overflow precision 38 and
-    # round differently per engine, and the raw scale-6 total needs
-    # >53 mantissa bits (the revenue_share lesson).
-    v2 = F.round("val", 2).cast("double")
-    return (
-        pv.withColumn("t", F.sum("val").over(tot))
-        .withColumn("np", F.count(F.lit(1)).over(tot))
-        .where(
-            v2
-            > F.lit(1.5)
-            * (F.round("t", 2).cast("double") / F.col("np").cast("double"))
-        )
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            v2.alias("part_value"),
-        )
-    )
+""")
 
 
 # ---- TPC-H Q20 analogue: top supplier share per part ------------------------
 
-_TOP_SUPPLIER_SHARE_ORACLE = """
+# TPC-H Q20 flavor: for every part, the supplier shipping the most of it
+# and that supplier's share of the part's volume — the grouped argmax
+# pattern (rank by quantity with a deterministic suppkey tiebreak; never
+# a groupBy + self-join back). Quantities are integer-valued doubles, so
+# the share is exact division of exact operands.
+sql_query("top_supplier_share_per_part", """
 WITH ps AS (
     SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
-    FROM lineitem GROUP BY l_partkey, l_suppkey
+    FROM {lineitem} GROUP BY l_partkey, l_suppkey
 ),
 ranked AS (
     SELECT l_partkey, l_suppkey, qty,
@@ -839,87 +554,33 @@ SELECT l_partkey AS p_partkey, l_suppkey AS s_suppkey,
        qty AS supplier_qty, total_qty,
        qty / total_qty AS qty_share
 FROM ranked WHERE rn = 1
-"""
-
-
-@query("top_supplier_share_per_part", oracle=_TOP_SUPPLIER_SHARE_ORACLE)
-def top_supplier_share_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 flavor: for every part, the supplier shipping the most
-    of it and that supplier's share of the part's volume — the grouped
-    argmax pattern (rank by quantity with a deterministic suppkey
-    tiebreak; never a groupBy + self-join back). Quantities are
-    integer-valued doubles, so the share is exact division of exact
-    operands."""
-    li = Catalog(spark, sf_dir).lineitem
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum("l_quantity").alias("qty")
-    )
-    w = Window.partitionBy("l_partkey")
-    wr = w.orderBy(F.col("qty").desc(), "l_suppkey")
-    return (
-        ps.withColumn("total_qty", F.sum("qty").over(w))
-        .withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.col("l_suppkey").alias("s_suppkey"),
-            F.col("qty").alias("supplier_qty"),
-            "total_qty",
-            (F.col("qty") / F.col("total_qty")).alias("qty_share"),
-        )
-    )
+""")
 
 
 # ---- TPC-H Q22 analogue: idle above-average-balance customers ---------------
 
-_IDLE_RICH_ORACLE = """
+# TPC-H Q22 shape: customers with above-average positive balance and no
+# FINISHED orders — scalar-subquery threshold + anti join (every
+# customer in this corpus has some order, so the finished filter keeps
+# the anti join non-vacuous). The scalar average attaches by broadcast
+# nested-loop join of a 1-row aggregate; the NOT EXISTS is one left-anti
+# join on custkey. 2-decimal balances are exact doubles, but their sum
+# accumulates in shuffle order, so it is routed through DECIMAL like
+# every money sum.
+sql_query("idle_rich_customers", """
 WITH avg_bal AS (
     SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE)
            / count(c_acctbal) AS ab
-    FROM customer WHERE c_acctbal > 0
+    FROM {customer} WHERE c_acctbal > 0
 )
-SELECT c.c_custkey, c.c_acctbal
-FROM customer c, avg_bal
+SELECT /*+ BROADCAST(avg_bal) */ c.c_custkey, c.c_acctbal
+FROM {customer} c, avg_bal
 WHERE c.c_acctbal > avg_bal.ab
   AND NOT EXISTS (
-      SELECT 1 FROM orders o
+      SELECT 1 FROM {orders} o
       WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
   )
-"""
-
-
-@query("idle_rich_customers", oracle=_IDLE_RICH_ORACLE)
-def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: customers with above-average positive balance
-    and no FINISHED orders — scalar-subquery threshold + anti join
-    (every customer in this corpus has some order, so the finished
-    filter keeps the anti join non-vacuous). The scalar
-    average attaches by broadcast cross join of a 1-row aggregate;
-    the NOT EXISTS is one left-anti join on custkey. c_acctbal is
-    2-decimal data, so the double average is a sum of exact doubles —
-    deterministic without the decimal detour."""
-    cat = Catalog(spark, sf_dir)
-    cust = cat.customer
-    # 2-decimal balances ARE exact doubles, but their SUM accumulates
-    # in shuffle order — route through DECIMAL like every money sum.
-    avg_bal = cust.where(F.col("c_acctbal") > 0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(18,6)")).cast("double")
-            / F.count("c_acctbal")
-        ).alias("ab")
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .where(F.col("c_acctbal") > F.col("ab"))
-        .join(
-            cat.orders.where(F.col("o_orderstatus") == "F").select(
-                F.col("o_custkey").alias("c_custkey")
-            ),
-            "c_custkey",
-            "left_anti",
-        )
-        .select("c_custkey", "c_acctbal")
-    )
+""")
 
 
 # ---- k-core decomposition of the co-purchase graph --------------------------
@@ -1465,8 +1126,6 @@ def edge_support_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative count of edges with at least that support — read the
     k-truss size for any k directly off the n_edges_at_least column
     at support = k-2."""
-    from pyspark.sql import Window as W
-
     li = Catalog(spark, sf_dir).lineitem
     edges = G.cooccurrence_edges(
         li, "l_orderkey", "l_partkey", min_support=2
@@ -1475,8 +1134,8 @@ def edge_support_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = sup.groupBy("support").agg(
         F.count(F.lit(1)).alias("n_edges")
     )
-    cum = W.orderBy(F.col("support").desc()).rowsBetween(
-        W.unboundedPreceding, W.currentRow
+    cum = Window.orderBy(F.col("support").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     return hist.select(
         "support",

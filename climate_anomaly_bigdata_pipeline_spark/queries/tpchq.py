@@ -534,9 +534,10 @@ GROUP BY n.n_name
 # maximum: ties all survive, which ORDER BY ... LIMIT 1 would drop
 # non-deterministically. Scale notes: the revenue view is one
 # map-side-combined grouped sum over the date-pruned fact; the maximum is
-# a scalar subquery over the same exact DECIMAL sums (the view is
-# computed for it and for the join), so the equality involves no
-# doubles; supplier is broadcast.
+# a window max over that supplier-sized view, so lineitem is scanned
+# once (a scalar subquery over the same CTE would plan the view twice).
+# The equality compares exact DECIMAL sums, no doubles; supplier is
+# broadcast.
 sql_query("q15_top_supplier", """
 WITH revenue AS (
     SELECT l_suppkey AS supplier_no,
@@ -546,11 +547,16 @@ WITH revenue AS (
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate < TIMESTAMP '1996-04-01'
     GROUP BY l_suppkey
+),
+ranked AS (
+    SELECT supplier_no, total_revenue,
+           max(total_revenue) OVER () AS max_revenue
+    FROM revenue
 )
 SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name,
        CAST(r.total_revenue AS DOUBLE) AS total_revenue
 FROM {supplier} s
-JOIN revenue r ON s.s_suppkey = r.supplier_no
-WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
+JOIN ranked r ON s.s_suppkey = r.supplier_no
+WHERE r.total_revenue = r.max_revenue
 ORDER BY s.s_suppkey
 """)

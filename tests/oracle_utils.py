@@ -4,7 +4,8 @@ Runs a registered Spark query and its oracle SQL on the same parquet
 tables, then compares row count, column names, and (order-insensitively)
 values. Floats compare with a tight relative tolerance after sorting,
 plus a strict equality count so drift is visible before it becomes a
-driver-side hash mismatch.
+driver-side hash mismatch. ``run_on`` does the same on small
+hand-written tables.
 """
 
 from __future__ import annotations
@@ -98,3 +99,36 @@ def run_check(spark, name: str, sf_dir: str, rtol=1e-9):
     con = duckdb_conn(sf_dir)
     odf = con.execute(ORACLE[name]).fetchdf()
     return compare(sdf, odf, rtol=rtol)
+
+
+#: Column types of the tables the hand-written cases of ``run_on`` write.
+_SCHEMAS = {
+    "events": "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type VARCHAR, "
+              "value DOUBLE, props VARCHAR",
+    "customer": "c_custkey BIGINT, c_name VARCHAR, c_nationkey INTEGER, "
+                "c_acctbal DOUBLE, c_mktsegment VARCHAR",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+                "l_linenumber INTEGER, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+                "l_discount DOUBLE, l_tax DOUBLE, l_returnflag VARCHAR, "
+                "l_linestatus VARCHAR, l_shipdate TIMESTAMP",
+    "supplier": "s_suppkey BIGINT, s_name VARCHAR, s_nationkey INTEGER, s_acctbal DOUBLE",
+}
+
+
+def run_on(spark, tmp_path, name: str, **tables: list[tuple]):
+    """Write each ``table=rows`` as ``<table>.parquet`` under tmp_path,
+    run query ``name`` on Spark and its oracle on DuckDB over those
+    files, assert the two agree and return Spark's rows."""
+    from climate_anomaly_bigdata_pipeline_spark.queries import ORACLE, QUERIES
+
+    con = duckdb.connect()
+    for table, rows in tables.items():
+        con.execute(f"CREATE TABLE {table} ({_SCHEMAS[table]})")
+        if rows:
+            marks = ", ".join("?" * len(rows[0]))
+            con.executemany(f"INSERT INTO {table} VALUES ({marks})", rows)
+        con.execute(f"COPY {table} TO '{tmp_path / table}.parquet' (FORMAT PARQUET)")
+    got = QUERIES[name](spark, str(tmp_path)).toPandas()
+    ok, msg = compare(got, duckdb_conn(str(tmp_path)).execute(ORACLE[name]).fetchdf())
+    assert ok, msg
+    return got

@@ -11,44 +11,17 @@ import datetime as dt
 import inspect
 import re
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from climate_anomaly_bigdata_pipeline_spark.operators import relational as R
-from climate_anomaly_bigdata_pipeline_spark.queries import ORACLE, QUERIES
 from climate_anomaly_bigdata_pipeline_spark.queries import relational as relational_queries
-from tests.oracle_utils import compare, duckdb_conn, run_check
+from tests.oracle_utils import run_check, run_on
 
 #: Every query the relational module registers.
 RELATIONAL_QUERIES = re.findall(
     r'^(?:@query|sql_query)\("(\w+)"', inspect.getsource(relational_queries), re.M
 )
-
-#: Column types of the tables the hand-written cases write.
-_SCHEMAS = {
-    "events": "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type VARCHAR, "
-              "value DOUBLE, props VARCHAR",
-    "customer": "c_custkey BIGINT, c_name VARCHAR, c_nationkey INTEGER, "
-                "c_acctbal DOUBLE, c_mktsegment VARCHAR",
-}
-
-
-def run_on(spark, tmp_path, name: str, **tables: list[tuple]):
-    """Write each ``table=rows`` as ``<table>.parquet`` under tmp_path,
-    run query ``name`` on Spark and its oracle on DuckDB over those
-    files, assert the two agree and return Spark's rows."""
-    con = duckdb.connect()
-    for table, rows in tables.items():
-        con.execute(f"CREATE TABLE {table} ({_SCHEMAS[table]})")
-        if rows:
-            marks = ", ".join("?" * len(rows[0]))
-            con.executemany(f"INSERT INTO {table} VALUES ({marks})", rows)
-        con.execute(f"COPY {table} TO '{tmp_path / table}.parquet' (FORMAT PARQUET)")
-    got = QUERIES[name](spark, str(tmp_path)).toPandas()
-    ok, msg = compare(got, duckdb_conn(str(tmp_path)).execute(ORACLE[name]).fetchdf())
-    assert ok, msg
-    return got
 
 
 def _event(event_id, day, user_id, event_type, value=1.0):

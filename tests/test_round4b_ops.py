@@ -1,6 +1,6 @@
 """Unit tests for the round-4 advanced-analytics batch: degree-ordered
 triangle counting (vs a driver-side brute-force oracle on random
-graphs) and the decorrelated TPC-H-style join shapes' invariants."""
+graphs) and the triangle plan's shape."""
 
 from __future__ import annotations
 
@@ -144,25 +144,7 @@ def test_cooccurrence_edges_plan_has_no_join(spark):
         assert marker not in text, text
 
 
-# ---- plan gates for the decorrelated join shapes ----------------------------
-
-
-def test_sole_supplier_uses_anti_join(spark, sf_dir):
-    from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
-    from tests.test_plans import plan_of
-
-    text = plan_of(QUERIES["sole_supplier_orders"](spark, sf_dir))
-    assert "LeftAnti" in text, text
-    assert "CartesianProduct" not in text, text
-
-
-def test_small_qty_broadcasts_part_dim(spark, sf_dir):
-    from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
-    from tests.test_plans import plan_of
-
-    text = plan_of(QUERIES["small_qty_brand_revenue"](spark, sf_dir))
-    assert "BroadcastHashJoin" in text, text
-    assert "CartesianProduct" not in text, text
+# ---- plan gate for the triangle counter -------------------------------------
 
 
 def test_triangle_plan_has_no_cartesian_product(spark, sf_dir):

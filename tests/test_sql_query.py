@@ -1,13 +1,24 @@
 """Queries registered with ``sql_query``: one SQL text that both engines
 run. Building one leaves no view behind in the session, an unknown table
-placeholder fails at registration, and a warm build stays within its
-committed py4j round-trip ceiling."""
+placeholder fails at registration, a warm build stays within its
+committed py4j round-trip ceiling, no plan has a hard ``plan_audit``
+finding, and the texts that aggregate their fact table and reuse the
+result read that table once."""
 
 from __future__ import annotations
+
+import os
+import re
+import sys
 
 import pytest
 
 from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES, sql_query
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+
+from plan_audit import audit, plan_of  # noqa: E402
 
 #: The queries registered by ``sql_query``: one SQL text each.
 SQL_QUERIES = sorted(
@@ -57,6 +68,31 @@ ROUND_TRIP_CEILINGS = {
     "semi_join_big_spenders": 29,
     "topk_customers_per_nation": 19,
     "topk_orders": 19,
+    "cumulative_distinct_users": 19,
+    "idle_rich_customers": 29,
+    "k_anonymity_audit": 29,
+    "mean_shift_scores": 19,
+    "modal_event_type_per_user": 19,
+    "referential_integrity_audit": 59,
+    "significant_parts_by_value": 19,
+    "small_qty_brand_revenue": 29,
+    "sole_supplier_orders": 39,
+    "top_event_trigrams": 19,
+    "top_revenue_suppliers": 29,
+    "top_supplier_share_per_part": 19,
+    "welch_ttest_purchase_click": 19,
+}
+
+#: Texts whose fact table feeds both an aggregate and a use of that
+#: aggregate's result (a maximum, a total, a second arm, a HAVING
+#: filter), mapped to that table: Spark plans a CTE used twice as two
+#: copies, so each text is written to scan the table once.
+READ_ONCE = {
+    "q15_top_supplier": "lineitem",
+    "q18_large_volume_customers": "lineitem",
+    "significant_parts_by_value": "lineitem",
+    "top_revenue_suppliers": "lineitem",
+    "welch_ttest_purchase_click": "events",
 }
 
 
@@ -85,3 +121,19 @@ def test_warm_build_round_trips_within_ceiling(spark, sf_dir, py4j_calls):
     over = {n: (c, ROUND_TRIP_CEILINGS[n]) for n, c in round_trips.items()
             if c > ROUND_TRIP_CEILINGS[n]}
     assert over == {}, f"round trips (measured, ceiling): {over}"
+
+
+def test_no_plan_has_a_hard_audit_finding(spark, sf_dir):
+    hard = {}
+    for name in SQL_QUERIES:
+        findings = audit(name, plan_of(QUERIES[name](spark, sf_dir)))
+        if any(f.startswith("HARD") for f in findings):
+            hard[name] = findings
+    assert hard == {}
+
+
+@pytest.mark.parametrize("name", sorted(READ_ONCE))
+def test_reads_its_fact_table_once(spark, sf_dir, name):
+    plan = plan_of(QUERIES[name](spark, sf_dir))
+    scanned = re.findall(r"^Location: \w+ \[.*/(\w+)\.parquet\]$", plan, re.M)
+    assert scanned.count(READ_ONCE[name]) == 1, plan
